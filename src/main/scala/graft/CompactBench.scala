@@ -6,7 +6,7 @@ import graft.sources.TranscriptGen
 /** A/B evidence for compactState's overlapped bucketed writes (round-6
   * optimization #4): bootstrap IncrementState from a TranscriptGen
   * corpus (untimed), then time compactState twice on the SAME state —
-  * serial writes (GRAFT_COMPACT_PARALLEL=0 semantics) vs the 3-thread
+  * serial writes (writeBucketedAll at threads = 1) vs the 3-thread
   * overlap — in alternating order across reps so JIT/page-cache bias
   * cancels. Prints one JSON line.
   *

@@ -27,6 +27,7 @@ object Demo {
 
     val dict = TranscriptGen.dict(cfg)
     val vecs = TranscriptGen.entityVectors(cfg, graft.operators.MentionDetect.CtxDim)
+    val dictionary = Pipeline.Dictionary.Broadcast(dict, vecs)
     // fitted-model artifact (SURVEY D6, full lifecycle): when no artifact
     // exists, FIT the scoring weights + threshold on the corpus's labeled
     // candidate pairs (train), persist the artifact, then load it — a
@@ -34,8 +35,7 @@ object Demo {
     // code change
     val artifact = "target/demo/score_config.json"
     if (!new java.io.File(artifact).exists()) {
-      val sc = spark.sparkContext
-      val ms = Pipeline.allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs)).cache()
+      val ms = dictionary.mentions(turns).cache()
       val fit = graft.operators.Calibrate.fitAndSave(
         graft.operators.Calibrate.labeledFeaturesFromGold(ms, gold), artifact)
       println(f"calibrated: ${fit.pairs} labeled pairs (${fit.positives} pos) " +
@@ -45,8 +45,8 @@ object Demo {
     }
     val score = graft.operators.Scoring.loadConfig(artifact)
     println(s"score config from artifact: threshold=${score.threshold}")
-    val clusters = Pipeline.run(turns, dict, vecs,
-      Pipeline.Config(score = score)).cache()
+    val pcfg = Pipeline.Config(score = score)
+    val clusters = Pipeline.run(turns, dict, vecs, pcfg).cache()
     println(s"mentions_clustered=${clusters.count()}")
     println("sample clusters (largest first):")
     clusters.groupBy("cluster_id").count()
@@ -73,15 +73,10 @@ object Demo {
       // ids are fixed-width c%08d so a lexicographic threshold is the
       // numeric 70% point.
       val isBase = col("conv_id") < lit(f"c${(nConvs * 0.7).toInt}%08d")
-      val sc = spark.sparkContext
       val state = Pipeline.bootstrapState(
-        Pipeline.allMentions(turns.where(isBase).as[graft.model.Turn],
-                             sc.broadcast(dict), sc.broadcast(vecs),
-                             Pipeline.Config(score = score)),
-        Pipeline.Config(score = score))
+        dictionary.mentions(turns.where(isBase).as[graft.model.Turn], pcfg), pcfg)
       val inc = Pipeline.runIncremental(turns.where(!isBase).as[graft.model.Turn],
-                                        dict, vecs, state,
-                                        Pipeline.Config(score = score))
+                                        dictionary, state, pcfg)
       val incAssign = inc.clusters.select("mention_id", "cluster_id")
         .as[(String, String)].collect().toMap
       val fullAssign = clusters.select("mention_id", "cluster_id")
@@ -104,13 +99,12 @@ object Demo {
         Pipeline.applyIncrement(state, inc), "target/demo/compacted")
       val retract = turns.select("conv_id").distinct()
         .where(graft.operators.Sampling.hashSample(col("conv_id"), 0.1, "demo-retract"))
-      val ret = Pipeline.runRetraction(retract, nextState,
-                                       Pipeline.Config(score = score))
+      val ret = Pipeline.runRetraction(retract, nextState, pcfg)
       val retAssign = ret.clusters.select("mention_id", "cluster_id")
         .as[(String, String)].collect().toMap
       val scratchAssign = Pipeline.run(
           turns.join(retract, Seq("conv_id"), "left_anti").as[graft.model.Turn],
-          dict, vecs, Pipeline.Config(score = score))
+          dict, vecs, pcfg)
         .select("mention_id", "cluster_id").as[(String, String)].collect().toMap
       println(s"retraction: retracted_convs=${retract.count()} " +
               s"upserts=${ret.clusterUpserts.count()} " +

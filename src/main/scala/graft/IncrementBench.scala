@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *
   * Scaling protocol (the north-rule two-cluster-size criterion applied
   * to the steady-state maintenance job): set GRAFT_INC_STATE_DIR so the
-  * base tables come from [[Pipeline.bootstrapStateCheckpointed]] — the
-  * first run builds and stages them, every later run at any SPARK_GRAFT_CPUS
+  * base tables come from [[Pipeline.bootstrapState]] with a
+  * [[Pipeline.Stager.Checkpointed]] stager — the first run builds and
+  * stages them, every later run at any SPARK_GRAFT_CPUS
   * is a pure disk read (the realistic shape: production scans Iceberg
   * base tables, it does not hold them in the increment's JVM) — and
   * GRAFT_INC_SKIP_FULL=1 to time only the increment. Then interleave
@@ -63,22 +64,18 @@ object IncrementBench {
 
     // base tables (untimed for the headline; this also warms JIT/codegen
     // for BOTH timed runs below)
-    val dictBc = spark.sparkContext.broadcast(dict)
-    val vecsBc = spark.sparkContext.broadcast(vecs)
+    val stage = sys.env.get("GRAFT_INC_STATE_DIR")
+      .fold[Pipeline.Stager](Pipeline.Stager.InMemory)(
+        Pipeline.Stager.Checkpointed(_, s"incbench:$nConvs:$deltaFrac:v1"))
     val t0 = System.nanoTime()
-    val state = sys.env.get("GRAFT_INC_STATE_DIR") match {
-      case Some(root) =>
-        Pipeline.bootstrapStateCheckpointed(baseTurns, dict, vecs, root,
-          s"incbench:$nConvs:$deltaFrac:v1")
-      case None =>
-        Pipeline.bootstrapState(Pipeline.allMentions(baseTurns, dictBc, vecsBc))
-    }
+    val state = Pipeline.bootstrapState(
+      Pipeline.Dictionary.Broadcast(dict, vecs).mentions(baseTurns), stage = stage)
     val baseS = (System.nanoTime() - t0) / 1e9
 
     val profile = sys.env.get("GRAFT_INC_PROFILE").contains("1")
 
     // GRAFT_INC_JOINED=1: time the DISTRIBUTED-dimension increment
-    // (Pipeline.runJoinedIncremental) — dictionary and vectors read from
+    // (Pipeline.Dictionary.Dimension) — dictionary and vectors read from
     // parquet dimension tables, no driver Map anywhere. This is the
     // 100-TB maintenance configuration; staging the dims is untimed
     // (production reads them from Iceberg).
@@ -90,6 +87,12 @@ object IncrementBench {
       vecs.toSeq.toDF("entity", "vec")
         .write.mode("overwrite").parquet(s"$dimsDir/vecs")
     }
+    val dictionary =
+      if (joined)
+        Pipeline.Dictionary.Dimension(
+          spark.read.parquet(s"$dimsDir/dict").as[graft.model.DictEntry],
+          spark.read.parquet(s"$dimsDir/vecs"), expectedDictKeys = dict.size.toLong)
+      else Pipeline.Dictionary.Broadcast(dict, vecs)
 
     // GRAFT_INC_RETRACT=1: time the FORGET path instead — retract
     // deltaFrac of the BASE conversations via Pipeline.runRetraction
@@ -121,13 +124,7 @@ object IncrementBench {
       val secs = (System.nanoTime() - t1) / 1e9
       (ups, secs, ret.clusters.count())
     } else {
-      val inc =
-        if (joined)
-          Pipeline.runJoinedIncremental(deltaTurns,
-            spark.read.parquet(s"$dimsDir/dict").as[graft.model.DictEntry],
-            spark.read.parquet(s"$dimsDir/vecs"),
-            state, expectedDictKeys = dict.size.toLong)
-        else Pipeline.runIncremental(deltaTurns, dict, vecs, state)
+      val inc = Pipeline.runIncremental(deltaTurns, dictionary, state)
       val ups = inc.clusterUpserts.count()
       val secs = (System.nanoTime() - t1) / 1e9
       (ups, secs, inc.clusters.count())
@@ -195,16 +192,7 @@ object IncrementBench {
       // machinery to the broadcast path, so any scaling gap between the
       // two configurations lives in this phase
       val (deltaMs, detectS) = timed {
-        (if (joined)
-          operators.MentionDetect.resolveJoined(
-            operators.Coref.detectAndInheritJoined(
-              deltaTurns,
-              spark.read.parquet(s"$dimsDir/dict").as[graft.model.DictEntry],
-              dict.size.toLong, 0.01),
-            spark.read.parquet(s"$dimsDir/vecs")).toDF()
-        else
-          Pipeline.allMentions(deltaTurns, dictBc, vecsBc).toDF()
-        ).localCheckpoint(true)
+        dictionary.mentions(deltaTurns, cfgP).toDF().localCheckpoint(true)
       }
       val (parts, partsS) = timed {
         Pipeline.incrementParts(deltaMs, state, cfgP)

@@ -27,43 +27,88 @@ object Pipeline {
       starK: Int = 3,
       ccMaxIter: Int = 50,
       supernode: Boolean = true,
-      coref: Boolean = true,
-      // one-shuffle mention stage (detect+inherit in one conv group) vs
-      // the round-3 two-pass shape (map-only detect persisted + cogroup);
-      // property-equal outputs — the flag exists so StageProfile can A/B
-      // the two shapes' scaling. Default: one-shot (fewer shuffles, no
-      // detected-mention materialization).
-      corefOneShot: Boolean = true)
+      coref: Boolean = true)
 
-  def mentions(turns: Dataset[Turn],
-               dictBc: Broadcast[Map[String, DictEntry]],
-               vecsBc: Broadcast[Map[String, Array[Float]]]): Dataset[Mention] =
-    MentionDetect.run(turns, dictBc, vecsBc)
+  /** Where the knowledge sources (p(e|m) dictionary + entity vectors)
+    * live — the only thing that differs between the broadcast flagship
+    * and the 100-TB distributed-dimension configuration. Everything after
+    * [[mentions]] is shared machinery. */
+  sealed trait Dictionary {
+    /** Mention universe of `turns`: detected ∪ coref-inherited (or
+      * detected only when `cfg.coref` is off), entity-disambiguated. */
+    def mentions(turns: Dataset[Turn], cfg: Config = Config()): Dataset[Mention] = this match {
+      case Dictionary.Broadcast(dict, vecs) =>
+        val sc = turns.sparkSession.sparkContext
+        allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs), cfg)
+      case Dictionary.Dimension(dictDf, vecDf, expectedDictKeys, bloomFpp) =>
+        if (cfg.coref)
+          MentionDetect.resolveJoined(
+            Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp), vecDf)
+        else MentionDetect.runJoinedFull(turns, dictDf, vecDf, expectedDictKeys, bloomFpp)
+    }
+  }
+
+  object Dictionary {
+    /** Driver Maps shipped to executors as broadcasts. */
+    final case class Broadcast(dict: Map[String, DictEntry],
+                               vecs: Map[String, Array[Float]]) extends Dictionary
+
+    /** Both dimension tables DISTRIBUTED — a REL-scale p(e|m) dictionary
+      * (~10M surfaces × top-K candidates, several GB) and a
+      * Wikipedia2Vec-scale vector table (tens of GB) fit in neither a
+      * driver Map nor a broadcast. Detection ∪ inheritance runs through
+      * Coref.detectAndInheritJoined (Bloom-prefiltered candidate explode,
+      * dictionary equi-join, exact per-conversation mini-dictionaries) and
+      * ED through MentionDetect.resolveJoined (candidate explode against
+      * the vector table, identical `resolve`). Property-equal to
+      * [[Broadcast]] on the same inputs (JoinedDetectSpec).
+      *
+      * `vecDf` schema: (entity: string, vec: array<float>). Pass
+      * `expectedDictKeys` to skip the Bloom-sizing count scan. */
+    final case class Dimension(dictDf: Dataset[DictEntry], vecDf: DataFrame,
+                               expectedDictKeys: Long = 0L,
+                               bloomFpp: Double = 0.01) extends Dictionary
+  }
+
+  /** Where stage outputs land. In memory a stage is its frame, unchanged;
+    * checkpointed, each stage is a resumable table under `$root/<name>`
+    * with a fingerprint manifest (TableIO.stage) — a killed run redoes
+    * only unfinished stages and a finished one is a pure read. Stage
+    * bodies are by-name: a stage already on disk never evaluates its
+    * body. */
+  sealed trait Stager {
+    def apply(name: String)(df: => DataFrame): DataFrame = this match {
+      case Stager.InMemory => df
+      case Stager.Checkpointed(root, fingerprint) =>
+        TableIO.stage(SparkSession.active, name, s"$root/$name", fingerprint)(df)
+    }
+
+    /** Whether every named stage is already written for this run. */
+    def done(names: String*): Boolean = this match {
+      case Stager.InMemory => false
+      case Stager.Checkpointed(root, fingerprint) =>
+        names.forall(n => TableIO.readFingerprint(s"$root/$n").contains(fingerprint))
+    }
+  }
+
+  object Stager {
+    case object InMemory extends Stager
+    final case class Checkpointed(root: String, fingerprint: String) extends Stager
+  }
 
   /** Flagship mention universe: detected ∪ coref-inherited (REL
     * with_coref — SURVEY §2.3 "union with the detected set downstream").
     * Inherited mentions occupy token positions detection left uncovered,
-    * so the union is id-disjoint by construction.
-    *
-    * Default shape (corefOneShot): ONE shuffle of the slim turn table;
-    * detection and inheritance run together per conversation group
-    * (Coref.detectAndInherit). The legacy two-pass shape (map-only
-    * detection persisted + a turns⋈mentions cogroup + union) is kept
-    * behind the flag for A/B profiling; the two are property-equal
-    * (PipelineSpec). */
+    * so the union is id-disjoint by construction. ONE shuffle of the slim
+    * turn table: detection and inheritance run together per conversation
+    * group (Coref.detectAndInherit), property-equal to the two-pass
+    * detect-then-cogroup shape (PipelineSpec). */
   def allMentions(turns: Dataset[Turn],
                   dictBc: Broadcast[Map[String, DictEntry]],
                   vecsBc: Broadcast[Map[String, Array[Float]]],
-                  cfg: Config = Config()): Dataset[Mention] = {
-    if (!cfg.coref) mentions(turns, dictBc, vecsBc)
-    else if (cfg.corefOneShot) Coref.detectAndInherit(turns, dictBc, vecsBc)
-    else {
-      val det = CacheTracker.register(
-        mentions(turns, dictBc, vecsBc)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      det.unionByName(Coref.inherited(turns, det, dictBc, vecsBc))
-    }
-  }
+                  cfg: Config = Config()): Dataset[Mention] =
+    if (cfg.coref) Coref.detectAndInherit(turns, dictBc, vecsBc)
+    else MentionDetect.run(turns, dictBc, vecsBc)
 
   /** mentions → (mention_id, conv_id, turn_idx, begin, end, surface, norm,
     * resolved, cluster_id). Singleton mentions keep their own id.
@@ -84,7 +129,7 @@ object Pipeline {
       // scoring-set anti-filter, payload attach, final assignment join) —
       // persist it or the detection flatMap (tokenize + greedy match +
       // context embed + ED) re-executes once per consumer. In production
-      // this is the stage-A checkpoint table (runCheckpointed).
+      // this is the `mentions` stage table of a checkpointed bootstrap.
       import org.apache.spark.storage.StorageLevel
       val msP = CacheTracker.register(ms.persist(StorageLevel.MEMORY_AND_DISK))
       val (scoringMs0, memberEdges) = PhaseTimer.timed("supernode") {
@@ -96,7 +141,7 @@ object Pipeline {
                                             cfg.starThreshold, cfg.starK)
       val scored = Scoring.edges(Blocking.attachPayload(pairIds, scoringMs), cfg.score)
       // Materialize the assignment (localCheckpoint is the in-memory analogue
-      // of the stage table runCheckpointed writes), then release every
+      // of the `clusters` stage table), then release every
       // intermediate cache — callers get a self-contained frame and repeated
       // cluster() calls in one session no longer accumulate cached blocks.
       val out = PhaseTimer.timed("assemble_ckpt") {
@@ -190,57 +235,24 @@ object Pipeline {
     (scoringMs, Some(memberEdges))
   }
 
-  /** Full run from raw turns: detect (∪ coref-inherit) → cluster. */
+  /** Full run from raw turns with a broadcast dictionary: detect
+    * (∪ coref-inherit) → cluster. */
   def run(turns: Dataset[Turn],
           dict: Map[String, DictEntry],
           vecs: Map[String, Array[Float]],
-          cfg: Config = Config()): DataFrame = CacheTracker.scoped {
-    val sc = turns.sparkSession.sparkContext
-    val out = cluster(allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs), cfg), cfg)
-    // cluster() localCheckpoints its output — the detected-mention persist
-    // registered by allMentions in THIS scope can go now
-    CacheTracker.drainUnpersist()
-    out
-  }
+          cfg: Config = Config()): DataFrame =
+    cluster(Dictionary.Broadcast(dict, vecs).mentions(turns, cfg), cfg)
 
-  /** Full flagship run with BOTH reference dimension tables DISTRIBUTED —
-    * the 100-TB configuration (round-3 VERDICT task 1): a REL-scale
-    * p(e|m) dictionary (~10M surfaces × top-K candidates, several GB) and
-    * a Wikipedia2Vec-scale entity-vector table (tens of GB) can live in
-    * neither a driver Map nor an executor broadcast. No driver Map
-    * appears anywhere in this path:
-    *
-    *  - mention universe (detected ∪ coref-inherited) via
-    *    Coref.detectAndInheritJoined — Bloom-prefiltered candidate
-    *    explode, dictionary equi-join, per-conversation mini-dictionaries
-    *    (exact, not approximate — see its Scaladoc);
-    *  - entity disambiguation via MentionDetect.resolveJoined — candidate
-    *    explode against the vector dimension table, identical `resolve`
-    *    on the gathered vectors;
-    *  - then the same block → score → cluster stages as [[run]].
-    *
-    * Property-equal to the broadcast flagship on the same inputs
-    * (JoinedDetectSpec: cluster-for-cluster, incl. coref fixtures).
-    *
-    * `vecDf` schema: (entity: string, vec: array<float>). Pass
-    * `expectedDictKeys` to skip the Bloom-sizing count scan. */
+  /** [[run]] with both dimension tables distributed
+    * ([[Dictionary.Dimension]]) — no driver Map anywhere in the path. */
   def runJoined(turns: Dataset[Turn],
                 dictDf: Dataset[DictEntry],
                 vecDf: DataFrame,
                 cfg: Config = Config(),
                 expectedDictKeys: Long = 0L,
-                bloomFpp: Double = 0.01): DataFrame = CacheTracker.scoped {
-    val ms0 =
-      if (cfg.coref)
-        Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp)
-      else
-        MentionDetect.runJoined(turns, dictDf,
-          turns.sparkSession.sparkContext.broadcast(Map.empty[String, Array[Float]]),
-          expectedDictKeys, bloomFpp)
-    val out = cluster(MentionDetect.resolveJoined(ms0, vecDf), cfg)
-    CacheTracker.drainUnpersist()
-    out
-  }
+                bloomFpp: Double = 0.01): DataFrame =
+    cluster(Dictionary.Dimension(dictDf, vecDf, expectedDictKeys, bloomFpp)
+              .mentions(turns, cfg), cfg)
 
   /** The four base tables an incrementally-maintained deployment keeps
     * (each an Iceberg table in production; appended/merged between
@@ -284,76 +296,49 @@ object Pipeline {
                        clusters: DataFrame)
 
   /** From-scratch build of the [[IncrementState]] base tables — run once
-    * to bootstrap incremental maintenance (in production: the initial
-    * backfill job whose stage tables ARE these tables). Same stages as
-    * [[cluster]], capturing the keyed/reps intermediates it already
-    * computes. */
-  def bootstrapState(ms0: Dataset[Mention], cfg: Config = Config()): IncrementState =
+    * to bootstrap incremental maintenance. Same stages as [[cluster]],
+    * capturing the keyed/reps/edges intermediates it already computes.
+    *
+    * With a [[Stager.Checkpointed]] stager this is also the resumable
+    * flagship and the production backfill: every state table lands as a
+    * stage table under `$root/<name>` (mentions, keyed, edges, clusters,
+    * reps), a killed bootstrap redoes only unfinished tables, a finished
+    * one is a pure read, and the directories ARE the base tables later
+    * [[runIncremental]] cycles scan. `ms0` is by-name: a resumed
+    * bootstrap never builds the detection plan (whose joined form scans
+    * the dictionary for its Bloom filter). */
+  def bootstrapState(ms0: => Dataset[Mention], cfg: Config = Config(),
+                     stage: Stager = Stager.InMemory): IncrementState =
     CacheTracker.scoped {
       import org.apache.spark.storage.StorageLevel
-      val spark = ms0.sparkSession
+      val msDf = stage("mentions")(ms0.toDF().localCheckpoint(true))
+      val spark = msDf.sparkSession
       import spark.implicits._
-      val msDf = ms0.toDF().localCheckpoint(true)
-      val ms = msDf.as[Mention]
-      val (scoringMs0, memberEdges) =
-        if (cfg.supernode) supernodeCollapse(ms, cfg) else (ms, None)
-      val scoringMs = CacheTracker.register(
-        scoringMs0.persist(StorageLevel.MEMORY_AND_DISK))
-      val keyed = Blocking.withBlockKeys(scoringMs, cfg.lsh).localCheckpoint(true)
-      val pairIds = Blocking.candidatePairs(keyed, cfg.tau, cfg.blockMaxSize,
-                                            cfg.starThreshold, cfg.starK)
-      // checkpoint the scored edges BEFORE assemble so the edge table is
+      // lazy: when every downstream stage is on disk nothing is collapsed
+      lazy val (scoringMs, memberEdges) = {
+        val ms = msDf.as[Mention]
+        val (scoring, members) =
+          if (cfg.supernode) supernodeCollapse(ms, cfg) else (ms, None)
+        (CacheTracker.register(scoring.persist(StorageLevel.MEMORY_AND_DISK)), members)
+      }
+      val keyed = stage("keyed") {
+        Blocking.withBlockKeys(scoringMs, cfg.lsh).localCheckpoint(true)
+      }
+      // the scored edges land BEFORE assemble so the edge table is
       // captured without a second scoring pass (CC consumes the
-      // checkpointed frame)
-      val scored = Scoring.edges(Blocking.attachPayload(pairIds, scoringMs), cfg.score)
-        .localCheckpoint(true)
-      val clusters = assemble(msDf, scored, memberEdges, cfg).localCheckpoint(true)
-      val reps = repsFrame(msDf, cfg).localCheckpoint(true)
+      // materialized frame)
+      val edges = stage("edges") {
+        val pairIds = Blocking.candidatePairs(keyed, cfg.tau, cfg.blockMaxSize,
+                                              cfg.starThreshold, cfg.starK)
+        Scoring.edges(Blocking.attachPayload(pairIds, scoringMs), cfg.score)
+          .localCheckpoint(true)
+      }
+      val clusters = stage("clusters") {
+        assemble(msDf, edges, memberEdges, cfg).localCheckpoint(true)
+      }
+      val reps = stage("reps")(repsFrame(msDf, cfg).localCheckpoint(true))
       CacheTracker.drainUnpersist()
-      IncrementState(msDf, keyed, reps, clusters, Some(scored))
-    }
-
-  /** [[bootstrapState]] with every state table landed as a resumable
-    * stage table under `$root/<name>` — the production backfill: a killed
-    * bootstrap redoes only unfinished tables, a finished one is a pure
-    * read, and the resulting directories ARE the base tables subsequent
-    * [[runIncremental]] cycles scan (appends land beside them). The
-    * mentions stage is shared with [[runCheckpointed]]'s layout so an
-    * existing flagship checkpoint seeds the state without re-detecting. */
-  def bootstrapStateCheckpointed(turns: Dataset[Turn],
-                                 dict: Map[String, DictEntry],
-                                 vecs: Map[String, Array[Float]],
-                                 root: String,
-                                 fingerprint: String,
-                                 cfg: Config = Config()): IncrementState =
-    CacheTracker.scoped {
-      val spark = turns.sparkSession
-      import spark.implicits._
-      val sc = spark.sparkContext
-      val msDf = TableIO.stage(spark, "mentions", s"$root/mentions", fingerprint) {
-        allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs), cfg).toDF()
-      }
-      // the in-memory bootstrap over the staged mentions is cheap to
-      // re-enter on resume only when every downstream stage exists;
-      // otherwise build once and stage each table
-      val names = Seq("keyed", "reps", "clusters", "edges")
-      if (names.forall(n => TableIO.readFingerprint(s"$root/$n").contains(fingerprint))) {
-        IncrementState(
-          msDf,
-          TableIO.stage(spark, "keyed", s"$root/keyed", fingerprint)(sys.error("staged")),
-          TableIO.stage(spark, "reps", s"$root/reps", fingerprint)(sys.error("staged")),
-          TableIO.stage(spark, "clusters", s"$root/clusters", fingerprint)(sys.error("staged")),
-          Some(TableIO.stage(spark, "edges", s"$root/edges", fingerprint)(sys.error("staged"))))
-      } else {
-        val built = bootstrapState(msDf.as[Mention], cfg)
-        IncrementState(
-          msDf,
-          TableIO.stage(spark, "keyed", s"$root/keyed", fingerprint)(built.keyed),
-          TableIO.stage(spark, "reps", s"$root/reps", fingerprint)(built.reps),
-          TableIO.stage(spark, "clusters", s"$root/clusters", fingerprint)(built.clusters),
-          built.edges.map(e =>
-            TableIO.stage(spark, "edges", s"$root/edges", fingerprint)(e)))
-      }
+      IncrementState(msDf, keyed, reps, clusters, Some(edges))
     }
 
   /** MERGE INTO analogue: the base clusters table with an increment's
@@ -438,11 +423,6 @@ object Pipeline {
     // frames (bootstrap/apply localCheckpoint their outputs) writing to
     // disjoint paths/table names — overlapped via TableIO.writeBucketedAll
     // (guide §2.6) instead of serializing five write barriers.
-    // GRAFT_COMPACT_PARALLEL=0 collapses to serial writes — a
-    // measurement/ops knob so one binary can A/B the overlap on
-    // identical state (same pattern as GRAFT_RETRACT_DELTA).
-    val threads =
-      if (sys.env.get("GRAFT_COMPACT_PARALLEL").contains("0")) 1 else 3
     def spec(df: DataFrame, n: String, key: String) =
       (df, s"graft_${label}_${n}_e${epoch}_$app",
        s"$root/epoch_$epoch/$n", Seq(key), buckets)
@@ -452,7 +432,7 @@ object Pipeline {
       spec(state.reps, "reps", "rep_id"),
       spec(state.clusters, "clusters", "mention_id")) ++
       state.edges.map(e => spec(e, "edges", "src")).toSeq
-    val written = sources.TableIO.writeBucketedAll(specs, threads)
+    val written = sources.TableIO.writeBucketedAll(specs)
     IncrementState(
       mentions = written(0), keyed = written(1), reps = written(2),
       clusters = written(3), edges = state.edges.map(_ => written(4)))
@@ -510,104 +490,39 @@ object Pipeline {
     * base tables), not a re-feed. Delta mention ids are assumed to sort after
     * the base ids of their supernode group (true for time-ordered
     * ingestion of (conv_id, turn_idx)-keyed ids), keeping sticky base
-    * reps identical to a from-scratch group-min. */
+    * reps identical to a from-scratch group-min.
+    *
+    * `dictionary` picks broadcast or distributed-dimension detection for
+    * the delta; a [[Stager.Checkpointed]] stager lands the delta mention,
+    * reps, keyed, edge and cluster-upsert tables resumably — exactly what
+    * the caller appends/merges into the state before the NEXT increment. */
   def runIncremental(newTurns: Dataset[Turn],
-                     dict: Map[String, DictEntry],
-                     vecs: Map[String, Array[Float]],
+                     dictionary: Dictionary,
                      state: IncrementState,
-                     cfg: Config = Config()): Increment = CacheTracker.scoped {
-    val sc = newTurns.sparkSession.sparkContext
-    incrementFrom(
-      allMentions(newTurns, sc.broadcast(dict), sc.broadcast(vecs), cfg).toDF(),
-      state, cfg)
-  }
-
-  /** [[runIncremental]] for the DISTRIBUTED-dimension configuration
-    * ([[runJoined]]'s 100-TB shape): delta detection ∪ coref-inherit via
-    * the Bloom-prefiltered dictionary equi-join and ED via the vector
-    * dimension join — no driver Map anywhere, so incremental maintenance
-    * works at REL-scale dictionary/vector sizes too. Everything after
-    * detection is [[runIncremental]]'s machinery verbatim. */
-  def runJoinedIncremental(newTurns: Dataset[Turn],
-                           dictDf: Dataset[DictEntry],
-                           vecDf: DataFrame,
-                           state: IncrementState,
-                           cfg: Config = Config(),
-                           expectedDictKeys: Long = 0L,
-                           bloomFpp: Double = 0.01): Increment = CacheTracker.scoped {
-    val ms0 =
-      if (cfg.coref)
-        Coref.detectAndInheritJoined(newTurns, dictDf, expectedDictKeys, bloomFpp)
-      else
-        MentionDetect.runJoined(newTurns, dictDf,
-          newTurns.sparkSession.sparkContext.broadcast(Map.empty[String, Array[Float]]),
-          expectedDictKeys, bloomFpp)
-    incrementFrom(MentionDetect.resolveJoined(ms0, vecDf).toDF(), state, cfg)
-  }
-
-  /** Shared increment tail over an already-detected delta mention frame. */
-  private def incrementFrom(deltaMs0: DataFrame, state: IncrementState,
-                            cfg: Config): Increment = {
-    val deltaMs = deltaMs0.localCheckpoint(true)
-    val parts = incrementParts(deltaMs, state, cfg)
-    val memberEdges = parts.memberEdges.localCheckpoint(true)
-    val newEdges = parts.newEdges.localCheckpoint(true)
-    val upserts = incrementUpserts(deltaMs, parts.deltaReps, memberEdges,
-                                   newEdges, state, cfg)
-      .localCheckpoint(true)
-    CacheTracker.drainUnpersist()
-    Increment(deltaMs, parts.deltaKeyed, parts.deltaReps, newEdges,
-              memberEdges, upserts, mergedClusters(state, upserts))
-  }
-
-  /** [[runIncremental]] with resumable stage tables (north_rule
-    * resumability for the maintenance path too): the delta mention,
-    * keyed, reps, edge, and cluster-upsert tables each land in
-    * `$root/<stage>` with a fingerprint manifest — a killed increment
-    * redoes only unfinished stages, and a completed one is a pure read.
-    * The staged tables are exactly what the caller appends/merges into
-    * the [[IncrementState]] tables before the NEXT increment. */
-  def runIncrementalCheckpointed(newTurns: Dataset[Turn],
-                                 dict: Map[String, DictEntry],
-                                 vecs: Map[String, Array[Float]],
-                                 state: IncrementState,
-                                 root: String,
-                                 fingerprint: String,
-                                 cfg: Config = Config()): Increment = CacheTracker.scoped {
-    val spark = newTurns.sparkSession
-    val sc = spark.sparkContext
-    val deltaMs = TableIO.stage(spark, "mentions_delta",
-        s"$root/mentions_delta", fingerprint) {
-      allMentions(newTurns, sc.broadcast(dict), sc.broadcast(vecs), cfg).toDF()
+                     cfg: Config = Config(),
+                     stage: Stager = Stager.InMemory): Increment = CacheTracker.scoped {
+    val deltaMs = stage("mentions_delta") {
+      dictionary.mentions(newTurns, cfg).toDF().localCheckpoint(true)
     }
-    // incrementParts is EAGER (see its Scaladoc), so only run it when
-    // some delta stage is actually missing — a fully-staged rerun (the
-    // resume case) reads the tables and computes nothing. A partially-
-    // staged rerun recomputes all parts once and re-writes only the
-    // missing stages (stage() skips completed ones).
-    val partStages = Seq("reps_delta", "keyed_delta", "edges_delta")
+    // incrementParts is EAGER (see its Scaladoc): lazy, so a fully-staged
+    // rerun (the resume case) reads the tables and computes nothing
     lazy val parts = incrementParts(deltaMs, state, cfg)
-    if (!partStages.forall(n =>
-          TableIO.readFingerprint(s"$root/$n").contains(fingerprint))) {
-      parts: Unit // force the eager delta computation once
+    val deltaReps = stage("reps_delta")(parts.deltaReps)
+    val deltaKeyed = stage("keyed_delta")(parts.deltaKeyed)
+    // member and scored edges share one stage table, told apart by `kind`
+    // (in memory the optimizer folds each filter back to its own frame)
+    val edges = stage("edges_delta") {
+      parts.memberEdges.localCheckpoint(true).withColumn("kind", lit("member"))
+        .unionByName(parts.newEdges.localCheckpoint(true).withColumn("kind", lit("scored")))
     }
-    val repsDelta = TableIO.stage(spark, "reps_delta",
-        s"$root/reps_delta", fingerprint) { parts.deltaReps }
-    val keyedDelta = TableIO.stage(spark, "keyed_delta",
-        s"$root/keyed_delta", fingerprint) { parts.deltaKeyed }
-    val edgesDelta = TableIO.stage(spark, "edges_delta",
-        s"$root/edges_delta", fingerprint) {
-      parts.newEdges.withColumn("kind", lit("scored"))
-        .unionByName(parts.memberEdges.withColumn("kind", lit("member")))
-    }
-    val newEdges = edgesDelta.where(col("kind") === "scored").drop("kind")
-    val memberEdges = edgesDelta.where(col("kind") === "member").drop("kind")
-    val upserts = TableIO.stage(spark, "cluster_upserts",
-        s"$root/cluster_upserts", fingerprint) {
-      incrementUpserts(deltaMs, repsDelta, memberEdges, newEdges, state, cfg)
+    val memberEdges = edges.where(col("kind") === "member").drop("kind")
+    val newEdges = edges.where(col("kind") === "scored").drop("kind")
+    val upserts = stage("cluster_upserts") {
+      incrementUpserts(deltaMs, deltaReps, memberEdges, newEdges, state, cfg)
+        .localCheckpoint(true)
     }
     CacheTracker.drainUnpersist()
-    Increment(deltaMs, keyedDelta, repsDelta, newEdges, memberEdges,
+    Increment(deltaMs, deltaKeyed, deltaReps, newEdges, memberEdges,
               upserts, mergedClusters(state, upserts))
   }
 
@@ -838,13 +753,24 @@ object Pipeline {
     * In production the `newState` carves are Iceberg `DELETE WHERE
     * conv_id IN (...)` (partition/file-level deletes) + one MERGE of
     * `clusterUpserts`; here they are anti-joins so chained
-    * retract/increment cycles compose in-session. */
+    * retract/increment cycles compose in-session. A
+    * [[Stager.Checkpointed]] stager lands the replacement-rep, their
+    * block-key, cluster-upsert and repair-edge artifacts resumably —
+    * what the caller turns into DELETE/append/MERGE against the base
+    * tables. */
   def runRetraction(retractConvs: DataFrame, state: IncrementState,
-                    cfg: Config = Config()): Retraction = CacheTracker.scoped {
+                    cfg: Config = Config(),
+                    stage: Stager = Stager.InMemory): Retraction = CacheTracker.scoped {
     val rconvs = retractConvs.select(col("conv_id")).distinct()
       .localCheckpoint(true)
-    val parts = retractionParts(rconvs, state, cfg)
-    val out = retractionAssemble(rconvs, parts, state)
+    // retractionParts is EAGER: lazy, so a fully-staged rerun computes nothing
+    lazy val parts = retractionParts(rconvs, state, cfg)
+    val staged = RetrParts(
+      replacementReps = stage("retract_reps")(parts.replacementReps),
+      replacementKeyed = stage("retract_keyed")(parts.replacementKeyed),
+      upserts = stage("retract_upserts")(parts.upserts),
+      freshEdges = stage("retract_edges")(parts.freshEdges))
+    val out = retractionAssemble(rconvs, staged, state)
     CacheTracker.drainUnpersist()
     out
   }
@@ -1084,21 +1010,11 @@ object Pipeline {
         //    Extra retained edges to DEMOTED hubs were valid scored
         //    edges inside one old cluster — retaining them is the
         //    documented monotone stance (deleting data never merges).
-        // GRAFT_RETRACT_DELTA=0 collapses both classes to full-width —
-        // a measurement knob so one binary can A/B the delta
-        // restriction on identical staged state (BENCH.md Round 5)
-        val deltaEnabled = sys.env.get("GRAFT_RETRACT_DELTA").forall(_ != "0")
-        val regimeFull = regimeDirty.localCheckpoint(true)
-        val repHubDirty = hubDirty
+        val fullDirty = regimeDirty.localCheckpoint(true)
+        val deltaDirty = hubDirty
           .unionByName(newRepKeyed.select("block_key"))
           .distinct()
-          .join(regimeFull, Seq("block_key"), "left_anti")
-        val fullDirty =
-          if (deltaEnabled) regimeFull
-          else regimeFull.unionByName(repHubDirty)
-        val deltaDirty =
-          if (deltaEnabled) repHubDirty
-          else repHubDirty.limit(0)
+          .join(fullDirty, Seq("block_key"), "left_anti")
         val newHubs = Blocking.starHubs(
             newKeyedAll.join(broadcast(hubDirty), Seq("block_key"), "left_semi")
               .select(col("block_key"), col("mid")), cfg.starK)
@@ -1117,10 +1033,10 @@ object Pipeline {
         }
         val fresh = PhaseTimer.timed("fresh_scoring") {
           // regime-change blocks are RARE (sizes must straddle a
-          // threshold exactly where the retraction crossed it), and
-          // with the knob off the delta side is empty — skip either
-          // pass entirely in its empty case rather than paying its
-          // fixed pair/payload/score stages
+          // threshold exactly where the retraction crossed it), and a
+          // retraction that kept every hub and rep has no delta side —
+          // skip either pass entirely in its empty case rather than
+          // paying its fixed pair/payload/score stages
           val sides = Seq(
             (keyedDeltaDirty, deltaMids),
             (keyedFullDirty, scoringSurvIds.select(col("mention_id").as("mid"))))
@@ -1233,124 +1149,6 @@ object Pipeline {
           parts.freshEdges.join(surviving, Seq("src", "dst"), "left_anti"))
       })
     Retraction(parts.upserts, newClusters, newState)
-  }
-
-  /** [[runRetraction]] with resumable stage tables (north_rule
-    * resumability for the forget path too): the replacement-rep, their
-    * block-key, and cluster-upsert artifacts each land in
-    * `$root/<stage>` with a fingerprint manifest — a killed retraction
-    * redoes only unfinished stages, a completed one is a pure read, and
-    * the staged tables are exactly what the caller turns into
-    * DELETE/append/MERGE against the base tables. */
-  def runRetractionCheckpointed(retractConvs: DataFrame,
-                                state: IncrementState,
-                                root: String,
-                                fingerprint: String,
-                                cfg: Config = Config()): Retraction =
-    CacheTracker.scoped {
-      val spark = state.clusters.sparkSession
-      val rconvs = retractConvs.select(col("conv_id")).distinct()
-        .localCheckpoint(true)
-      // parts are EAGER — only compute when some stage is missing
-      // (mirrors runIncrementalCheckpointed's staging discipline)
-      val stages = Seq("retract_reps", "retract_keyed", "retract_upserts",
-                       "retract_edges")
-      lazy val parts = retractionParts(rconvs, state, cfg)
-      if (!stages.forall(n =>
-            TableIO.readFingerprint(s"$root/$n").contains(fingerprint))) {
-        parts: Unit
-      }
-      val staged = RetrParts(
-        replacementReps = TableIO.stage(spark, "retract_reps",
-          s"$root/retract_reps", fingerprint) { parts.replacementReps },
-        replacementKeyed = TableIO.stage(spark, "retract_keyed",
-          s"$root/retract_keyed", fingerprint) { parts.replacementKeyed },
-        upserts = TableIO.stage(spark, "retract_upserts",
-          s"$root/retract_upserts", fingerprint) { parts.upserts },
-        freshEdges = TableIO.stage(spark, "retract_edges",
-          s"$root/retract_edges", fingerprint) { parts.freshEdges })
-      val out = retractionAssemble(rconvs, staged, state)
-      CacheTracker.drainUnpersist()
-      out
-    }
-
-  /** Checkpointed variant: every stage lands in `$root/<stage>` with a
-    * manifest; a rerun with the same fingerprint resumes instead of
-    * recomputing (north_rule resumability). */
-  def runCheckpointed(turns: Dataset[Turn],
-                      dict: Map[String, DictEntry],
-                      vecs: Map[String, Array[Float]],
-                      root: String,
-                      fingerprint: String,
-                      cfg: Config = Config()): DataFrame = CacheTracker.scoped {
-    val spark = turns.sparkSession
-    val sc = spark.sparkContext
-    val dictBc = sc.broadcast(dict)
-    val vecsBc = sc.broadcast(vecs)
-    val mentionsDf = TableIO.stage(spark, "mentions", s"$root/mentions", fingerprint) {
-      allMentions(turns, dictBc, vecsBc, cfg).toDF()
-    }
-    checkpointedTail(spark, mentionsDf, root, fingerprint, cfg)
-  }
-
-  /** [[runCheckpointed]] for the DISTRIBUTED-dimension flagship: the
-    * 100-TB configuration ([[runJoined]]) with every stage landing in a
-    * resumable checkpoint table — a multi-day production run over a
-    * beyond-broadcast dictionary must survive restarts too (north_rule
-    * resumability). Stage tables and resume semantics are identical to
-    * the broadcast variant; only the mention stage differs (joined
-    * detect ∪ inherit + joined ED). */
-  def runJoinedCheckpointed(turns: Dataset[Turn],
-                            dictDf: Dataset[DictEntry],
-                            vecDf: DataFrame,
-                            root: String,
-                            fingerprint: String,
-                            cfg: Config = Config(),
-                            expectedDictKeys: Long = 0L,
-                            bloomFpp: Double = 0.01): DataFrame = CacheTracker.scoped {
-    val spark = turns.sparkSession
-    val mentionsDf = TableIO.stage(spark, "mentions", s"$root/mentions", fingerprint) {
-      val ms0 =
-        if (cfg.coref)
-          Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp)
-        else
-          MentionDetect.runJoined(turns, dictDf,
-            spark.sparkContext.broadcast(Map.empty[String, Array[Float]]),
-            expectedDictKeys, bloomFpp)
-      MentionDetect.resolveJoined(ms0, vecDf).toDF()
-    }
-    checkpointedTail(spark, mentionsDf, root, fingerprint, cfg)
-  }
-
-  /** Shared block→score→cluster checkpoint chain over a (possibly
-    * resumed) mentions stage table. */
-  private def checkpointedTail(spark: SparkSession, mentionsDf: DataFrame,
-                               root: String, fingerprint: String,
-                               cfg: Config): DataFrame = {
-    import spark.implicits._
-    val ms = mentionsDf.as[Mention]
-    // edges checkpoint keeps scored and member edges apart (kind column)
-    // so the clusters stage can run CC on the small scored graph only.
-    val edgesDf = TableIO.stage(spark, "edges", s"$root/edges", fingerprint) {
-      val (scoringMs, memberEdges) =
-        if (cfg.supernode) supernodeCollapse(ms, cfg) else (ms, None)
-      val keyed = Blocking.withBlockKeys(scoringMs, cfg.lsh)
-      val pairIds = Blocking.candidatePairs(keyed, cfg.tau, cfg.blockMaxSize,
-                                            cfg.starThreshold, cfg.starK)
-      val scored = Scoring.edges(Blocking.attachPayload(pairIds, scoringMs), cfg.score)
-        .withColumn("kind", lit("scored"))
-      memberEdges
-        .map(me => scored.unionByName(me.withColumn("kind", lit("member"))))
-        .getOrElse(scored)
-    }
-    // the edges stage table is on disk now — release blocking's caches
-    CacheTracker.drainUnpersist()
-    TableIO.stage(spark, "clusters", s"$root/clusters", fingerprint) {
-      val scored = edgesDf.where(col("kind") === "scored").drop("kind")
-      val member = edgesDf.where(col("kind") === "member").drop("kind")
-      assemble(mentionsDf, scored,
-               if (cfg.supernode) Some(member) else None, cfg)
-    }
   }
 
   /** Pairwise P/R/F1 of a clustering vs gold entities, evaluated exactly on

@@ -80,7 +80,7 @@ object QueryLib {
   def mentions(spark: SparkSession, sfDir: String): Dataset[Mention] = {
     val dictBc = spark.sparkContext.broadcast(bigramDict)
     val vecsBc = spark.sparkContext.broadcast(Map.empty[String, Array[Float]])
-    Pipeline.mentions(turnsDs(spark, sfDir), dictBc, vecsBc)
+    MentionDetect.run(turnsDs(spark, sfDir), dictBc, vecsBc)
   }
 
   // Session-scoped memo of the clustered-assignment stage: q13 and q14

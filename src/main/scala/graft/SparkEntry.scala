@@ -634,13 +634,11 @@ object SparkEntry {
       // src0..src19; '< src2' puts {src0, src1, src10..src19} in the
       // base batch at every sf.
       val isBase = col("conv_id") < lit("src2")
-      val dictBc = s.sparkContext.broadcast(QueryLib.bigramDict)
-      val vecsBc = s.sparkContext.broadcast(Map.empty[String, Array[Float]])
-      val state = Pipeline.bootstrapState(Pipeline.allMentions(
-        turns.where(isBase).as[Turn], dictBc, vecsBc))
+      val dictionary = Pipeline.Dictionary.Broadcast(QueryLib.bigramDict, Map.empty)
+      val state = Pipeline.bootstrapState(
+        dictionary.mentions(turns.where(isBase).as[Turn]))
       val inc = Pipeline.runIncremental(
-        turns.where(!isBase).as[Turn],
-        QueryLib.bigramDict, Map.empty, state)
+        turns.where(!isBase).as[Turn], dictionary, state)
       inc.clusters
         .select(col("mention_id"), col("cluster_id"), col("norm").as("bg"))
         .orderBy("mention_id")
@@ -770,9 +768,8 @@ object SparkEntry {
     "q55_er_clusters_retract" -> ((s, dir) => {
       import s.implicits._
       val turns = QueryLib.turnsDs(s, dir)
-      val dictBc = s.sparkContext.broadcast(QueryLib.bigramDict)
-      val vecsBc = s.sparkContext.broadcast(Map.empty[String, Array[Float]])
-      val state = Pipeline.bootstrapState(Pipeline.allMentions(turns, dictBc, vecsBc))
+      val state = Pipeline.bootstrapState(
+        Pipeline.Dictionary.Broadcast(QueryLib.bigramDict, Map.empty).mentions(turns))
       val ret = Pipeline.runRetraction(
         turns.select("conv_id").where(col("conv_id") >= "src5").distinct(), state)
       ret.clusters
@@ -822,17 +819,15 @@ object SparkEntry {
       import s.implicits._
       val turns = QueryLib.turnsDs(s, dir)
       val isBase = col("conv_id") < lit("src2")
-      val dictBc = s.sparkContext.broadcast(QueryLib.bigramDict)
-      val vecsBc = s.sparkContext.broadcast(Map.empty[String, Array[Float]])
-      val state = Pipeline.bootstrapState(Pipeline.allMentions(
-        turns.where(isBase).as[Turn], dictBc, vecsBc))
+      val dictionary = Pipeline.Dictionary.Broadcast(QueryLib.bigramDict, Map.empty)
+      val state = Pipeline.bootstrapState(
+        dictionary.mentions(turns.where(isBase).as[Turn]))
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_q59_compact_${s.sparkContext.applicationId}").getAbsolutePath
       val compacted = Pipeline.compactState(state, root, buckets = 4,
                                             label = "q59")
       val inc = Pipeline.runIncremental(
-        turns.where(!isBase).as[Turn],
-        QueryLib.bigramDict, Map.empty, compacted)
+        turns.where(!isBase).as[Turn], dictionary, compacted)
       inc.clusters
         .select(col("mention_id"), col("cluster_id"), col("norm").as("bg"))
         .orderBy("mention_id")

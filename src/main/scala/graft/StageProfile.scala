@@ -56,17 +56,9 @@ object StageProfile {
     println(s"turns=$nTurns")
     val dictBc = spark.sparkContext.broadcast(dict)
     val vecsBc = spark.sparkContext.broadcast(vecs)
-    // Flagship mention stage. Default: the round-4 ONE-SHUFFLE shape
-    // (detect ∪ inherit per conv group). GRAFT_COREF_TWOPASS=1 profiles
-    // the round-3 shape (map-only detect + turns⋈mentions cogroup) for
-    // the A/B scaling comparison the round-3 verdict asked for.
-    val twoPass = sys.env.get("GRAFT_COREF_TWOPASS").contains("1")
-    val allMs = (if (twoPass) {
-      val ms = Pipeline.mentions(turns, dictBc, vecsBc).cache()
-      println(s"mentions=${time("mentions")(ms.count())}")
-      ms.unionByName(Coref.inherited(turns, ms, dictBc, vecsBc))
-    } else Coref.detectAndInherit(turns, dictBc, vecsBc)).cache()
-    println(s"all_mentions=${time(if (twoPass) "coref_union" else "detect_inherit")(allMs.count())}")
+    // flagship mention stage: detect ∪ inherit in one conv-group shuffle
+    val allMs = Coref.detectAndInherit(turns, dictBc, vecsBc).cache()
+    println(s"all_mentions=${time("detect_inherit")(allMs.count())}")
     val pcfg = Pipeline.Config()
     // supernode internals, timed stage by stage
     val msDf = allMs.toDF()

@@ -36,6 +36,7 @@ class StreamingMaintain(dict: Map[String, DictEntry],
                         initial: Pipeline.IncrementState,
                         cfg: Pipeline.Config = Pipeline.Config()) {
 
+  private val dictionary = Pipeline.Dictionary.Broadcast(dict, vecs)
   @volatile private var current: Pipeline.IncrementState = initial
 
   /** The state after all processed batches (thread-safe snapshot). */
@@ -46,7 +47,7 @@ class StreamingMaintain(dict: Map[String, DictEntry],
     * stream does. */
   def applyBatch(newTurns: Dataset[Turn]): Unit = synchronized {
     if (!newTurns.isEmpty) {
-      val inc = Pipeline.runIncremental(newTurns, dict, vecs, current, cfg)
+      val inc = Pipeline.runIncremental(newTurns, dictionary, current, cfg)
       val rolled = Pipeline.applyIncrement(current, inc)
       // materialize the merged clusters (MERGE INTO analogue) — bounds
       // the per-cycle plan at one merge instead of a growing chain

@@ -68,8 +68,9 @@ class CompactionSpec extends SparkSpec {
     val state = Pipeline.bootstrapState(Pipeline.allMentions(base, dictBc, vecsBc))
     val compact = Pipeline.compactState(state, tmp("graft-compact"), buckets = 4,
                                         label = "inc")
-    val incC = Pipeline.runIncremental(delta, dict, vecs, compact)
-    val incO = Pipeline.runIncremental(delta, dict, vecs, state)
+    val dictionary = Pipeline.Dictionary.Broadcast(dict, vecs)
+    val incC = Pipeline.runIncremental(delta, dictionary, compact)
+    val incO = Pipeline.runIncremental(delta, dictionary, state)
     val scratch = assign(Pipeline.run(turns.as[Turn], dict, vecs))
     assert(assign(incC.clusters) == scratch)
     assert(assign(incO.clusters) == scratch)

@@ -19,6 +19,7 @@ class IncrementalSpec extends SparkSpec {
   lazy val vecs = TranscriptGen.entityVectors(cfg, graft.operators.MentionDetect.CtxDim)
   lazy val dictBc = spark.sparkContext.broadcast(dict)
   lazy val vecsBc = spark.sparkContext.broadcast(vecs)
+  lazy val dictionary = Pipeline.Dictionary.Broadcast(dict, vecs)
   lazy val full = Pipeline.run(turns, dict, vecs).cache()
 
   private def assign(df: org.apache.spark.sql.DataFrame): Map[String, String] =
@@ -37,7 +38,7 @@ class IncrementalSpec extends SparkSpec {
     val (oldConvs, newConvs) = convs.splitAt((convs.length * 0.6).toInt)
     val state = stateOf(oldConvs)
 
-    val inc = Pipeline.runIncremental(convSlice(newConvs), dict, vecs, state)
+    val inc = Pipeline.runIncremental(convSlice(newConvs), dictionary, state)
     assert(assign(inc.clusters) == assign(full))
 
     // delta-bound: every newly scored edge touches a delta mention
@@ -65,11 +66,11 @@ class IncrementalSpec extends SparkSpec {
     val (b, c) = rest.splitAt(third)
 
     val state0 = stateOf(a)
-    val inc1 = Pipeline.runIncremental(convSlice(b), dict, vecs, state0)
+    val inc1 = Pipeline.runIncremental(convSlice(b), dictionary, state0)
     // chain: roll the delta tables into the state (what production
     // appends/merges into the Iceberg base tables)
     val state1 = Pipeline.applyIncrement(state0, inc1)
-    val inc2 = Pipeline.runIncremental(convSlice(c), dict, vecs, state1)
+    val inc2 = Pipeline.runIncremental(convSlice(c), dictionary, state1)
 
     assert(assign(inc2.clusters) == assign(full))
     val f1 = Pipeline.pairwiseF1(inc2.clusters, gold, dict)
@@ -87,7 +88,7 @@ class IncrementalSpec extends SparkSpec {
     val (oldConvs, newConvs) = convs.splitAt((convs.length * 0.6).toInt)
     val state = Pipeline.bootstrapState(
       Pipeline.allMentions(convSlice(oldConvs), dictBc, vecsBc, starCfg), starCfg)
-    val inc = Pipeline.runIncremental(convSlice(newConvs), dict, vecs, state, starCfg)
+    val inc = Pipeline.runIncremental(convSlice(newConvs), dictionary, state, starCfg)
     assert(assign(inc.clusters) == assign(fullStar))
   }
 
@@ -100,7 +101,7 @@ class IncrementalSpec extends SparkSpec {
       assign(df).groupBy(_._2).values.map(_.keySet).toSet
     val (early, late) = convs.splitAt((convs.length * 0.4).toInt)
     val state = stateOf(late) // base = LATER conv ids
-    val inc = Pipeline.runIncremental(convSlice(early), dict, vecs, state)
+    val inc = Pipeline.runIncremental(convSlice(early), dictionary, state)
     assert(partition(inc.clusters) == partition(full))
   }
 
@@ -108,17 +109,20 @@ class IncrementalSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-boot").toString
     val (oldConvs, newConvs) = convs.splitAt((convs.length * 0.6).toInt)
     val mem = stateOf(oldConvs)
-    val ck = Pipeline.bootstrapStateCheckpointed(
-      convSlice(oldConvs), dict, vecs, dir, "fp1")
+    val stage = Pipeline.Stager.Checkpointed(dir, "fp1")
+    assert(!stage.done("mentions", "keyed", "edges", "clusters", "reps"))
+    val ck = Pipeline.bootstrapState(
+      dictionary.mentions(convSlice(oldConvs)), stage = stage)
+    assert(stage.done("mentions", "keyed", "edges", "clusters", "reps"))
     assert(assign(ck.clusters) == assign(mem.clusters))
     assert(ck.keyed.count() == mem.keyed.count())
     assert(ck.reps.count() == mem.reps.count())
     // resume: same fingerprint, EMPTY turns — everything reads from disk
-    val ck2 = Pipeline.bootstrapStateCheckpointed(
-      spark.emptyDataset[Turn], dict, vecs, dir, "fp1")
+    val ck2 = Pipeline.bootstrapState(
+      dictionary.mentions(spark.emptyDataset[Turn]), stage = stage)
     assert(assign(ck2.clusters) == assign(mem.clusters))
     // and an increment over the disk-backed state matches from-scratch
-    val inc = Pipeline.runIncremental(convSlice(newConvs), dict, vecs, ck2)
+    val inc = Pipeline.runIncremental(convSlice(newConvs), dictionary, ck2)
     assert(assign(inc.clusters) == assign(full))
   }
 
@@ -127,14 +131,17 @@ class IncrementalSpec extends SparkSpec {
     val (oldConvs, newConvs) = convs.splitAt((convs.length * 0.6).toInt)
     val state = stateOf(oldConvs)
 
-    val inc1 = Pipeline.runIncrementalCheckpointed(
-      convSlice(newConvs), dict, vecs, state, dir, "fp1")
+    val stage = Pipeline.Stager.Checkpointed(dir, "fp1")
+    val inc1 = Pipeline.runIncremental(
+      convSlice(newConvs), dictionary, state, stage = stage)
     assert(assign(inc1.clusters) == assign(full))
+    assert(stage.done("mentions_delta", "reps_delta", "keyed_delta",
+                      "edges_delta", "cluster_upserts"))
 
     // resume proof: EMPTY new turns but the same fingerprint — the full
     // clustering must come back from the stage tables alone
-    val inc2 = Pipeline.runIncrementalCheckpointed(
-      spark.emptyDataset[Turn], dict, vecs, state, dir, "fp1")
+    val inc2 = Pipeline.runIncremental(
+      spark.emptyDataset[Turn], dictionary, state, stage = stage)
     assert(assign(inc2.clusters) == assign(full))
   }
 }

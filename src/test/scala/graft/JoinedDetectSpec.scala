@@ -102,7 +102,7 @@ class JoinedDetectSpec extends SparkSpec {
     assert(f1.f1 >= 0.99, s"joined-flagship F1 ${f1.f1}")
   }
 
-  test("runJoinedIncremental (no driver Map) ≡ broadcast increment ≡ from-scratch") {
+  test("joined-dictionary increment ≡ broadcast increment ≡ from-scratch") {
     // incremental maintenance at the 100-TB dimension-table configuration:
     // an increment detected through the dictionary/vector joins must land
     // exactly where the broadcast increment and the from-scratch run do
@@ -118,36 +118,79 @@ class JoinedDetectSpec extends SparkSpec {
     val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
     def assignments(df: org.apache.spark.sql.DataFrame) =
       df.select("mention_id", "cluster_id").as[(String, String)].collect().toSet
-    val viaJoin = assignments(
-      graft.Pipeline.runJoinedIncremental(slice(newC), dictDf, vecDf, state).clusters)
-    val viaBroadcast = assignments(
-      graft.Pipeline.runIncremental(slice(newC), dict, vecs, state).clusters)
+    val viaJoin = assignments(graft.Pipeline.runIncremental(
+      slice(newC), graft.Pipeline.Dictionary.Dimension(dictDf, vecDf), state).clusters)
+    val viaBroadcast = assignments(graft.Pipeline.runIncremental(
+      slice(newC), graft.Pipeline.Dictionary.Broadcast(dict, vecs), state).clusters)
     val fromScratch = assignments(graft.Pipeline.run(turns, dict, vecs))
     assert(viaJoin == viaBroadcast)
     assert(viaJoin == fromScratch)
   }
 
-  test("runJoinedCheckpointed ≡ runJoined; same-fingerprint rerun RESUMES from stage tables") {
+  /** The resumable flagship: a checkpointed state bootstrap, whose
+    * `clusters` is the flagship output. */
+  private def checkpointedJoined(ts: org.apache.spark.sql.Dataset[Turn],
+                                 dictionary: graft.Pipeline.Dictionary,
+                                 root: String, fingerprint: String) =
+    graft.Pipeline.bootstrapState(dictionary.mentions(ts),
+      stage = graft.Pipeline.Stager.Checkpointed(root, fingerprint))
+
+  test("checkpointed joined flagship ≡ runJoined; same-fingerprint rerun resumes") {
     val dictDf = dict.values.toSeq.toDS().repartition(4)
     val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
     val root = java.nio.file.Files.createTempDirectory("graft-joinedckpt").toString
     def assignments(df: org.apache.spark.sql.DataFrame) =
       df.select("mention_id", "cluster_id").as[(String, String)].collect().toSet
     val direct = assignments(graft.Pipeline.runJoined(turns, dictDf, vecDf))
-    val ckpt = assignments(
-      graft.Pipeline.runJoinedCheckpointed(turns, dictDf, vecDf, root, "fp1"))
+    val ckpt = assignments(checkpointedJoined(turns,
+      graft.Pipeline.Dictionary.Dimension(dictDf, vecDf), root, "fp1").clusters)
     assert(ckpt == direct)
     // resume proof: rerun with the SAME fingerprint but EMPTY inputs —
     // a recompute would emit nothing; a resume reads the stage tables
-    val emptyTurns = spark.emptyDataset[Turn]
-    val emptyDict = spark.emptyDataset[DictEntry]
-    val resumed = assignments(graft.Pipeline.runJoinedCheckpointed(
-      emptyTurns, emptyDict, vecDf.limit(0), root, "fp1"))
+    val empty = graft.Pipeline.Dictionary.Dimension(
+      spark.emptyDataset[DictEntry], vecDf.limit(0))
+    val resumed = assignments(
+      checkpointedJoined(spark.emptyDataset[Turn], empty, root, "fp1").clusters)
     assert(resumed == direct, "same-fingerprint rerun recomputed instead of resuming")
     // changed fingerprint ⇒ recompute (now over the empty inputs)
-    val recomputed = assignments(graft.Pipeline.runJoinedCheckpointed(
-      emptyTurns, emptyDict, vecDf.limit(0), root, "fp2"))
+    val recomputed = assignments(
+      checkpointedJoined(spark.emptyDataset[Turn], empty, root, "fp2").clusters)
     assert(recomputed.isEmpty)
+  }
+
+  test("joined flagship root reads back as a state that increments and retracts") {
+    // regression: the flagship and the state bootstrap once wrote
+    // different `edges` layouts under the same root — (src, dst, kind)
+    // vs (src, dst) — so maintenance over the read-back state failed to
+    // resolve `kind`. The flagship is now the state bootstrap itself.
+    import org.apache.spark.sql.functions.col
+    val dictDf = dict.values.toSeq.toDS().repartition(4)
+    val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
+    val joined = graft.Pipeline.Dictionary.Dimension(dictDf, vecDf)
+    val root = java.nio.file.Files.createTempDirectory("graft-joinedstate").toString
+    val convs = turns.select("conv_id").distinct().as[String].collect().sorted.toSeq
+    val (baseC, newC) = convs.splitAt((convs.length * 0.6).toInt)
+    def slice(cs: Seq[String]) = turns.where(col("conv_id").isInCollection(cs)).as[Turn]
+    def assignments(df: org.apache.spark.sql.DataFrame) =
+      df.select("mention_id", "cluster_id").as[(String, String)].collect().toSet
+    val flagship = checkpointedJoined(slice(baseC), joined, root, "fp1").clusters
+    assert(assignments(flagship) ==
+      assignments(graft.Pipeline.runJoined(slice(baseC), dictDf, vecDf)))
+
+    // a later job reads the root back (pure read) as its maintenance state
+    val state = checkpointedJoined(spark.emptyDataset[Turn],
+      graft.Pipeline.Dictionary.Dimension(spark.emptyDataset[DictEntry], vecDf.limit(0)),
+      root, "fp1")
+    assert(state.edges.get.columns.toSet == Set("src", "dst"))
+    val next = graft.Pipeline.applyIncrement(state,
+      graft.Pipeline.runIncremental(slice(newC), joined, state))
+    assert(assignments(next.clusters) ==
+      assignments(graft.Pipeline.run(turns, dict, vecs)))
+
+    val retract = baseC.zipWithIndex.collect { case (c, i) if i % 4 == 0 => c }
+    val ret = graft.Pipeline.runRetraction(retract.toDF("conv_id"), state)
+    assert(assignments(ret.clusters) ==
+      assignments(graft.Pipeline.run(slice(baseC.diff(retract)), dict, vecs)))
   }
 
   test("equivalence survives a parquet round-trip and an aggressive bloom fpp") {

@@ -1,6 +1,10 @@
 package graft
 
+import graft.model.{DictEntry, Mention, Turn}
+import graft.operators.{Coref, MentionDetect}
 import graft.sources.TranscriptGen
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end gate (BASELINE.md row 1): pairwise F1 ≥ 0.99 vs gold
@@ -16,10 +20,21 @@ class PipelineSpec extends SparkSpec {
   lazy val vecs = TranscriptGen.entityVectors(cfg, graft.operators.MentionDetect.CtxDim)
   lazy val clusters = Pipeline.run(turns, dict, vecs).cache()
 
+  /** The round-3 two-pass mention stage — map-only detection persisted,
+    * then a turns ⋈ mentions cogroup for inheritance, then the union — as
+    * the reference the one-shuffle flagship (Pipeline.allMentions) must
+    * equal mention for mention. */
+  private def twoPass(t: Dataset[Turn], dictBc: Broadcast[Map[String, DictEntry]],
+                      vecsBc: Broadcast[Map[String, Array[Float]]]): Dataset[Mention] = {
+    val det = MentionDetect.run(t, dictBc, vecsBc)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    det.unionByName(Coref.inherited(t, det, dictBc, vecsBc))
+  }
+
   test("detection finds the dictionary golds; detected ∪ inherited = ALL golds") {
     val dictBc = spark.sparkContext.broadcast(dict)
     val vecsBc = spark.sparkContext.broadcast(vecs)
-    val ms = Pipeline.mentions(turns, dictBc, vecsBc).cache()
+    val ms = MentionDetect.run(turns, dictBc, vecsBc).cache()
     // Mention.surface is the RAW text span (cased fixtures stay cased —
     // the cascade normalizes, it must not rewrite the observed surface);
     // gold stores the lowercase form, so compare case-folded.
@@ -46,23 +61,21 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("one-shuffle mention stage ≡ two-pass detect+cogroup shape (full payload)") {
-    // the flagship default (corefOneShot) must emit exactly the round-3
-    // shape's union — same ids, spans, norms, candidates, ctx vectors,
+    // the flagship mention stage must emit exactly the round-3 shape's
+    // union — same ids, spans, norms, candidates, ctx vectors,
     // resolutions — or the scaling redesign silently changed semantics
     val dictBc = spark.sparkContext.broadcast(dict)
     val vecsBc = spark.sparkContext.broadcast(vecs)
-    def keys(ds: org.apache.spark.sql.Dataset[graft.model.Mention]) =
+    def keys(ds: Dataset[Mention]) =
       ds.map(m => (m.mention_id, m.begin, m.end, m.surface, m.norm,
                    m.candidates.map(c => (c.entity, c.prior)).toSeq,
                    m.resolved, math.round(m.resolvedScore * 1e9), m.ctx.toSeq))
         .collect().toSet
-    val oneShot = keys(Pipeline.allMentions(turns, dictBc, vecsBc,
-      Pipeline.Config(corefOneShot = true)))
-    val twoPass = keys(Pipeline.allMentions(turns, dictBc, vecsBc,
-      Pipeline.Config(corefOneShot = false)))
+    val oneShot = keys(Pipeline.allMentions(turns, dictBc, vecsBc))
+    val twoPassKeys = keys(twoPass(turns, dictBc, vecsBc))
     assert(oneShot.nonEmpty)
-    val onlyA = oneShot -- twoPass
-    val onlyB = twoPass -- oneShot
+    val onlyA = oneShot -- twoPassKeys
+    val onlyB = twoPassKeys -- oneShot
     assert(onlyA.isEmpty, s"one-shot-only mentions: ${onlyA.take(3)}")
     assert(onlyB.isEmpty, s"two-pass-only mentions: ${onlyB.take(3)}")
   }
@@ -71,7 +84,6 @@ class PipelineSpec extends SparkSpec {
     // one-shot ≡ two-pass ≡ joined must not be a property of the default
     // fixture: re-assert on corpora with hot Zipf skew + dense mentions,
     // short sparse conversations, and ambiguity-heavy dictionaries
-    import graft.operators.{Coref, MentionDetect}
     val configs = Seq(
       TranscriptGen.GenConfig(nEntities = 80, nConvs = 120, seed = 7L,
                               zipfS = 1.8, mentionProb = 0.95),
@@ -85,16 +97,15 @@ class PipelineSpec extends SparkSpec {
       val v = TranscriptGen.entityVectors(c, MentionDetect.CtxDim)
       val dictBc = spark.sparkContext.broadcast(d)
       val vecsBc = spark.sparkContext.broadcast(v)
-      def keys(ds: org.apache.spark.sql.Dataset[graft.model.Mention]) =
+      def keys(ds: Dataset[Mention]) =
         ds.map(m => (m.mention_id, m.begin, m.end, m.norm, m.resolved,
                      math.round(m.resolvedScore * 1e9)))
           .collect().toSet
       val oneShot = keys(Pipeline.allMentions(t, dictBc, vecsBc))
       assert(oneShot.nonEmpty, s"empty mention set for $c")
-      val twoPass = keys(Pipeline.allMentions(t, dictBc, vecsBc,
-        Pipeline.Config(corefOneShot = false)))
-      assert(oneShot == twoPass, s"one-shot != two-pass for $c: " +
-        s"onlyA=${(oneShot -- twoPass).take(3)} onlyB=${(twoPass -- oneShot).take(3)}")
+      val twoPassKeys = keys(twoPass(t, dictBc, vecsBc))
+      assert(oneShot == twoPassKeys, s"one-shot != two-pass for $c: " +
+        s"onlyA=${(oneShot -- twoPassKeys).take(3)} onlyB=${(twoPassKeys -- oneShot).take(3)}")
       val dictDf = d.values.toSeq.toDS().repartition(3)
       val vecDf = v.toSeq.toDF("entity", "vec").repartition(2)
       val joined = keys(MentionDetect.resolveJoined(

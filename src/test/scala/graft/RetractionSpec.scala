@@ -121,7 +121,7 @@ class RetractionSpec extends SparkSpec {
     val ret = Pipeline.runRetraction(retract.toDF("conv_id"), state0)
     val inc = Pipeline.runIncremental(
       turns.where(col("conv_id").isInCollection(late)).as[Turn],
-      dict, vecs, ret.newState)
+      Pipeline.Dictionary.Broadcast(dict, vecs), ret.newState)
 
     val finalTurns = turns.where(!col("conv_id").isInCollection(retract)).as[Turn]
     assert(assign(inc.clusters) == assign(Pipeline.run(finalTurns, dict, vecs)))
@@ -198,20 +198,23 @@ class RetractionSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft-retr").toString
     val retract = convs.zipWithIndex.collect { case (c, i) if i % 6 == 0 => c }
     val state = stateOf(turns.as[Turn])
-    val r1 = Pipeline.runRetractionCheckpointed(
-      retract.toDF("conv_id"), state, root, "retr:v1")
+    val stage = Pipeline.Stager.Checkpointed(root, "retr:v1")
+    val r1 = Pipeline.runRetraction(retract.toDF("conv_id"), state, stage = stage)
+    Seq("retract_reps", "retract_keyed", "retract_upserts",
+        "retract_edges").foreach { s =>
+      assert(stage.done(s), s"stage $s not staged with the run fingerprint")
+    }
     // second call with the same fingerprint resumes from the staged
     // artifacts (stage tables are pure reads) — identical output
-    val r2 = Pipeline.runRetractionCheckpointed(
-      retract.toDF("conv_id"), state, root, "retr:v1")
+    val r2 = Pipeline.runRetraction(retract.toDF("conv_id"), state, stage = stage)
     assert(assign(r2.clusters) == assign(r1.clusters))
     val remaining = turns.where(!col("conv_id").isInCollection(retract)).as[Turn]
     assert(assign(r1.clusters) == assign(Pipeline.run(remaining, dict, vecs)))
-    Seq("retract_reps", "retract_keyed", "retract_upserts",
-        "retract_edges").foreach { s =>
-      assert(sources.TableIO.readFingerprint(s"$root/$s").contains("retr:v1"),
-        s"stage $s not staged with the run fingerprint")
-    }
+    // a changed fingerprint recomputes: retracting nothing under "retr:v2"
+    // must leave the clustering untouched, not replay the staged upserts
+    val none = Pipeline.runRetraction(Seq.empty[String].toDF("conv_id"), state,
+      stage = Pipeline.Stager.Checkpointed(root, "retr:v2"))
+    assert(none.clusterUpserts.isEmpty)
   }
 
   test("retracting everything empties the clustering; retracting nothing changes nothing") {

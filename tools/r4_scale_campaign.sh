@@ -20,14 +20,11 @@ for rep in 1 2; do
 done
 # task 10: one 32-core rep — 8v32 efficiency uses the best 8-core rep above
 run_level 32
-# stage-level A/B: one-shuffle (default) vs two-pass (GRAFT_COREF_TWOPASS=1)
-# at 2 and 8 cores on the 26M-turn corpus (r3 comparison scale)
+# stage-level profile at 2 and 8 cores on the 26M-turn corpus (r3
+# comparison scale)
 for c in 2 8; do
   sbt -batch "runMain graft.StageProfile 4000000 $c" \
     > bench_evidence/r4_stageprof_oneshot_$c.log 2>&1
   echo "[campaign] stageprof oneshot cpus=$c done $(date -u +%H:%M:%S)"
-  GRAFT_COREF_TWOPASS=1 sbt -batch "runMain graft.StageProfile 4000000 $c" \
-    > bench_evidence/r4_stageprof_twopass_$c.log 2>&1
-  echo "[campaign] stageprof twopass cpus=$c done $(date -u +%H:%M:%S)"
 done
 echo "[campaign] ALL DONE $(date -u +%H:%M:%S)"
