@@ -42,8 +42,8 @@ object Pipeline {
         allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs), cfg)
       case Dictionary.Dimension(dictDf, vecDf, expectedDictKeys, bloomFpp) =>
         if (cfg.coref)
-          MentionDetect.resolveJoined(
-            Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp), vecDf)
+          Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp,
+                                       vecDf = Some(vecDf))
         else MentionDetect.runJoinedFull(turns, dictDf, vecDf, expectedDictKeys, bloomFpp)
     }
   }
@@ -58,9 +58,9 @@ object Pipeline {
       * Wikipedia2Vec-scale vector table (tens of GB) fit in neither a
       * driver Map nor a broadcast. Detection ∪ inheritance runs through
       * Coref.detectAndInheritJoined (Bloom-prefiltered candidate explode,
-      * dictionary equi-join, exact per-conversation mini-dictionaries) and
-      * ED through MentionDetect.resolveJoined (candidate explode against
-      * the vector table, identical `resolve`). Property-equal to
+      * dictionary equi-join, exact per-conversation mini-dictionaries and
+      * mini vector maps, identical `resolve`), or — with coref off —
+      * MentionDetect.runJoinedFull. Property-equal to
       * [[Broadcast]] on the same inputs (JoinedDetectSpec).
       *
       * `vecDf` schema: (entity: string, vec: array<float>). Pass

@@ -15,21 +15,67 @@ import scala.util.hashing.MurmurHash3
 object MinHash {
 
   /** k-minhash signature of a token set. Element i = unsigned-min over
-    * tokens of murmur3(token, seed=i). Empty set → all Int.MaxValue. */
+    * tokens of `MurmurHash3.stringHash(token, seed = i)`. Empty set → all
+    * Int.MaxValue.
+    *
+    * Lane-major layout: stringHash mixes each 2-char block word
+    * (`k *= c1; rotl 15; k *= c2`) independently of the seed, so each
+    * token's block words are mixed ONCE and the k seeds then run as lanes
+    * over an Int[k] state — per block `h = rotl(h ^ kk, 13) * 5 +
+    * 0xe6546b64`, then the odd tail char and `avalanche(h ^ len)`. Every
+    * lane performs stringHash's arithmetic in stringHash's order, so the
+    * signature is bit-identical to the per-seed loop (kept as the oracle
+    * in MinHashSpec) and so are the band keys Blocking and Dedup derive
+    * from it; the block mixing drops from k passes per token to one. */
   def signature(tokens: Iterable[String], k: Int): Array[Int] = {
     val sig = Array.fill(k)(Int.MaxValue)
+    val h = new Array[Int](k)
+    var words = new Array[Int](32)
     val it = tokens.iterator
     while (it.hasNext) {
       val t = it.next()
+      val len = t.length
+      val nBlocks = len >>> 1
+      if (words.length < nBlocks) words = new Array[Int](nBlocks)
+      var b = 0
+      while (b < nBlocks) {
+        words(b) = mixBlock((t.charAt(2 * b) << 16) + t.charAt(2 * b + 1))
+        b += 1
+      }
       var i = 0
+      while (i < k) { h(i) = i; i += 1 }
+      b = 0
+      while (b < nBlocks) {
+        val w = words(b)
+        i = 0
+        while (i < k) { h(i) = Integer.rotateLeft(h(i) ^ w, 13) * 5 + 0xe6546b64; i += 1 }
+        b += 1
+      }
+      // odd tail char is mixLast'ed; the length seals every lane
+      val fin = (if ((len & 1) == 1) mixBlock(t.charAt(len - 1)) else 0) ^ len
+      i = 0
       while (i < k) {
-        val h = MurmurHash3.stringHash(t, i)
+        val v = avalanche(h(i) ^ fin)
         // unsigned comparison keeps the family uniform over the full range
-        if ((h ^ Int.MinValue) < (sig(i) ^ Int.MinValue)) sig(i) = h
+        if ((v ^ Int.MinValue) < (sig(i) ^ Int.MinValue)) sig(i) = v
         i += 1
       }
     }
     sig
+  }
+
+  // MurmurHash3 x86_32 block-word mix and finalizer (scala.util.hashing
+  // .MurmurHash3's mixLast and avalanche)
+  private def mixBlock(data: Int): Int =
+    Integer.rotateLeft(data * 0xcc9e2d51, 15) * 0x1b873593
+
+  private def avalanche(hash: Int): Int = {
+    var h = hash
+    h ^= h >>> 16
+    h *= 0x85ebca6b
+    h ^= h >>> 13
+    h *= 0xc2b2ae35
+    h ^ (h >>> 16)
   }
 
   /** Estimated Jaccard similarity from two signatures. */

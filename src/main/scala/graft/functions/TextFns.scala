@@ -15,6 +15,9 @@ object TextFns {
 
   val TokenPattern = "[a-z0-9]+"
 
+  /** [[TokenPattern]] compiled once, for Scala-side tokenizers. */
+  val TokenRegex: scala.util.matching.Regex = TokenPattern.r
+
   private val CombiningMarks = java.util.regex.Pattern.compile("\\p{M}+")
 
   /** Unicode fold (Scala side; column side = GraftFunctions.unicodeFold):

@@ -105,6 +105,50 @@ object CosineSim {
   }
 }
 
+/** |a ∩ b| of two SORTED, DISTINCT, null-free string arrays → int, by one
+  * merge walk: no hash set, no result array, no element hashing — the
+  * exact-Jaccard verify kernel of near-dup detection, where
+  * `size(array_intersect(a, b))` built an OpenHashSet per pair. Elements
+  * compare as UTF8String bytes (unsigned lexicographic), so "sorted"
+  * means byte order; for ASCII arrays (Dedup.shingles) that is Java
+  * String order. Equals `size(array_intersect(a, b))` on every input
+  * that meets the contract (DedupSpec); null arrays give null. */
+case class SortedIntersectSize(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
+  override def dataType: DataType = IntegerType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "sorted_intersect_size"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectSize.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"org.apache.spark.sql.graft.SortedIntersectSize.count($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectSize =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectSize {
+  /** Called from generated code. */
+  def count(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements(); val nb = b.numElements()
+    var i = 0; var j = 0; var n = 0
+    while (i < na && j < nb) {
+      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      if (c == 0) { n += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    n
+  }
+}
+
 /** Unicode fold: NFKD-normalize, strip combining marks, lowercase —
   * "Zürich"→"zurich", "café"→"cafe" (matches DuckDB strip_accents(lower())
   * for Latin accents). The SURVEY §2.2 unicode2ascii analogue the round-1
@@ -140,6 +184,10 @@ object GraftFunctions {
   def cosineSim(a: Column, b: Column): Column =
     ExpressionUtils.column(CosineSim(ExpressionUtils.expression(a),
                                      ExpressionUtils.expression(b)))
+
+  def sortedIntersectSize(a: Column, b: Column): Column =
+    ExpressionUtils.column(SortedIntersectSize(ExpressionUtils.expression(a),
+                                               ExpressionUtils.expression(b)))
 
   def unicodeFold(a: Column): Column =
     ExpressionUtils.column(UnicodeFold(ExpressionUtils.expression(a)))

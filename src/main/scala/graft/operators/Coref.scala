@@ -163,16 +163,26 @@ object Coref {
     * mini-dictionary therefore answers every probe exactly as the full
     * broadcast Map would — property-tested in JoinedDetectSpec.
     *
-    * Resolution runs vector-less here; callers re-resolve via
-    * MentionDetect.resolveJoined (span selection, norms, candidates and
-    * ctx embeddings do not depend on entity vectors). */
+    * Entity vectors (`vecDf`: entity, vec) ride along the same way: the
+    * candidate entities of each conversation's dictionary hits are joined
+    * to `vecDf` and regrouped per conv_id next to its mini-dictionary, so
+    * the in-group code resolves with a mini vector map exactly as the
+    * broadcast path does with the full one (every candidate any mention
+    * of the conversation can carry — detected or inherited — comes from
+    * those hits). The mention kernel therefore runs once; re-resolving
+    * afterwards (MentionDetect.resolveJoined) would evaluate it twice,
+    * once per side of its self-join. With `vecDf = None` resolution runs
+    * vector-less (span selection, norms, candidates and ctx embeddings do
+    * not depend on entity vectors) and callers may re-resolve. */
   def detectAndInheritJoined(turns: Dataset[Turn], dictDf: Dataset[DictEntry],
                              expectedDictKeys: Long = 0L,
                              bloomFpp: Double = 0.01,
-                             maxSeen: Int = Int.MaxValue): Dataset[Mention] = {
+                             maxSeen: Int = Int.MaxValue,
+                             vecDf: Option[DataFrame] = None): Dataset[Mention] = {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
     val bloomBc = spark.sparkContext.broadcast(
       MentionDetect.dictKeyBloom(dictDf, expectedDictKeys, bloomFpp))
     val masksBc = spark.sparkContext.broadcast(
@@ -180,26 +190,43 @@ object Coref {
 
     val convForms = MentionDetect.bloomSurvivorForms(turns, bloomBc, masksBc)
       .select(col("conv_id"), col("form")).distinct()
-    val convDicts = convForms
-      .join(dictDf.toDF(), convForms("form") === dictDf("mention"))
-      .groupBy("conv_id")
+    val hits = convForms.join(dictDf.toDF(), convForms("form") === dictDf("mention"))
+    val dicts = hits.groupBy("conv_id")
       .agg(collect_list(struct(col("mention"), col("lower"),
                                col("freq"), col("candidates"))).as("hits"))
-      .as[(String, Seq[DictEntry])]
+    val convDicts = (vecDf match {
+      case Some(v) =>
+        val convVecs = hits
+          .select(col("conv_id"), explode(col("candidates.entity")).as("entity"))
+          .distinct()
+          .join(v.select(col("entity"), col("vec")), "entity")
+          .groupBy("conv_id")
+          .agg(collect_list(struct(col("entity").as("_1"), col("vec").as("_2"))).as("vecs"))
+        dicts.join(convVecs, Seq("conv_id"), "left")
+      // no vector table: an all-null column of the same type, so every
+      // mini vector map is empty and resolution runs vector-less
+      case None => dicts.withColumn("vecs", lit(null).cast(ArrayType(StructType(Seq(
+        StructField("_1", StringType), StructField("_2", ArrayType(FloatType)))))))
+    }).as[(String, Seq[DictEntry], Seq[(String, Array[Float])])]
 
     val slimTurns = turns.select(col("conv_id"), col("turn_idx"), col("text"))
       .as[(String, Int, String)]
-    val noVec: String => Array[Float] = _ => Array.empty[Float]
     slimTurns.groupByKey(_._1)
       .cogroup(convDicts.groupByKey(_._1)) { (convId, ts, ds) =>
-        val mini: MentionDetect.Dict = ds.flatMap(_._2)
+        val groups = ds.toArray
+        val mini: MentionDetect.Dict = groups.iterator.flatMap(_._2)
           .map(h => h.mention -> h).toMap
         if (mini.isEmpty) Iterator.empty
         else {
+          val vecs: Map[String, Array[Float]] = groups.iterator
+            .flatMap(g => Option(g._3).getOrElse(Nil))
+            .map { case (e, v) => e -> (if (v == null) Array.empty[Float] else v) }
+            .toMap
+          val ev: String => Array[Float] = e => vecs.getOrElse(e, Array.empty[Float])
           val turnArr = ts.map { case (_, idx, text) =>
             Turn(convId, idx, null, text, null, null)
           }.toArray
-          detectAndInheritOfConv(convId, turnArr, mini, noVec,
+          detectAndInheritOfConv(convId, turnArr, mini, ev,
                                  maxSeen = maxSeen).iterator
         }
       }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{MinHash, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftFunctions.sortedIntersectSize
 
 /** Deduplication family for large-scale text corpora — the training-data-
   * pipeline operators layered on the same MinHash/SimHash kernels the ER
@@ -29,9 +30,12 @@ object Dedup {
 
   /** Word n-gram shingle set of a text, sorted distinct. Texts with fewer
     * than `n` tokens have NO shingles (empty set → excluded from near-dup
-    * pairing), matching the positional n-gram join a SQL oracle does. */
+    * pairing), matching the positional n-gram join a SQL oracle does.
+    * Tokens are `[a-z0-9]+`, so every shingle is ASCII and Java String
+    * order equals UTF8String byte order — the sorted-distinct contract
+    * [[jaccardVerify]]'s merge count relies on. */
   def shingles(text: String, n: Int): Seq[String] = {
-    val toks = TextFns.TokenPattern.r.findAllIn(text.toLowerCase).toArray
+    val toks = TextFns.TokenRegex.findAllIn(text.toLowerCase).toArray
     if (toks.length < n) Seq.empty
     else (0 to toks.length - n).map(i => toks.slice(i, i + n).mkString(" ")).distinct.sorted
   }
@@ -92,32 +96,54 @@ object Dedup {
     // cached SHINGLE frame does not cover the signature flatMap above
     // it; plan-verified, 2 SerializeFromObject signature subtrees)
     val bandKeys = graft.CacheTracker.register(
-      withShingles.as[(Long, Array[String])].flatMap { case (id, sh) =>
-        if (sh.isEmpty) Iterator.empty
-        else {
-          val sig = MinHash.signature(sh, k)
-          MinHash.bandKeys(sig, bandsEff, rowsEff).iterator.map(bk => (bk, id))
-        }
-      }.toDF("band_key", "id")
+      bandFrame(withShingles, k, bandsEff, rowsEff)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     val cand = bandKeys.as("L").join(bandKeys.as("R"), Seq("band_key"))
-      .where(col("L.id") < col("R.id"))
+      .where(col("L.id") < col("R.id") && sizeBound(threshold))
       .select(col("L.id").as("a_id"), col("R.id").as("b_id"))
       .distinct()
 
     jaccardVerify(cand, withShingles, threshold)
   }
 
+  /** (band_key, id, n) rows of a non-empty (id, sh) shingle frame: the
+    * LSH band keys of each document's k-minhash signature, plus its
+    * shingle-set size n for [[sizeBound]]. */
+  private def bandFrame(sh: DataFrame, k: Int, bands: Int, rows: Int): DataFrame = {
+    import sh.sparkSession.implicits._
+    sh.as[(Long, Array[String])].flatMap { case (id, s) =>
+      if (s.isEmpty) Iterator.empty
+      else MinHash.bandKeys(MinHash.signature(s, k), bands, rows)
+        .iterator.map(bk => (bk, id, s.length))
+    }.toDF("band_key", "id", "n")
+  }
+
+  /** Size filter over a band self-join `L` ⋈ `R`, applied before the
+    * verify joins ship any shingle array: J(a,b) ≤ min(|a|,|b|) /
+    * max(|a|,|b|), and double division and `round` are both monotone, so
+    * a pair whose size ratio ROUNDED the way [[jaccardVerify]] rounds J
+    * is below the threshold cannot pass the verify predicate
+    * `round(J, 4) ≥ t`. The ratio is rounded like J because a raw
+    * `ratio ≥ t` test is NOT implied by the verify predicate: a pair with
+    * J = 0.59996 rounds to 0.6 and passes t = 0.6 (DedupSpec plants one
+    * such pair). */
+  private def sizeBound(threshold: Double): Column =
+    round(least(col("L.n"), col("R.n")).cast("double") /
+            greatest(col("L.n"), col("R.n")).cast("double"), 4) >= threshold
+
   /** Shared verify join: exact shingle-set Jaccard over candidate id
-    * pairs, thresholded. Full shingle arrays travel only for candidate
-    * ids (two hash joins), never through the band shuffle. */
+    * pairs, thresholded, J rounded to 4 dp. Full shingle arrays travel
+    * only for candidate ids (two hash joins), never through the band
+    * shuffle. Shingle arrays must be sorted and distinct in byte order
+    * ([[shingles]] guarantees it): |a ∩ b| is a merge count
+    * (`sorted_intersect_size`), not a hash-set intersection. */
   private def jaccardVerify(cand: DataFrame, sh: DataFrame,
                             threshold: Double): DataFrame =
     cand
       .join(sh.select(col("id").as("a_id"), col("sh").as("sh_a")), "a_id")
       .join(sh.select(col("id").as("b_id"), col("sh").as("sh_b")), "b_id")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
+      .withColumn("inter", sortedIntersectSize(col("sh_a"), col("sh_b")).cast("double"))
       .withColumn("uni", (size(col("sh_a")) + size(col("sh_b"))).cast("double") - col("inter"))
       .withColumn("jaccard", round(when(col("uni") > 0, col("inter") / col("uni")).otherwise(0.0), 4))
       .where(col("jaccard") >= threshold)
@@ -139,7 +165,7 @@ object Dedup {
     * such a delta).
     *
     * Scale shape: only the DELTA's band keys sit on the probe side; the
-    * base contributes its (band_key, id) rows stream-through — at 100 TB
+    * base contributes its (band_key, id, n) rows stream-through — at 100 TB
     * the base's shingle and band-key frames are a PERSISTED single-pass
     * artifact maintained across cycles (the q20 persisted-shingles /
     * `Ann.buildLshIndex` discipline: partition by band-key prefix and the
@@ -163,27 +189,19 @@ object Dedup {
         .map { case (id, text) => (id, shingles(text, shingleN).toArray) }
         .toDF("id", "sh")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    def bandFrame(sh: DataFrame): DataFrame =
-      sh.as[(Long, Array[String])].flatMap { case (id, s) =>
-        if (s.isEmpty) Iterator.empty
-        else {
-          val sig = MinHash.signature(s, k)
-          MinHash.bandKeys(sig, bandsEff, rowsEff).iterator.map(bk => (bk, id))
-        }
-      }.toDF("band_key", "id")
     val shBase = shingleFrame(base)
     val shDelta = shingleFrame(delta)
     // the delta's band keys sit on BOTH join sides (probe + union into
     // build); unpersisted, the 128-minhash signature map — the stage
     // that dominates — would run twice per cycle
     val bandsDelta = graft.CacheTracker.register(
-      bandFrame(shDelta)
+      bandFrame(shDelta, k, bandsEff, rowsEff)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // delta probes base ∪ delta; base never meets base. least/greatest +
     // distinct folds the two orientations a delta×delta pair produces.
     val cand = bandsDelta.as("L")
-      .join(bandFrame(shBase).union(bandsDelta).as("R"), Seq("band_key"))
-      .where(col("L.id") =!= col("R.id"))
+      .join(bandFrame(shBase, k, bandsEff, rowsEff).union(bandsDelta).as("R"), Seq("band_key"))
+      .where(col("L.id") =!= col("R.id") && sizeBound(threshold))
       .select(least(col("L.id"), col("R.id")).as("a_id"),
               greatest(col("L.id"), col("R.id")).as("b_id"))
       .distinct()
@@ -256,11 +274,9 @@ object Dedup {
     // sample-pair join recomputes once per banding
     val pairJac = graft.CacheTracker.register(
       sampled.as("L").join(sampled.as("R"), col("L.id") < col("R.id"))
-        .select(round(
-          size(array_intersect(col("L.sh"), col("R.sh"))).cast("double") /
-            (size(col("L.sh")) + size(col("R.sh")) -
-             size(array_intersect(col("L.sh"), col("R.sh")))).cast("double"), 4)
-          .as("j"))
+        .select(sortedIntersectSize(col("L.sh"), col("R.sh")).cast("double").as("inter"),
+                (size(col("L.sh")) + size(col("R.sh"))).cast("double").as("n"))
+        .select(round(col("inter") / (col("n") - col("inter")), 4).as("j"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val bandings = Seq(16, 8, 4, 2, 1).filter(k % _ == 0)
     val planRows = bandings.map { r =>
@@ -300,7 +316,7 @@ object Dedup {
         df.select(col(idCol).cast("long").as("id"), col(textCol).as("text")))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val toks = TextFns.TokenPattern.r.findAllIn(text.toLowerCase).toSeq
+        val toks = TextFns.TokenRegex.findAllIn(text.toLowerCase).toSeq
         if (toks.isEmpty) None else Some((id, MinHash.simHashMd5(toks)))
       }
       .toDF("id", "sim")

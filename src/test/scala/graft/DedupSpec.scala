@@ -45,6 +45,79 @@ class DedupSpec extends SparkSpec {
       s"missed=${(exact -- got).size} extra=${(got -- exact).size}")
   }
 
+  test("sorted_intersect_size ≡ size(array_intersect) on sorted distinct arrays") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.{GraftFunctions, SortedIntersectSize}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val rng = new scala.util.Random(11)
+    val pool = Seq("a", "ab", "b", "z", "0", "a b c", "é", "漢", "ü x", "\uD83D\uDE00")
+    // the expression's contract: byte (UTF-8) order, distinct, no nulls
+    def sortedDistinct(xs: Seq[String]): Seq[String] =
+      xs.distinct.sortWith((x, y) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) < 0)
+    def randomSet(): Seq[String] = sortedDistinct(Seq.fill(rng.nextInt(12)) {
+      if (rng.nextBoolean()) pool(rng.nextInt(pool.length))
+      else rng.alphanumeric.take(1 + rng.nextInt(3)).mkString.toLowerCase
+    })
+    val some = Seq("a", "b", "c")
+    val cases: Seq[(Seq[String], Seq[String])] = Seq(
+      (Seq.empty, Seq.empty), (Seq.empty, some), (some, Seq.empty),
+      (some, some), (some, Seq("x", "y")), (null, some), (some, null), (null, null)) ++
+      Seq.fill(400)((randomSet(), randomSet()))
+    val df = cases.toDF("a", "b")
+    val got = df.select(
+        GraftFunctions.sortedIntersectSize(col("a"), col("b")),
+        when(col("a").isNull || col("b").isNull, lit(null))
+          .otherwise(size(array_intersect(col("a"), col("b")))))
+      .as[(Option[Int], Option[Int])].collect()
+    assert(got.length == cases.length)
+    got.foreach { case (merge, hashed) => assert(merge == hashed) }
+    assert(got.count(_._1.isEmpty) == 3, "null array in → null out")
+    // interpreted (non-codegen) path
+    def lit2(x: Seq[String]) = Literal.create(x, ArrayType(StringType))
+    cases.foreach { case (a, b) =>
+      val want = if (a == null || b == null) null else a.intersect(b).size
+      assert(SortedIntersectSize(lit2(a), lit2(b)).eval() == want)
+    }
+  }
+
+  test("size-bounded minhash near-dup (full and delta) ≡ brute-force round(J, 4) ≥ t") {
+    // doc 2's shingles are a subset of doc 1's with J = 2401/4002 =
+    // 0.599950…, which rounds to 0.6 and passes t = 0.6 — a size bound
+    // that compared the raw ratio min/max (= J here) with t would lose it;
+    // doc 3 (J = 2399/4002 → 0.5995) sits just below on the other side
+    val t = 0.6
+    def words(from: Int, until: Int) = (from until until).map(i => s"w$i").mkString(" ")
+    val corpus = Seq(
+      (1L, words(0, 4004)), (2L, words(0, 2403)), (3L, words(0, 2401)),
+      (4L, words(0, 2300)), (5L, words(5, 2408)), (6L, words(1000, 3500)),
+      (7L, "short text"), (8L, "alpha beta gamma delta epsilon"),
+      (9L, "alpha beta gamma delta epsilon zeta"))
+    val df = corpus.toDF("doc_id", "text")
+    val sh = corpus.map { case (id, text) => (id, Dedup.shingles(text, 3).toArray) }
+      .toDF("id", "sh").where(size(col("sh")) > 0)
+    val brute = sh.as("L").crossJoin(sh.as("R")).where(col("L.id") < col("R.id"))
+      .select(col("L.id"), col("R.id"),
+        round(size(array_intersect(col("L.sh"), col("R.sh"))).cast("double") /
+          (size(col("L.sh")) + size(col("R.sh")) -
+           size(array_intersect(col("L.sh"), col("R.sh")))).cast("double"), 4).as("j"))
+      .where(col("j") >= t)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(brute.contains((1L, 2L, 0.6)), s"boundary pair missing from $brute")
+    assert(!brute.exists(p => p._1 == 1L && p._2 == 3L))
+    val full = Dedup.minhashPairs(df, "doc_id", "text", threshold = t)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(full == brute)
+    val isDelta = Set(2L, 4L, 6L, 9L)
+    val delta = Dedup.minhashPairsDelta(
+        df.where(!col("doc_id").isin(isDelta.toSeq: _*)),
+        df.where(col("doc_id").isin(isDelta.toSeq: _*)),
+        "doc_id", "text", threshold = t)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(delta == brute.filter(p => isDelta(p._1) || isDelta(p._2)))
+  }
+
   test("simhash near-dup equals brute-force Hamming<=3 over exact signatures") {
     val got = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet

@@ -74,6 +74,26 @@ class JoinedDetectSpec extends SparkSpec {
     assert(onlyJ.isEmpty, s"join-only mentions: ${onlyJ.take(3)}")
   }
 
+  test("Dimension.mentions runs the mention kernel once (one CoGroup) and ≡ broadcast") {
+    // entity vectors regroup per conversation next to its mini-dictionary,
+    // so resolution happens in-group; re-resolving through resolveJoined's
+    // self-join executed the detect ∪ coref cogroup once per join side
+    import org.apache.spark.sql.execution.CoGroupExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dictDf = dict.values.toSeq.toDS().repartition(4)
+    val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
+    val ms = graft.Pipeline.Dictionary.Dimension(dictDf, vecDf).mentions(turns)
+    val viaJoin = ms.collect().map(m => (m.mention_id, m.begin, m.end, m.surface,
+      m.norm, m.resolved, math.round(m.resolvedScore * 1e9), m.ctx.toSeq)).toSet
+    object Plans extends AdaptiveSparkPlanHelper
+    val cogroups = Plans.collect(ms.queryExecution.executedPlan) { case c: CoGroupExec => c }
+    assert(cogroups.size == 1, ms.queryExecution.executedPlan.toString)
+    val viaBroadcast = mentionKeys(graft.Pipeline.allMentions(turns,
+      spark.sparkContext.broadcast(dict), spark.sparkContext.broadcast(vecs)))
+    assert(viaJoin.nonEmpty)
+    assert(viaJoin == viaBroadcast)
+  }
+
   test("Pipeline.runJoined clusters ≡ broadcast Pipeline.run clusters (F1 fixture)") {
     // end-to-end: the whole flagship (detect ∪ inherit → block → score →
     // cluster) with parquet dimension tables must assign every mention to

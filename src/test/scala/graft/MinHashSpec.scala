@@ -5,6 +5,49 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class MinHashSpec extends AnyFunSuite {
 
+  /** The per-seed loop `MinHash.signature` computed before its lane-major
+    * layout — kept as the bit-identity oracle. */
+  private def perSeedSignature(tokens: Iterable[String], k: Int): Array[Int] = {
+    val sig = Array.fill(k)(Int.MaxValue)
+    tokens.foreach { t =>
+      var i = 0
+      while (i < k) {
+        val h = scala.util.hashing.MurmurHash3.stringHash(t, i)
+        if ((h ^ Int.MinValue) < (sig(i) ^ Int.MinValue)) sig(i) = h
+        i += 1
+      }
+    }
+    sig
+  }
+
+  test("lane-major signature ≡ per-seed MurmurHash3 loop, and so are its band keys") {
+    val rng = new scala.util.Random(20260419)
+    def randomChar(): String = rng.nextInt(5) match {
+      case 0 => new String(Character.toChars(0x1F600 + rng.nextInt(0x200))) // surrogate pair
+      case 1 => rng.nextInt(0x10000).toChar.toString // any code unit, lone surrogates too
+      case 2 => "éß漢ü"(rng.nextInt(4)).toString
+      case _ => "abcxyz0189 "(rng.nextInt(11)).toString
+    }
+    def randomToken(): String = {
+      // lengths 0..9 (odd and even) plus tokens longer than the 32-block
+      // word buffer the kernel starts with
+      val len = if (rng.nextInt(8) == 0) 60 + rng.nextInt(80) else rng.nextInt(10)
+      Iterator.fill(len)(randomChar()).mkString
+    }
+    val fixed = Seq(Seq(""), Seq("a"), Seq("ab"), Seq("abc"), Seq("", "a", "ab", "abc"),
+                    Seq("\uD83D\uDE00", "é", "\uD800"), Seq.empty[String])
+    val sets = fixed ++ Seq.fill(300)(Seq.fill(rng.nextInt(40))(randomToken()))
+    for (k <- Seq(1, 32, 128); toks <- sets) {
+      val got = MinHash.signature(toks, k)
+      val want = perSeedSignature(toks, k)
+      assert(got.toSeq == want.toSeq, s"k=$k tokens=${toks.map(_.length)}")
+      if (k == 128) for ((b, r) <- Seq((64, 2), (32, 4), (8, 16)))
+        assert(MinHash.bandKeys(got, b, r).toSeq == MinHash.bandKeys(want, b, r).toSeq)
+      if (k == 32)
+        assert(MinHash.bandKeys(got, 16, 2).toSeq == MinHash.bandKeys(want, 16, 2).toSeq)
+    }
+  }
+
   test("signature is deterministic and order-independent") {
     val t1 = Seq("alpha", "beta", "gamma", "delta")
     val s1 = MinHash.signature(t1, 64)

@@ -112,6 +112,9 @@ class PipelineSpec extends SparkSpec {
         Coref.detectAndInheritJoined(t, dictDf), vecDf))
       assert(joined == oneShot, s"joined != broadcast for $c: " +
         s"onlyJ=${(joined -- oneShot).take(3)} onlyB=${(oneShot -- joined).take(3)}")
+      val inGroup = keys(Coref.detectAndInheritJoined(t, dictDf, vecDf = Some(vecDf)))
+      assert(inGroup == oneShot, s"in-group resolved joined != broadcast for $c: " +
+        s"onlyJ=${(inGroup -- oneShot).take(3)} onlyB=${(oneShot -- inGroup).take(3)}")
       t.unpersist(); ()
     }
   }
