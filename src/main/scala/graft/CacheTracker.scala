@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry for intermediate persisted frames created inside operators.
   *
   * Operators that persist a frame whose last consumer is downstream of
   * their own return value (e.g. Blocking's purged key table, Pipeline's
-  * mention cache) register it here; the pipeline driver calls
+  * stage leaves) register it here; the pipeline driver calls
   * [[drainUnpersist]] once the stage output is materialized. Without this,
   * repeated pipeline invocations in one long-lived SparkSession accumulate
   * MEMORY_AND_DISK blocks forever (round-1 verdict "What's wrong" #6).
@@ -16,28 +18,43 @@ import org.apache.spark.sql.Dataset
   * construction and the drain both happen on the calling thread), so two
   * concurrent runs — or a QueryLib query racing Pipeline.cluster in the
   * same JVM — can no longer drain each other's still-in-use frames and
-  * silently force recomputation mid-query (round-2 ADVICE). Unscoped use
-  * falls back to a shared root registry (same behavior as before).
+  * silently force recomputation mid-query (round-2 ADVICE). Outside a
+  * scope nothing is registered: no one would drain it, and a reference
+  * held here would keep the ContextCleaner from ever freeing the blocks.
   *
   * Thread-safe; entries are identity-tracked so double-registration is
   * harmless.
   */
 object CacheTracker {
   private type Q = java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]
-  private val root = new Q()
-  private val current = new scala.util.DynamicVariable[Q](root)
+  private val current = new scala.util.DynamicVariable[Option[Q]](None)
 
-  def register[T](ds: Dataset[T]): Dataset[T] = { current.value.add(ds); ds }
+  def register[T](ds: Dataset[T]): Dataset[T] = { current.value.foreach(_.add(ds)); ds }
 
-  /** Unpersist (non-blocking) everything registered in the current scope
-    * since its last drain. */
-  def drainUnpersist(): Unit = {
-    val q = current.value
+  /** Eagerly `localCheckpoint` `df` and register the leaf. */
+  def leaf(df: DataFrame): DataFrame = register(df.localCheckpoint(true))
+
+  /** The RDD a `localCheckpoint`ed frame reads, if `df` is such a leaf. */
+  def leafRdd(df: Dataset[_]): Option[RDD[_]] = df.queryExecution.analyzed match {
+    case r: LogicalRDD => Some(r.rdd)
+    case _ => None
+  }
+
+  /** Free `ds`'s blocks now (non-blocking): its cache entry and, for a
+    * checkpoint leaf (which `Dataset.unpersist` ignores), the RDD it reads. */
+  def release(ds: Dataset[_]): Unit = {
+    ds.unpersist(false)
+    leafRdd(ds).foreach(_.unpersist(false))
+  }
+
+  /** [[release]] everything registered in the current scope since its
+    * last drain. */
+  def drainUnpersist(): Unit = current.value.foreach { q =>
     var ds = q.poll()
-    while (ds != null) { ds.unpersist(false); ds = q.poll() }
+    while (ds != null) { release(ds); ds = q.poll() }
   }
 
   /** Run `body` with its own private registry: register/drainUnpersist
     * calls inside it cannot touch (or be touched by) other runs. */
-  def scoped[A](body: => A): A = current.withValue(new Q())(body)
+  def scoped[A](body: => A): A = current.withValue(Some(new Q()))(body)
 }

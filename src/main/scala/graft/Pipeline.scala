@@ -15,6 +15,14 @@ import org.apache.spark.sql.functions._
   *   block_key, pure-column pairwise features, threshold → edges.
   * Stage C (2 shuffles/round): large-star/small-star connected components.
   * Stage D: attach singletons, emit (mention, cluster_id).
+  *
+  * Lineage rule: every stage boundary is a checkpoint leaf
+  * (`localCheckpoint(true)` in memory, a stage table on disk); `persist`
+  * is only for a frame shared by branches of ONE plan. A persisted frame
+  * carries its whole lineage into every later plan, which re-renders and
+  * re-analyses it, and a lazy chain re-nests each subtree at every
+  * reference (measured: a 2 GiB plan string on a 300-conversation
+  * fixture). Leaves are released through [[CacheTracker]].
   */
 object Pipeline {
 
@@ -122,34 +130,46 @@ object Pipeline {
     * members attach through direct member→rep edges. This turns the
     * same-entity clique volume (quadratic in corpus size — fatal at 10^12
     * turns where a hot surface has 10^8 identical mentions) into linear
-    * pre-edges. Low-margin mentions are never collapsed. */
+    * pre-edges. Low-margin mentions are never collapsed. The output is a
+    * checkpoint leaf; every other leaf of the run is released. */
   def cluster(ms: Dataset[Mention], cfg: Config = Config()): DataFrame =
     CacheTracker.scoped { // per-run registry: concurrent runs can't drain each other
-      // The mention set feeds 4+ downstream consumers (supernode grouping,
-      // scoring-set anti-filter, payload attach, final assignment join) —
-      // persist it or the detection flatMap (tokenize + greedy match +
-      // context embed + ED) re-executes once per consumer. In production
-      // this is the `mentions` stage table of a checkpointed bootstrap.
-      import org.apache.spark.storage.StorageLevel
-      val msP = CacheTracker.register(ms.persist(StorageLevel.MEMORY_AND_DISK))
-      val (scoringMs0, memberEdges) = PhaseTimer.timed("supernode") {
-        if (cfg.supernode) supernodeCollapse(msP, cfg) else (msP, None)
-      }
-      val scoringMs = CacheTracker.register(scoringMs0.persist(StorageLevel.MEMORY_AND_DISK))
-      val keyed = Blocking.withBlockKeys(scoringMs, cfg.lsh)
+      val run = flagship(ms, cfg, Stager.InMemory)
+      Seq(run.mentions, run.keyed, run.edges).foreach(CacheTracker.release)
+      CacheTracker.drainUnpersist()
+      run.clusters
+    }
+
+  /** The stage tables of one from-scratch run. */
+  private case class Flagship(mentions: DataFrame, keyed: DataFrame,
+                              edges: DataFrame, clusters: DataFrame)
+
+  /** The stage sequence of [[cluster]] and [[bootstrapState]]: mentions →
+    * scoring set → keyed → edges → CC/assemble, each a lineage-cut leaf,
+    * so only the `mentions` job plans detection. Intermediate leaves go to
+    * the caller's [[CacheTracker]] scope. Stage bodies are by-name and the
+    * collapse is lazy: a stage already on disk builds no plan. */
+  private def flagship(ms0: => Dataset[Mention], cfg: Config, stage: Stager): Flagship = {
+    def leafStage(name: String)(df: => DataFrame): DataFrame =
+      stage(name)(PhaseTimer.timed(name)(df.localCheckpoint(true)))
+    val msDf = leafStage("mentions")(ms0.toDF())
+    val spark = msDf.sparkSession
+    import spark.implicits._
+    lazy val (scoringMs, memberEdges) = PhaseTimer.timed("supernode") {
+      if (cfg.supernode) supernodeCollapse(msDf, cfg) else (msDf, None)
+    }
+    val keyed = leafStage("keyed")(Blocking.withBlockKeys(scoringMs.as[Mention], cfg.lsh))
+    // the scored edges land BEFORE assemble so the edge table is
+    // captured without a second scoring pass (CC consumes the
+    // materialized frame)
+    val edges = leafStage("edges") {
       val pairIds = Blocking.candidatePairs(keyed, cfg.tau, cfg.blockMaxSize,
                                             cfg.starThreshold, cfg.starK)
-      val scored = Scoring.edges(Blocking.attachPayload(pairIds, scoringMs), cfg.score)
-      // Materialize the assignment (localCheckpoint is the in-memory analogue
-      // of the `clusters` stage table), then release every
-      // intermediate cache — callers get a self-contained frame and repeated
-      // cluster() calls in one session no longer accumulate cached blocks.
-      val out = PhaseTimer.timed("assemble_ckpt") {
-        assemble(msP.toDF(), scored, memberEdges, cfg).localCheckpoint(true)
-      }
-      CacheTracker.drainUnpersist()
-      out
+      Scoring.edges(Blocking.attachPayload(pairIds, scoringMs.as[Mention]), cfg.score)
     }
+    val clusters = leafStage("clusters")(assemble(msDf, edges, memberEdges, cfg))
+    Flagship(msDf, keyed, edges, clusters)
+  }
 
   /** CC over the SCORING graph only (representatives + low-margin
     * mentions — size ∝ distinct surface forms, not corpus rows), then a
@@ -179,16 +199,6 @@ object Pipeline {
               coalesce(col("cluster_id"), col("mention_id")).as("cluster_id"))
   }
 
-  /** Split mentions into (scoring set = representatives + low-margin
-    * mentions, member→rep pre-edges).
-    *
-    * Shuffle discipline: the full Mention payload (context vector +
-    * candidate list) never crosses a shuffle here. Grouping and the
-    * member-edge join run on a 4-column slim projection (a hot surface
-    * form is ~13% of all rows — shipping payloads through that key was
-    * measured as THE pipeline bottleneck), and the scoring set is carved
-    * out of the payload table with a broadcast semi-join on the (small)
-    * representative + low-margin id set — map-only. */
   /** Supernode eligibility: confidently resolved mentions collapse into
     * one representative per (norm, resolved) group. Shared by the
     * from-scratch collapse and the incremental sticky-rep attach so the
@@ -204,34 +214,41 @@ object Pipeline {
       .groupBy("norm", "resolved")
       .agg(min("mention_id").as("rep_id"))
 
-  private def supernodeCollapse(ms: Dataset[Mention], cfg: Config)
-      : (Dataset[Mention], Option[DataFrame]) = {
-    val spark = ms.sparkSession
-    import spark.implicits._
-    val msDf = ms.toDF()
+  /** Split mentions into (scoring set = representatives + low-margin
+    * mentions, member→rep pre-edges).
+    *
+    * Shuffle discipline: the full Mention payload (context vector +
+    * candidate list) never crosses a shuffle here. Grouping and the
+    * member-edge join run on a 4-column slim projection (a hot surface
+    * form is ~13% of all rows — shipping payloads through that key was
+    * measured as THE pipeline bottleneck), and the scoring set is carved
+    * out of the payload table with a broadcast semi-join on the (small)
+    * representative + low-margin id set — map-only. */
+  private def supernodeCollapse(msDf: DataFrame, cfg: Config)
+      : (DataFrame, Option[DataFrame]) = {
     val slim = msDf.select(col("mention_id"), col("norm"), col("resolved"),
                            col("resolvedScore"))
     val isEligible = eligibleCond(cfg)
-    val eligible = slim.where(isEligible)
-    val reps = repsFrame(msDf, cfg)
-    val withRep = eligible.join(reps, Seq("norm", "resolved"))
-    val memberEdges = withRep.where(col("mention_id") =!= col("rep_id"))
+    // each mention's scoring node: its group rep if eligible, else itself;
+    // the leaf's own job observes the scoring-set size
+    val toRep = slim.where(isEligible).join(repsFrame(msDf, cfg), Seq("norm", "resolved"))
+      .select(col("mention_id"), col("rep_id"))
+      .unionByName(slim.where(!isEligible)
+        .select(col("mention_id"), col("mention_id").as("rep_id")))
+      .observe("scoring_ids", count(when(col("mention_id") === col("rep_id"), 1)).as("n"))
+    val repOf = CacheTracker.leaf(toRep)
+    val memberEdges = repOf.where(col("mention_id") =!= col("rep_id"))
       .select(col("rep_id").as("src"), col("mention_id").as("dst"))
-    val scoringIds = CacheTracker.register(
-      reps.select(col("rep_id").as("mention_id"))
-        .unionByName(slim.where(!isEligible).select(col("mention_id")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val scoringIds = repOf.where(col("mention_id") === col("rep_id")).select("mention_id")
     // broadcast the id set when it is broadcast-sized (the normal case:
     // #distinct surfaces + low-margin tail); degrade to a shuffled
     // semi-join on the uniform mention_id key otherwise. Cutoff 1M rows:
     // mention ids are ~25-byte strings, so 1M ≈ 25-50 MB serialized —
     // comfortably under executor broadcast budgets; 5M (round 1) risked
     // a 100-300 MB broadcast per executor.
-    val idRows = PhaseTimer.timed("scoring_ids_count") { scoringIds.count() }
+    val idRows = toRep.queryExecution.observedMetrics("scoring_ids").getLong(0)
     val idSide = if (idRows <= 1000000L) broadcast(scoringIds) else scoringIds
-    val scoringMs = msDf
-      .join(idSide, Seq("mention_id"), "left_semi")
-      .as[Mention]
+    val scoringMs = CacheTracker.leaf(msDf.join(idSide, Seq("mention_id"), "left_semi"))
     (scoringMs, Some(memberEdges))
   }
 
@@ -296,8 +313,9 @@ object Pipeline {
                        clusters: DataFrame)
 
   /** From-scratch build of the [[IncrementState]] base tables — run once
-    * to bootstrap incremental maintenance. Same stages as [[cluster]],
-    * capturing the keyed/reps/edges intermediates it already computes.
+    * to bootstrap incremental maintenance. The stage sequence of
+    * [[cluster]], keeping the keyed/edges intermediates it computes, plus
+    * the `reps` table.
     *
     * With a [[Stager.Checkpointed]] stager this is also the resumable
     * flagship and the production backfill: every state table lands as a
@@ -310,35 +328,10 @@ object Pipeline {
   def bootstrapState(ms0: => Dataset[Mention], cfg: Config = Config(),
                      stage: Stager = Stager.InMemory): IncrementState =
     CacheTracker.scoped {
-      import org.apache.spark.storage.StorageLevel
-      val msDf = stage("mentions")(ms0.toDF().localCheckpoint(true))
-      val spark = msDf.sparkSession
-      import spark.implicits._
-      // lazy: when every downstream stage is on disk nothing is collapsed
-      lazy val (scoringMs, memberEdges) = {
-        val ms = msDf.as[Mention]
-        val (scoring, members) =
-          if (cfg.supernode) supernodeCollapse(ms, cfg) else (ms, None)
-        (CacheTracker.register(scoring.persist(StorageLevel.MEMORY_AND_DISK)), members)
-      }
-      val keyed = stage("keyed") {
-        Blocking.withBlockKeys(scoringMs, cfg.lsh).localCheckpoint(true)
-      }
-      // the scored edges land BEFORE assemble so the edge table is
-      // captured without a second scoring pass (CC consumes the
-      // materialized frame)
-      val edges = stage("edges") {
-        val pairIds = Blocking.candidatePairs(keyed, cfg.tau, cfg.blockMaxSize,
-                                              cfg.starThreshold, cfg.starK)
-        Scoring.edges(Blocking.attachPayload(pairIds, scoringMs), cfg.score)
-          .localCheckpoint(true)
-      }
-      val clusters = stage("clusters") {
-        assemble(msDf, edges, memberEdges, cfg).localCheckpoint(true)
-      }
-      val reps = stage("reps")(repsFrame(msDf, cfg).localCheckpoint(true))
+      val run = flagship(ms0, cfg, stage)
+      val reps = stage("reps")(repsFrame(run.mentions, cfg).localCheckpoint(true))
       CacheTracker.drainUnpersist()
-      IncrementState(msDf, keyed, reps, clusters, Some(edges))
+      IncrementState(run.mentions, run.keyed, reps, run.clusters, Some(run.edges))
     }
 
   /** MERGE INTO analogue: the base clusters table with an increment's
@@ -530,17 +523,14 @@ object Pipeline {
                               memberEdges: DataFrame, newEdges: DataFrame)
 
   /** Delta-side increment machinery — EAGER: every multiply-referenced
-    * frame is `localCheckpoint(true)`d the moment it is defined. All of
-    * them are delta-sized, so the materialization is O(delta) by
-    * construction, and the lineage truncation is what keeps the query
-    * plans bounded — the alternative (one lazy DAG) re-nests each
-    * subtree at every reference and the plan tree grows exponentially
-    * with stage depth (measured: a 2 GiB plan string on the 300-conv
-    * fixture). Every touch of a base table is a slim semi-join carve
-    * (map-only scan when the delta-derived probe side broadcasts, which
-    * AQE decides from its measured size — never forced, so an unusually
-    * fat delta degrades to a shuffled join instead of an executor
-    * OOM). */
+    * frame is `localCheckpoint(true)`d the moment it is defined (the
+    * lineage rule on [[Pipeline]]). All of them are delta-sized, so the
+    * materialization is O(delta) by construction, and the lineage
+    * truncation is what keeps the query plans bounded. Every touch of a
+    * base table is a slim semi-join carve (map-only scan when the
+    * delta-derived probe side broadcasts, which AQE decides from its
+    * measured size — never forced, so an unusually fat delta degrades to
+    * a shuffled join instead of an executor OOM). */
   private[graft] def incrementParts(deltaMs: DataFrame, state: IncrementState,
                              cfg: Config): IncParts = {
     val spark = deltaMs.sparkSession

@@ -94,51 +94,67 @@ object Blocking {
     *    the golden F1 test.
     *  - n > blockMaxSize: dropped (oversized-block discard; a key shared
     *    by that many mentions carries ~no signal).
+    *
+    * Only POPULATED regimes are planned: the purged key rows are
+    * materialized once, observing the largest block size in the same job,
+    * and the triangle (n > tau) and star (n > starThreshold) branches are
+    * built only when a block that large exists. An empty regime yields no
+    * pairs; skipping it saves its jobs and codegen, a fixed per-call cost.
     */
   def candidatePairs(keyed: DataFrame, tau: Int = 512,
                      blockMaxSize: Int = 10000000,
                      starThreshold: Int = 2048,
                      starK: Int = 3): DataFrame = {
     require(tau <= starThreshold, "regimes: cold <= tau < triangle <= starThreshold < star")
-    val rows = purgedRows(keyed, blockMaxSize)
+    val (rows, maxN) = purgedRows(keyed, blockMaxSize)
 
     val cold = rows.where(col("key_n") <= tau).select(col("block_key"), col("mid"))
     val coldPairs = cold.as("L").join(cold.as("R"), Seq("block_key"))
       .where(col("L.mid") < col("R.mid"))
       .select(col("L.mid").as("a_id"), col("R.mid").as("b_id"))
 
-    val hot = rows.where(col("key_n") > tau && col("key_n") <= starThreshold)
-      .withColumn("n_groups", ceil(col("key_n").cast("double") / tau).cast("int"))
-      .withColumn("grp", pmod(xxhash64(col("mid")), col("n_groups")).cast("int"))
-    // Row in salt group g is the LEFT input of reducers (g, j), j in
-    // [g, G-1], and the RIGHT input of reducers (i, g), i in [0, g].
-    val lhs = hot
-      .withColumn("j", explode(sequence(col("grp"), col("n_groups") - 1)))
-      .select(col("block_key"), col("grp").as("i"), col("j"), col("mid").as("l_mid"))
-    val rhs = hot
-      .withColumn("i", explode(sequence(lit(0), col("grp"))))
-      .select(col("block_key"), col("i"), col("grp").as("j"), col("mid").as("r_mid"))
-    val hotPairs = lhs.join(rhs, Seq("block_key", "i", "j"))
-      .where(col("i") < col("j") || col("l_mid") < col("r_mid"))
-      .select(least(col("l_mid"), col("r_mid")).as("a_id"),
-              greatest(col("l_mid"), col("r_mid")).as("b_id"))
+    def hotPairs = {
+      val hot = rows.where(col("key_n") > tau && col("key_n") <= starThreshold)
+        .withColumn("n_groups", ceil(col("key_n").cast("double") / tau).cast("int"))
+        .withColumn("grp", pmod(xxhash64(col("mid")), col("n_groups")).cast("int"))
+      // Row in salt group g is the LEFT input of reducers (g, j), j in
+      // [g, G-1], and the RIGHT input of reducers (i, g), i in [0, g].
+      val lhs = hot
+        .withColumn("j", explode(sequence(col("grp"), col("n_groups") - 1)))
+        .select(col("block_key"), col("grp").as("i"), col("j"), col("mid").as("l_mid"))
+      val rhs = hot
+        .withColumn("i", explode(sequence(lit(0), col("grp"))))
+        .select(col("block_key"), col("i"), col("grp").as("j"), col("mid").as("r_mid"))
+      lhs.join(rhs, Seq("block_key", "i", "j"))
+        .where(col("i") < col("j") || col("l_mid") < col("r_mid"))
+        .select(least(col("l_mid"), col("r_mid")).as("a_id"),
+                greatest(col("l_mid"), col("r_mid")).as("b_id"))
+    }
 
     // Star regime: members × the starK min-id hub rows of the block.
     // Hubs are few (starK per oversized key) → broadcast hash join, no
     // shuffle skew at all on the giant side.
-    val giant = rows.where(col("key_n") > starThreshold)
-      .select(col("block_key"), col("mid"))
-    val hubs = starHubs(giant, starK)
-    val starPairs = giant.join(broadcast(hubs), Seq("block_key"))
-      .where(col("mid") =!= col("hub_id"))
-      .select(least(col("mid"), col("hub_id")).as("a_id"),
-              greatest(col("mid"), col("hub_id")).as("b_id"))
+    def starPairs = {
+      val giant = rows.where(col("key_n") > starThreshold)
+        .select(col("block_key"), col("mid"))
+      val hubs = starHubs(giant, starK)
+      giant.join(broadcast(hubs), Seq("block_key"))
+        .where(col("mid") =!= col("hub_id"))
+        .select(least(col("mid"), col("hub_id")).as("a_id"),
+                greatest(col("mid"), col("hub_id")).as("b_id"))
+    }
 
     // The same pair can arrive via several block keys (exact + LSH bands)
     // and, on the hot/star paths, in either order — dedupe on the id pair.
-    coldPairs.union(hotPairs).union(starPairs)
+    populated(maxN, tau, starThreshold)(coldPairs, hotPairs, starPairs)
       .dropDuplicates("a_id", "b_id")
   }
+
+  /** Union of the branches of the regimes the largest block reaches. */
+  private def populated(maxN: Long, tau: Int, starThreshold: Int)(
+      cold: DataFrame, hot: => DataFrame, star: => DataFrame): DataFrame =
+    Seq(Some(cold), Option.when(maxN > tau)(hot), Option.when(maxN > starThreshold)(star))
+      .flatten.reduce(_ union _)
 
   /** Block purging (meta-blocking): a mention's nm:, ent: and all 16 LSH
     * band keys are often IDENTICAL member sets (e.g. every mention of one
@@ -151,11 +167,10 @@ object Blocking {
     * block-key count. Pair-set equality with the naive join is
     * property-tested (BlockingSpec). Returns the purged (block_key, mid,
     * key_n) member rows — singleton and beyond-`blockMaxSize` keys
-    * dropped — persisted (several regime branches consume it; it is the
-    * purged key table, far smaller than the pair output) and registered
-    * with CacheTracker so the pipeline unpersists it once the stage
-    * output is materialized. */
-  private def purgedRows(keyed: DataFrame, blockMaxSize: Int): DataFrame = {
+    * dropped — as a checkpoint leaf registered with CacheTracker (several
+    * regime branches consume it; it is far smaller than the pair output),
+    * and the largest `key_n` (0 if none), observed by the same job. */
+  private def purgedRows(keyed: DataFrame, blockMaxSize: Int): (DataFrame, Long) = {
     val sigs = keyed.groupBy("block_key").agg(
       count(lit(1)).as("key_n"),
       sum(pmod(xxhash64(col("mid")), lit(1000000007L))).as("sig1"),
@@ -165,9 +180,10 @@ object Blocking {
       .groupBy("key_n", "sig1", "sig2")
       .agg(min("block_key").as("block_key"))
       .select("block_key", "key_n")
-    graft.CacheTracker.register(
-      keyed.join(repKeys, Seq("block_key"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val observed = keyed.join(repKeys, Seq("block_key"))
+      .observe("purged_rows", coalesce(max(col("key_n")), lit(0L)).as("max_n"))
+    val rows = graft.CacheTracker.leaf(observed)
+    (rows, observed.queryExecution.observedMetrics("purged_rows").getLong(0))
   }
 
   /** K smallest ids per giant block via the partial-aggregating TopKAgg
@@ -207,6 +223,7 @@ object Blocking {
     *  - n > starThreshold: delta members × the block's full hub set,
     *    plus all members × delta hubs (rare: a delta id entering the
     *    K-min hub set) — exactly the delta-touching star pairs.
+    * As in [[candidatePairs]], only regimes holding a block are planned.
     */
   def candidatePairsDelta(keyed: DataFrame, deltaIds: DataFrame,
                           tau: Int = 512,
@@ -214,7 +231,7 @@ object Blocking {
                           starThreshold: Int = 2048,
                           starK: Int = 3): DataFrame = {
     require(tau <= starThreshold, "regimes: cold <= tau < triangle <= starThreshold < star")
-    val rows = purgedRows(keyed, blockMaxSize)
+    val (rows, maxN) = purgedRows(keyed, blockMaxSize)
     val rowsD = graft.CacheTracker.register(
       rows.join(deltaIds, Seq("mid"), "left_semi")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -227,37 +244,41 @@ object Blocking {
       .select(least(col("l_mid"), col("r_mid")).as("a_id"),
               greatest(col("l_mid"), col("r_mid")).as("b_id"))
 
-    val nGroups = ceil(col("key_n").cast("double") / tau).cast("int")
-    val hot = rows.where(col("key_n") > tau && col("key_n") <= starThreshold)
-      .select(col("block_key"),
-              pmod(xxhash64(col("mid")), nGroups).cast("int").as("grp"),
-              col("mid").as("r_mid"))
-    val hotD = rowsD.where(col("key_n") > tau && col("key_n") <= starThreshold)
-      .select(col("block_key"),
-              explode(sequence(lit(0), nGroups - 1)).as("grp"),
-              col("mid").as("l_mid"))
-    val hotPairs = hotD.join(hot, Seq("block_key", "grp"))
-      .where(col("l_mid") =!= col("r_mid"))
-      .select(least(col("l_mid"), col("r_mid")).as("a_id"),
-              greatest(col("l_mid"), col("r_mid")).as("b_id"))
+    def hotPairs = {
+      val nGroups = ceil(col("key_n").cast("double") / tau).cast("int")
+      val hot = rows.where(col("key_n") > tau && col("key_n") <= starThreshold)
+        .select(col("block_key"),
+                pmod(xxhash64(col("mid")), nGroups).cast("int").as("grp"),
+                col("mid").as("r_mid"))
+      val hotD = rowsD.where(col("key_n") > tau && col("key_n") <= starThreshold)
+        .select(col("block_key"),
+                explode(sequence(lit(0), nGroups - 1)).as("grp"),
+                col("mid").as("l_mid"))
+      hotD.join(hot, Seq("block_key", "grp"))
+        .where(col("l_mid") =!= col("r_mid"))
+        .select(least(col("l_mid"), col("r_mid")).as("a_id"),
+                greatest(col("l_mid"), col("r_mid")).as("b_id"))
+    }
 
-    val giant = rows.where(col("key_n") > starThreshold)
-      .select(col("block_key"), col("mid"))
-    val giantD = rowsD.where(col("key_n") > starThreshold)
-      .select(col("block_key"), col("mid"))
-    val hubs = graft.CacheTracker.register(
-      starHubs(giant, starK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val hubsD = hubs.join(deltaIds.withColumnRenamed("mid", "hub_id"),
-                          Seq("hub_id"), "left_semi")
-    val starPairs = giantD.join(broadcast(hubs), Seq("block_key"))
-      .unionByName(giant.join(broadcast(hubsD), Seq("block_key"))
-        .select(col("hub_id"), col("block_key"), col("mid")))
-      .where(col("mid") =!= col("hub_id"))
-      .select(least(col("mid"), col("hub_id")).as("a_id"),
-              greatest(col("mid"), col("hub_id")).as("b_id"))
+    def starPairs = {
+      val giant = rows.where(col("key_n") > starThreshold)
+        .select(col("block_key"), col("mid"))
+      val giantD = rowsD.where(col("key_n") > starThreshold)
+        .select(col("block_key"), col("mid"))
+      val hubs = graft.CacheTracker.register(
+        starHubs(giant, starK)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val hubsD = hubs.join(deltaIds.withColumnRenamed("mid", "hub_id"),
+                            Seq("hub_id"), "left_semi")
+      giantD.join(broadcast(hubs), Seq("block_key"))
+        .unionByName(giant.join(broadcast(hubsD), Seq("block_key"))
+          .select(col("hub_id"), col("block_key"), col("mid")))
+        .where(col("mid") =!= col("hub_id"))
+        .select(least(col("mid"), col("hub_id")).as("a_id"),
+                greatest(col("mid"), col("hub_id")).as("b_id"))
+    }
 
-    coldPairs.union(hotPairs).union(starPairs)
+    populated(maxN, tau, starThreshold)(coldPairs, hotPairs, starPairs)
       .dropDuplicates("a_id", "b_id")
   }
 

@@ -51,9 +51,9 @@ object Clustering {
       // Collect from the CHECKPOINTED frame, not `canonical` — collecting
       // canonical would re-run the whole upstream (blocking + scoring or
       // the q16 tokenize self-join) a second time. driverCC's collect is
-      // eager, so unpersisting after it returns is safe.
+      // eager, so releasing the leaf after it returns is safe.
       val out = driverCC(edges)
-      edges.unpersist()
+      graft.CacheTracker.release(edges)
       return out
     }
 
@@ -64,13 +64,14 @@ object Clustering {
         checkpointWithSignature(smallStar(largeStar(edges)), s"cc_round_$iter")
       converged = sig == prevSig
       prevSig = sig
-      edges.unpersist()
+      graft.CacheTracker.release(edges)
       edges = next
       iter += 1
     }
 
     // After convergence every edge is (node, root). Roots point to
     // themselves implicitly; emit them explicitly.
+    graft.CacheTracker.register(edges) // read lazily below: the caller's scope releases it
     val nodes = edges.select(col("src").as("node"), col("dst").as("cluster_id"))
     val roots = edges.select(col("dst").as("node")).distinct()
       .join(edges.select(col("src")).distinct(), col("node") === col("src"), "left_anti")

@@ -183,10 +183,7 @@ object Coref {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val bloomBc = spark.sparkContext.broadcast(
-      MentionDetect.dictKeyBloom(dictDf, expectedDictKeys, bloomFpp))
-    val masksBc = spark.sparkContext.broadcast(
-      MentionDetect.dictFirstTokenMasks(dictDf))
+    val (bloomBc, masksBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
 
     val convForms = MentionDetect.bloomSurvivorForms(turns, bloomBc, masksBc)
       .select(col("conv_id"), col("form")).distinct()

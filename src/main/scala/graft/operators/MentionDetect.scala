@@ -331,9 +331,7 @@ object MentionDetect {
     val spark = turns.sparkSession
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val bloomBc = spark.sparkContext.broadcast(
-      dictKeyBloom(dictDf, expectedDictKeys, bloomFpp))
-    val masksBc = spark.sparkContext.broadcast(dictFirstTokenMasks(dictDf))
+    val (bloomBc, masksBc) = dictSketches(dictDf, expectedDictKeys, bloomFpp)
 
     val cands = bloomSurvivorForms(turns, bloomBc, masksBc)
 
@@ -362,7 +360,7 @@ object MentionDetect {
     * only survivors leave the mapper, deduped per turn, as slim
     * (conv_id, turn_idx, form) rows. Shared by [[runJoined]] (turn-level
     * regroup) and Coref.detectAndInheritJoined (conv-level regroup).
-    * `masksBc` (from [[dictFirstTokenMasks]]) prunes span enumeration the
+    * `masksBc` (from [[dictSketches]]) prunes span enumeration the
     * same way the broadcast path's [[firstTokenMasks]] does. */
   private[operators] def bloomSurvivorForms(
       turns: Dataset[Turn],
@@ -376,48 +374,45 @@ object MentionDetect {
     }.toDF("conv_id", "turn_idx", "form")
   }
 
-  /** First-token length masks of a DISTRIBUTED dictionary — the joined
-    * paths' analogue of [[firstTokenMasks]]: one slim aggregation over
-    * the dimension table's key column yields (lowercased first token →
-    * bitmask of entry token counts), collected and broadcast beside the
-    * Bloom. Size is bounded by DISTINCT FIRST TOKENS (≪ keys; a few MB
-    * at a 10M-key dictionary — the Bloom's own weight class), and the
-    * aggregation is map-side partial. Pruning with it is a SUPERSET
-    * filter exactly like the Bloom: every true dictionary key's span has
-    * its first token + length bit present, so the survivor set after the
-    * dictionary join — hence the mention output — is unchanged; the win
-    * is skipping the O(MaxNgram · tokens) span builds + cascade + Bloom
-    * probes at every position whose token starts no dictionary key. */
-  private[graft] def dictFirstTokenMasks(dictDf: Dataset[DictEntry]): Map[String, Int] = {
-    import org.apache.spark.sql.functions._
-    dictDf.toDF()
-      .select(lower(substring_index(col("mention"), " ", 1)).as("first"),
-              size(split(col("mention"), " ")).as("n"))
-      .where(col("n") <= MaxNgram && col("n") >= 1)
-      .groupBy("first")
-      .agg(bit_or(expr("shiftleft(1, n - 1)")).as("mask"))
-      .collect()
-      .map(r => r.getString(0) -> r.getInt(1))
-      .toMap
-  }
-
-  /** Bloom filter over the dictionary's key column, shared by every
-    * join-based path (batch, conv-level, streaming). A sentinel "" row is
-    * unioned in so an EMPTY dictionary yields an empty-but-valid filter
-    * ("" is never a probe — probe forms are built from non-empty tokens);
-    * Spark's stat.bloomFilter NPEs on zero input rows otherwise.
-    * `expectedDictKeys` <= 0 ⇒ one exact count scan for sizing. */
-  private[graft] def dictKeyBloom(dictDf: Dataset[DictEntry],
+  /** The two broadcast sketches of a DISTRIBUTED dictionary that every
+    * join-based path (batch, conv-level, streaming) probes, built in ONE pass
+    * over its key column — one job, no shuffle: a Bloom filter over the
+    * keys (`expectedDictKeys` <= 0 ⇒ one exact count scan for sizing), and
+    * first-token length masks, the analogue of [[firstTokenMasks]]
+    * (lowercased first token → bitmask of entry token counts; bounded by
+    * DISTINCT FIRST TOKENS, a few MB at 10M keys). Both are SUPERSET
+    * filters: every true key's span passes both, so the survivor set after
+    * the dictionary join — hence the mention output — is unchanged; the
+    * win is skipping span builds + cascade + Bloom probes at positions
+    * whose token starts no key. */
+  private[graft] def dictSketches(dictDf: Dataset[DictEntry],
                                   expectedDictKeys: Long,
-                                  fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+                                  fpp: Double)
+      : (Broadcast[org.apache.spark.util.sketch.BloomFilter], Broadcast[Map[String, Int]]) = {
     val spark = dictDf.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val nKeys = 1L + (if (expectedDictKeys > 0) expectedDictKeys
                       else math.max(dictDf.count(), 1L))
-    dictDf.toDF().select(col("mention"))
-      .unionByName(Seq("").toDF("mention"))
-      .stat.bloomFilter("mention", nKeys, fpp)
+    val zero = (org.apache.spark.util.sketch.BloomFilter.create(nKeys, fpp),
+                scala.collection.mutable.HashMap.empty[String, Int])
+    val (bloom, masks) = dictDf.toDF().select(col("mention")).as[String].rdd
+      .aggregate(zero)({ case (acc @ (b, m), key) =>
+        if (key != null) {
+          b.putString(key)
+          val n = 1 + key.count(_ == ' ')
+          if (n <= MaxNgram) {
+            val first = key.takeWhile(_ != ' ').toLowerCase
+            m(first) = m.getOrElse(first, 0) | (1 << (n - 1))
+          }
+        }
+        acc
+      }, { case (acc @ (b1, m1), (b2, m2)) =>
+        b1.mergeInPlace(b2)
+        m2.foreach { case (k, v) => m1(k) = m1.getOrElse(k, 0) | v }
+        acc
+      })
+    (spark.sparkContext.broadcast(bloom), spark.sparkContext.broadcast(masks.toMap))
   }
 
   /** The deduped candidate dictionary-key forms of ONE turn: every

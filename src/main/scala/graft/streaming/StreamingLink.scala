@@ -215,12 +215,9 @@ object StreamingLink {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val bloomBc = spark.sparkContext.broadcast(
-      MentionDetect.dictKeyBloom(dictDf, expectedDictKeys, bloomFpp))
     // first-token length masks prune the span enumeration exactly as in
     // the batch joined path (superset filter — survivor set unchanged)
-    val masksBc = spark.sparkContext.broadcast(
-      MentionDetect.dictFirstTokenMasks(dictDf))
+    val (bloomBc, masksBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
     val probes = turns.flatMap { t =>
       val text = if (t.text == null) "" else t.text
       val fs = MentionDetect.probeForms(text, bloomBc.value, masksBc.value).toSeq

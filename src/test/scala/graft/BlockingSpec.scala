@@ -111,6 +111,57 @@ class BlockingSpec extends SparkSpec {
     }
   }
 
+  /** Naive per-block pair enumeration under the regime rules: a block of
+    * n ≤ starThreshold rows keeps every pair, a star block keeps
+    * member × starK-min-hub pairs, a block over blockMaxSize keeps none. */
+  def regimePairs(rows: Seq[(String, String)], starThreshold: Int,
+                  blockMaxSize: Int, starK: Int): Set[(String, String)] =
+    rows.groupBy(_._1).values.flatMap { block =>
+      val ids = block.map(_._2).sorted
+      if (ids.size > blockMaxSize) Nil
+      else if (ids.size > starThreshold)
+        for (h <- ids.take(starK); m <- ids if m != h) yield if (h < m) (h, m) else (m, h)
+      else for (i <- ids.indices; j <- i + 1 until ids.size) yield (ids(i), ids(j))
+    }.toSet
+
+  test("only populated regimes are planned; pairs equal the naive regime pairs") {
+    // every subset of {cold, triangle, star}, at small and at default
+    // thresholds; the largest block is also duplicated under a second key
+    // (purge bait), and singleton keys are always present
+    for ((tau, starThreshold) <- Seq((8, 30), (512, 2048));
+         mask <- 0 until 8) {
+      val (cold, tri, star) = ((mask & 1) != 0, (mask & 2) != 0, (mask & 4) != 0)
+      val rng = new scala.util.Random(mask * 101 + tau)
+      val pool = (0 until starThreshold + 64).map(i => f"m$i%05d")
+      def block(key: String, n: Int) = rng.shuffle(pool).take(n).map(m => (key, m))
+      val blocks =
+        (if (cold) (0 until 12).map(k => block(s"c$k", 2 + rng.nextInt(math.min(tau, 40) - 1)))
+         else Nil) ++
+        (if (tri) Seq(block("tri", tau + 1 + rng.nextInt(math.min(starThreshold - tau, 64))))
+         else Nil) ++
+        (if (star) Seq(block("star", starThreshold + 1 + rng.nextInt(32))) else Nil)
+      val dup = blocks.sortBy(-_.size).headOption.toSeq.map(_.map { case (_, m) => ("dup", m) })
+      val singles = (0 until 5).map(k => (s"single$k", pool(rng.nextInt(pool.size))))
+      val rows = (blocks ++ dup).flatten ++ singles
+      val keyed = rows.toDF("block_key", "mid").cache()
+      val deltaSet = pool.filter(_ => rng.nextDouble() < 0.2).toSet
+      val expected = regimePairs(rows, starThreshold, 100000, 3)
+      val ctx = s"tau=$tau cold=$cold triangle=$tri star=$star"
+
+      val pairs = Blocking.candidatePairs(keyed, tau, 100000, starThreshold, 3)
+      assert(pairs.as[(String, String)].collect().toSet == expected, ctx)
+      val plan = pairs.queryExecution.analyzed.toString
+      // the triangle branch is planned when some block exceeds tau
+      assert(plan.contains("explode") == (tri || star), ctx)
+      assert(plan.contains("hub_id") == star, ctx)
+      val delta = Blocking.candidatePairsDelta(keyed, deltaSet.toSeq.toDF("mid"),
+                                               tau, 100000, starThreshold, 3)
+      assert(delta.as[(String, String)].collect().toSet ==
+               expected.filter { case (a, b) => deltaSet(a) || deltaSet(b) }, ctx)
+      keyed.unpersist()
+    }
+  }
+
   test("candidatePairsDelta: a delta id inside the star hub set pairs with all members") {
     val n = 40
     val keyed = (0 until n).map(i => ("giant", f"m$i%05d")).toDF("block_key", "mid")

@@ -1,0 +1,95 @@
+package graft
+
+import graft.operators.MentionDetect
+import graft.sources.TranscriptGen
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CoGroupExec, MapGroupsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Plan shape of the batch flagship. Stage boundaries are lineage-cut
+  * leaves (the lineage rule on [[Pipeline]]), so one action per run
+  * executes — and renders, and analyses — the detection plan; a run's job
+  * count repeats; and a run leaves nothing cached but its output. */
+class PlanBoundSpec extends SparkSpec {
+  import spark.implicits._
+
+  val cfg = TranscriptGen.GenConfig(nEntities = 120, nConvs = 150)
+  lazy val turns = TranscriptGen.transcripts(spark, cfg).cache()
+  lazy val dict = TranscriptGen.dict(cfg)
+  lazy val vecs = TranscriptGen.entityVectors(cfg, MentionDetect.CtxDim)
+  lazy val dictDf = dict.values.toSeq.toDS()
+  lazy val vecDf = vecs.toSeq.toDF("entity", "vec")
+
+  private val runs: Seq[(String, () => DataFrame)] = Seq(
+    "run" -> (() => Pipeline.run(turns, dict, vecs)),
+    "runJoined" -> (() => Pipeline.runJoined(turns, dictDf, vecDf)))
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Detection operators in `plan`, counting those inside cached
+    * relations too: an InMemoryRelation carries its whole lineage into
+    * every plan that reads it. */
+  private def detectOps(plan: SparkPlan): Int =
+    Plans.collect(plan) { case _: MapGroupsExec | _: CoGroupExec => 1 }.size +
+      Plans.collect(plan) { case s: InMemoryTableScanExec =>
+        detectOps(s.relation.cachedPlan) }.sum
+
+  /** Executed plans of the SQL actions `body` runs, and its job count. */
+  private def observe(body: => DataFrame): (Seq[SparkPlan], Int) = {
+    turns.count()
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    spark.listenerManager.register(qel)
+    sc.addSparkListener(jl)
+    try { body; ListenerBus.drain(sc) }
+    finally { spark.listenerManager.unregister(qel); sc.removeSparkListener(jl) }
+    (plans.toArray(Array.empty[SparkPlan]).toSeq, jobs.get)
+  }
+
+  test("the detection plan appears in the executed plan of exactly one action") {
+    for ((name, run) <- runs) {
+      val (plans, _) = observe(run())
+      val withDetect = plans.map(detectOps).count(_ > 0)
+      assert(plans.size > 1, name)
+      assert(withDetect == 1, s"$name: ${plans.map(detectOps)}")
+    }
+  }
+
+  test("identical runs launch the same, bounded number of jobs") {
+    // bounds: the counts on this corpus with every stage a leaf and only
+    // the populated blocking regimes planned
+    for ((name, run, bound) <- Seq(("run", runs(0)._2, 25), ("runJoined", runs(1)._2, 41))) {
+      val (_, first) = observe(run())
+      val (_, second) = observe(run())
+      assert(first == second, s"$name: $first then $second jobs")
+      assert(first <= bound, s"$name: $first jobs")
+    }
+  }
+
+  test("a run leaves only its output's RDD persisted") {
+    val sc = spark.sparkContext
+    for ((name, run) <- runs) {
+      turns.count()
+      val before = sc.getPersistentRDDs.keySet
+      val out = run()
+      val added = sc.getPersistentRDDs.keySet -- before
+      val outRdd = CacheTracker.leafRdd(out).map(_.id)
+      assert(outRdd.nonEmpty, name)
+      assert(added == outRdd.toSet, name)
+    }
+  }
+}
