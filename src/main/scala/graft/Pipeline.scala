@@ -65,10 +65,11 @@ object Pipeline {
       * (~10M surfaces × top-K candidates, several GB) and a
       * Wikipedia2Vec-scale vector table (tens of GB) fit in neither a
       * driver Map nor a broadcast. Detection ∪ inheritance runs through
-      * Coref.detectAndInheritJoined (Bloom-prefiltered candidate explode,
-      * dictionary equi-join, exact per-conversation mini-dictionaries and
-      * mini vector maps, identical `resolve`), or — with coref off —
-      * MentionDetect.runJoinedFull. Property-equal to
+      * Coref.detectAndInheritJoined (one Bloom probe of the slim turn
+      * projection, one dictionary join whose hits and candidate vectors
+      * regroup once with the turns into exact per-conversation
+      * mini-dictionaries and mini vector maps, identical `resolve`), or
+      * — with coref off — MentionDetect.runJoinedFull. Property-equal to
       * [[Broadcast]] on the same inputs (JoinedDetectSpec).
       *
       * `vecDf` schema: (entity: string, vec: array<float>). Pass

@@ -122,18 +122,21 @@ object Coref {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val bcId = dictBc.id
-    val slimTurns = turns.select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[(String, Int, String)]
-    slimTurns.groupByKey(_._1).flatMapGroups { (convId, it) =>
-      val dict = dictBc.value
-      val masks = Some(MentionDetect.cachedMasks(dict, bcId))
-      val ev: String => Array[Float] =
-        e => entityVecBc.value.getOrElse(e, Array.empty[Float])
-      val ts = it.map { case (_, idx, text) =>
-        Turn(convId, idx, null, text, null, null)
-      }.toArray
-      detectAndInheritOfConv(convId, ts, dict, ev, masks, maxSeen).iterator
-    }
+    // grouped on the conv_id column, not by a key function: no
+    // AppendColumns stage, and the turn side generates the same classes as
+    // detectAndInheritJoined's, so the two paths share codegen cache entries
+    turns.select(col("conv_id"), col("turn_idx"), col("text"))
+      .groupBy(col("conv_id")).as[String, (String, Int, String)]
+      .flatMapGroups { (convId, it) =>
+        val dict = dictBc.value
+        val masks = Some(MentionDetect.cachedMasks(dict, bcId))
+        val ev: String => Array[Float] =
+          e => entityVecBc.value.getOrElse(e, Array.empty[Float])
+        val ts = it.map { case (_, idx, text) =>
+          Turn(convId, idx, null, text, null, null)
+        }.toArray
+        detectAndInheritOfConv(convId, ts, dict, ev, masks, maxSeen).iterator
+      }
   }
 
   /** [[detectAndInherit]] with the p(e|m) dictionary as a DISTRIBUTED
@@ -141,17 +144,23 @@ object Coref {
     * (SURVEY D3; round-3 VERDICT "What's missing" #1: the join path
     * existed as an operator but coref still demanded a driver Map).
     *
-    * Shape (the conv-level twin of MentionDetect.runJoined's 3 shuffles):
+    * Shape: one probe pass, one dictionary join, one regroup.
     *
-    *  1. Map-only: every ≤MaxNgram-token span of every turn probes its
-    *     cascade forms against a broadcast Bloom of dictionary keys;
-    *     survivors leave as slim (conv_id, form) rows, deduped per conv.
+    *  1. Probe (map-only, MentionDetect.bloomSurvivorForms): every
+    *     ≤MaxNgram-token span of the slim (conv_id, turn_idx, text)
+    *     projection probes its cascade forms against a broadcast Bloom of
+    *     dictionary keys; survivors leave as (conv_id, form) rows, deduped
+    *     per conversation.
     *  2. Equi-join survivors against the dictionary on its key (one row
     *     per key on the dictionary side — no pair explosion; AQE skew
-    *     handles Zipf-hot surfaces), regroup per conv_id: each
-    *     conversation's MINI-DICTIONARY.
-    *  3. Cogroup slim turns with the mini-dictionaries on conv_id and run
-    *     the IDENTICAL [[detectAndInheritOfConv]] in-group.
+    *     handles Zipf-hot surfaces) and explode each hit into one slim
+    *     side row per candidate entity, the hit itself riding on its first
+    *     candidate's row (a candidate-less hit keeps one row). With
+    *     `vecDf`, the side rows left-join it on entity, so each row
+    *     carries its entity's vector.
+    *  3. Cogroup slim turns with the side rows on the conv_id column: each
+    *     group builds its MINI-DICTIONARY and mini vector map and runs the
+    *     IDENTICAL [[detectAndInheritOfConv]].
     *
     * Exactness (not approximate): every form the in-group code probes —
     * detection candidates AND the inheritance rejector's grams — is built
@@ -161,19 +170,16 @@ object Coref {
     * true entry; a form that is NOT a dictionary key cannot be in the
     * mini-dictionary (Bloom false positives die in the inner join). The
     * mini-dictionary therefore answers every probe exactly as the full
-    * broadcast Map would — property-tested in JoinedDetectSpec.
-    *
-    * Entity vectors (`vecDf`: entity, vec) ride along the same way: the
-    * candidate entities of each conversation's dictionary hits are joined
-    * to `vecDf` and regrouped per conv_id next to its mini-dictionary, so
-    * the in-group code resolves with a mini vector map exactly as the
-    * broadcast path does with the full one (every candidate any mention
-    * of the conversation can carry — detected or inherited — comes from
-    * those hits). The mention kernel therefore runs once; re-resolving
-    * afterwards (MentionDetect.resolveJoined) would evaluate it twice,
-    * once per side of its self-join. With `vecDf = None` resolution runs
-    * vector-less (span selection, norms, candidates and ctx embeddings do
-    * not depend on entity vectors) and callers may re-resolve. */
+    * broadcast Map would — property-tested in JoinedDetectSpec. Every
+    * candidate any mention of the conversation can carry (detected or
+    * inherited) comes from those hits, so the mini vector map resolves
+    * exactly as the broadcast path's full one; an entity missing from
+    * `vecDf` gets the empty vector. The mention kernel therefore runs
+    * once; re-resolving afterwards (MentionDetect.resolveJoined) would
+    * evaluate it twice, once per side of its self-join. With
+    * `vecDf = None` resolution runs vector-less (span selection, norms,
+    * candidates and ctx embeddings do not depend on entity vectors) and
+    * callers may re-resolve. */
   def detectAndInheritJoined(turns: Dataset[Turn], dictDf: Dataset[DictEntry],
                              expectedDictKeys: Long = 0L,
                              bloomFpp: Double = 0.01,
@@ -182,50 +188,38 @@ object Coref {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
     val (bloomBc, masksBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
 
     val convForms = MentionDetect.bloomSurvivorForms(turns, bloomBc, masksBc)
       .select(col("conv_id"), col("form")).distinct()
-    val hits = convForms.join(dictDf.toDF(), convForms("form") === dictDf("mention"))
-    val dicts = hits.groupBy("conv_id")
-      .agg(collect_list(struct(col("mention"), col("lower"),
-                               col("freq"), col("candidates"))).as("hits"))
-    val convDicts = (vecDf match {
-      case Some(v) =>
-        val convVecs = hits
-          .select(col("conv_id"), explode(col("candidates.entity")).as("entity"))
-          .distinct()
-          .join(v.select(col("entity"), col("vec")), "entity")
-          .groupBy("conv_id")
-          .agg(collect_list(struct(col("entity").as("_1"), col("vec").as("_2"))).as("vecs"))
-        dicts.join(convVecs, Seq("conv_id"), "left")
-      // no vector table: an all-null column of the same type, so every
-      // mini vector map is empty and resolution runs vector-less
-      case None => dicts.withColumn("vecs", lit(null).cast(ArrayType(StructType(Seq(
-        StructField("_1", StringType), StructField("_2", ArrayType(FloatType)))))))
-    }).as[(String, Seq[DictEntry], Seq[(String, Array[Float])])]
+    val side = convForms.join(dictDf.toDF(), convForms("form") === dictDf("mention"))
+      .select(col("conv_id"), struct(col("mention"), col("lower"), col("freq"),
+                                     col("candidates")).as("hit"),
+              posexplode_outer(col("candidates.entity")).as(Seq("pos", "entity")))
+      .select(col("conv_id"), when(coalesce(col("pos"), lit(0)) === 0, col("hit")).as("hit"),
+              col("entity"))
+    val sideVecs = vecDf match {
+      case Some(v) => side.join(v.select(col("entity"), col("vec")), Seq("entity"), "left")
+      case None => side.withColumn("vec", lit(null).cast("array<float>"))
+    }
 
-    val slimTurns = turns.select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[(String, Int, String)]
-    slimTurns.groupByKey(_._1)
-      .cogroup(convDicts.groupByKey(_._1)) { (convId, ts, ds) =>
-        val groups = ds.toArray
-        val mini: MentionDetect.Dict = groups.iterator.flatMap(_._2)
-          .map(h => h.mention -> h).toMap
-        if (mini.isEmpty) Iterator.empty
-        else {
-          val vecs: Map[String, Array[Float]] = groups.iterator
-            .flatMap(g => Option(g._3).getOrElse(Nil))
-            .map { case (e, v) => e -> (if (v == null) Array.empty[Float] else v) }
-            .toMap
-          val ev: String => Array[Float] = e => vecs.getOrElse(e, Array.empty[Float])
-          val turnArr = ts.map { case (_, idx, text) =>
-            Turn(convId, idx, null, text, null, null)
-          }.toArray
-          detectAndInheritOfConv(convId, turnArr, mini, ev,
-                                 maxSeen = maxSeen).iterator
-        }
+    turns.select(col("conv_id"), col("turn_idx"), col("text"))
+      .groupBy(col("conv_id")).as[String, (String, Int, String)]
+      .cogroup(sideVecs.select(col("conv_id"), col("hit"), col("entity"), col("vec"))
+        .groupBy(col("conv_id")).as[String, (String, DictEntry, String, Array[Float])]) {
+        (convId, ts, sideRows) =>
+          val rows = sideRows.toArray
+          val mini: MentionDetect.Dict =
+            rows.collect { case (_, h, _, _) if h != null => h.mention -> h }.toMap
+          if (mini.isEmpty) Iterator.empty
+          else {
+            val vecs = rows.collect { case (_, _, e, v) if v != null => e -> v }.toMap
+            val turnArr = ts.map { case (_, idx, text) =>
+              Turn(convId, idx, null, text, null, null)
+            }.toArray
+            detectAndInheritOfConv(convId, turnArr, mini,
+              e => vecs.getOrElse(e, Array.empty[Float]), maxSeen = maxSeen).iterator
+          }
       }
   }
 

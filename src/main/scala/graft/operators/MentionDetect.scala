@@ -359,19 +359,22 @@ object MentionDetect {
     * [[cascadeForms]] against a broadcast Bloom of the dictionary keys;
     * only survivors leave the mapper, deduped per turn, as slim
     * (conv_id, turn_idx, form) rows. Shared by [[runJoined]] (turn-level
-    * regroup) and Coref.detectAndInheritJoined (conv-level regroup).
-    * `masksBc` (from [[dictSketches]]) prunes span enumeration the
-    * same way the broadcast path's [[firstTokenMasks]] does. */
+    * regroup) and Coref.detectAndInheritJoined (conv-level regroup). The
+    * probe reads the slim (conv_id, turn_idx, text) projection, so the
+    * scan never decodes `role`, `tool` or `ts`. `masksBc` (from
+    * [[dictSketches]]) prunes span enumeration the same way the broadcast
+    * path's [[firstTokenMasks]] does. */
   private[operators] def bloomSurvivorForms(
       turns: Dataset[Turn],
       bloomBc: Broadcast[org.apache.spark.util.sketch.BloomFilter],
-      masksBc: Broadcast[Map[String, Int]] = null): DataFrame = {
+      masksBc: Broadcast[Map[String, Int]]): DataFrame = {
     val spark = turns.sparkSession
     import spark.implicits._
-    turns.flatMap { t =>
-      val masks = if (masksBc == null) null else masksBc.value
-      probeForms(t.text, bloomBc.value, masks).map(f => (t.conv_id, t.turn_idx, f))
-    }.toDF("conv_id", "turn_idx", "form")
+    import org.apache.spark.sql.functions.col
+    turns.select(col("conv_id"), col("turn_idx"), col("text")).as[(String, Int, String)]
+      .flatMap { case (conv, turn, text) =>
+        probeForms(text, bloomBc.value, masksBc.value).map(f => (conv, turn, f))
+      }.toDF("conv_id", "turn_idx", "form")
   }
 
   /** The two broadcast sketches of a DISTRIBUTED dictionary that every
@@ -423,28 +426,22 @@ object MentionDetect {
   private[graft] def probeForms(
       text: String,
       bloom: org.apache.spark.util.sketch.BloomFilter,
-      masks: Map[String, Int] = null): Iterator[String] = {
+      masks: Map[String, Int]): Iterator[String] = {
     val toks = tokenizeCased(if (text == null) "" else text)
     val n = toks.length
     // per-position length mask (one hash probe per token), the same
     // pruning `detect` does: span (i, size) is enumerated only when some
-    // dictionary key of that token count starts with toks(i). masks ==
-    // null (no sketch supplied) degrades to probe-everything.
-    val posMask =
-      if (masks == null) null
-      else {
-        val a = new Array[Int](n)
-        var p = 0
-        while (p < n) { a(p) = masks.getOrElse(toks(p).toLowerCase, 0); p += 1 }
-        a
-      }
+    // dictionary key of that token count starts with toks(i)
+    val posMask = new Array[Int](n)
+    var p = 0
+    while (p < n) { posMask(p) = masks.getOrElse(toks(p).toLowerCase, 0); p += 1 }
     val forms = scala.collection.mutable.HashSet.empty[String]
     var size = 1
     while (size <= MaxNgram) {
       val bit = 1 << (size - 1)
       var i = 0
       while (i + size <= n) {
-        if (posMask == null || (posMask(i) & bit) != 0) {
+        if ((posMask(i) & bit) != 0) {
           val raw =
             if (size == 1) toks(i)
             else {

@@ -143,19 +143,35 @@ object TableIO {
     * lineages are independent — overlapping writes that share an
     * unmaterialized lineage would recompute it per thread. `threads = 1`
     * degrades to the serial shape (the A/B arm CompactBench times).
+    * The first failed write fails the call at once: the sibling writes
+    * are interrupted and their Spark jobs cancelled (by a per-call job
+    * tag), and the write's own exception is rethrown.
     * Specs: (df, tableName, path, bucketKeys, buckets); returns the
     * catalog-backed frames in spec order. */
   def writeBucketedAll(specs: Seq[(DataFrame, String, String, Seq[String], Int)],
                        threads: Int = 3): Seq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, TimeUnit}
+    lazy val sc = specs.head._1.sparkSession.sparkContext
+    val tag = s"writeBucketedAll-${java.util.UUID.randomUUID}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, threads))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val done = new ExecutorCompletionService[(Int, DataFrame)](pool)
     try {
-      specs.map { case (df, name, path, key, buckets) =>
-        Future(writeBucketed(df, name, path, key, buckets))
-      }.map(Await.result(_, Duration.Inf))
-    } finally pool.shutdown()
+      specs.zipWithIndex.foreach { case ((df, name, path, key, buckets), i) =>
+        done.submit { () => sc.addJobTag(tag); (i, writeBucketed(df, name, path, key, buckets)) }
+      }
+      val out = new Array[DataFrame](specs.size)
+      specs.foreach { _ =>
+        try { val (i, t) = done.take().get(); out(i) = t }
+        catch { case e: ExecutionException =>
+          // cancel again once the interrupted threads are gone: a sibling
+          // may submit its job between the first cancel and its interrupt
+          pool.shutdownNow(); sc.cancelJobsWithTag(tag)
+          pool.awaitTermination(30, TimeUnit.SECONDS); sc.cancelJobsWithTag(tag)
+          throw e.getCause
+        }
+      }
+      out.toSeq
+    } finally pool.shutdownNow()
   }
 
   /** Partition-level compute-or-resume: the stage output is hive-

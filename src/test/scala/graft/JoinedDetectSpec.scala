@@ -94,6 +94,84 @@ class JoinedDetectSpec extends SparkSpec {
     assert(viaJoin == viaBroadcast)
   }
 
+  test("Dimension.mentions plan: one probe pass over the slim turns, one dictionary join, one regroup") {
+    import org.apache.spark.sql.execution.{AppendColumnsExec, CoGroupExec, MapPartitionsExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val dictDf = dict.values.toSeq.toDS().repartition(4)
+    val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
+    val ms = graft.Pipeline.Dictionary.Dimension(dictDf, vecDf).mentions(turns)
+    ms.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    val plan = ms.queryExecution.executedPlan
+    def count(pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Int]) =
+      Plans.collect(plan)(pf).size
+    // the Bloom probe: one pass, reading only the slim turn columns
+    val probes = Plans.collect(plan) { case m: MapPartitionsExec => m }
+    assert(probes.size == 1, plan)
+    val probeScans = Plans.collect(probes.head) {
+      case s: InMemoryTableScanExec => s.output.map(_.name).toSet }
+    assert(probeScans == Seq(Set("conv_id", "turn_idx", "text")), plan)
+    // hits regroup once, on a column key: no collect_list, no key function
+    assert(count { case _: ObjectHashAggregateExec => 1 } == 0, plan)
+    assert(count { case _: AppendColumnsExec => 1 } == 0, plan)
+    assert(count { case _: CoGroupExec => 1 } == 1, plan)
+    // the dictionary join and the vector join
+    assert(count { case _: BaseJoinExec => 1 } == 2, plan)
+  }
+
+  test("Dimension.mentions ≡ broadcast: missing vectors, shared candidates, hit-less convs, vecDf = None") {
+    val sc = spark.sparkContext
+    def vec(seed: Int) = Array.tabulate(MentionDetect.CtxDim)(i => math.sin(seed * (i + 1.0)).toFloat)
+    val hand = Seq(
+      DictEntry("barack obama", "barack obama", 50,
+                Array(Candidate("Barack_Obama", 0.9), Candidate("Obama_Sr", 0.1))),
+      DictEntry("obama", "obama", 80,
+                Array(Candidate("Barack_Obama", 0.6), Candidate("Obama_Sr", 0.4))),
+      DictEntry("michelle obama", "michelle obama", 20, Array(Candidate("Michelle_Obama", 1.0))),
+      DictEntry("paris", "paris", 90, Array(Candidate("Paris", 0.7), Candidate("Paris_Texas", 0.3))),
+      DictEntry("Paris", "paris", 95, Array(Candidate("Paris", 0.8), Candidate("Paris_Texas", 0.2))),
+      DictEntry("zork", "zork", 5, Array(Candidate("Zork_Game", 0.5), Candidate("Zork_Novel", 0.5))),
+      DictEntry("void", "void", 3, Array.empty[Candidate]))
+    // Paris_Texas and both Zork entities have no vector
+    val handVecs = Map("Barack_Obama" -> vec(1), "Obama_Sr" -> vec(2),
+                       "Michelle_Obama" -> vec(3), "Paris" -> vec(4))
+    def conv(id: String, texts: String*) =
+      texts.zipWithIndex.map { case (t, i) => Turn(id, i, "user", t, null, null) }
+    val handTurns = (conv("h1", "barack obama met michelle obama in paris",
+                          "later obama flew to Paris with michelle", "obama and barack spoke") ++
+                     conv("h2", "nothing to see here", "still nothing at all") ++
+                     conv("h3", "zork is a game", "the zork novel came later") ++
+                     conv("h4", "the void stares back", "void again") ++
+                     conv("h5", "ZORK and PARIS tonight", "obama in paris texas")).toDS()
+
+    // generated corpus with every third entity vector missing
+    val sparseVecs = vecs.toSeq.sortBy(_._1).zipWithIndex.collect { case (ev, i) if i % 3 != 0 => ev }.toMap
+    for ((ts, d, v) <- Seq((handTurns, hand.map(e => e.mention -> e).toMap, handVecs),
+                           (turns, dict, sparseVecs))) {
+      val dictDf = d.values.toSeq.toDS().repartition(3)
+      val vecDf = v.toSeq.toDF("entity", "vec").repartition(2)
+      def broadcastFlagship(vs: Map[String, Array[Float]]) =
+        mentionKeys(graft.Pipeline.allMentions(ts, sc.broadcast(d), sc.broadcast(vs)))
+      val expected = broadcastFlagship(v)
+      assert(expected.nonEmpty)
+      assert(mentionKeys(graft.Pipeline.Dictionary.Dimension(dictDf, vecDf).mentions(ts)) == expected)
+      // vecDf = None resolves vector-less; re-resolving it is erbench's traced shape
+      val noVecs = graft.operators.Coref.detectAndInheritJoined(ts, dictDf)
+      assert(mentionKeys(noVecs) == broadcastFlagship(Map.empty))
+      assert(mentionKeys(MentionDetect.resolveJoined(noVecs, vecDf)) == expected)
+    }
+    // the hand fixture really holds each case
+    val handMs = graft.Pipeline.allMentions(handTurns, sc.broadcast(hand.map(e => e.mention -> e).toMap),
+                                            sc.broadcast(handVecs)).collect()
+    assert(!handMs.exists(_.conv_id == "h2"))
+    assert(handMs.exists(m => m.norm == "void" && m.candidates.isEmpty))
+    assert(handMs.exists(m => m.norm == "zork"))
+    assert(handMs.count(m => m.conv_id == "h1" && m.candidates.exists(_.entity == "Barack_Obama")) >= 2)
+  }
+
   test("Pipeline.runJoined clusters ≡ broadcast Pipeline.run clusters (F1 fixture)") {
     // end-to-end: the whole flagship (detect ∪ inherit → block → score →
     // cluster) with parquet dimension tables must assign every mention to

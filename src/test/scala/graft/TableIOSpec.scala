@@ -158,4 +158,38 @@ class TableIOSpec extends SparkSpec {
       assert(got == expect)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
   }
+
+  test("writeBucketedAll: one failed write of three fails the call at once and cancels the others") {
+    val dir = Files.createTempDirectory("graft-wball").toString
+    val sc = spark.sparkContext
+    // the two sibling writes run until their task is killed (≤ 60 s)
+    val slow = udf { (x: Long) =>
+      val tc = org.apache.spark.TaskContext.get()
+      val until = System.nanoTime + 60000000000L
+      while (!tc.isInterrupted() && System.nanoTime < until) Thread.sleep(50)
+      x
+    }
+    // the failing write throws once the siblings are running
+    val boom = udf { (x: Long) =>
+      Thread.sleep(1000)
+      if (x >= 0) throw new IllegalStateException("planted write failure")
+      x
+    }
+    def spec(f: org.apache.spark.sql.expressions.UserDefinedFunction, name: String) =
+      (spark.range(0, 1, 1, 1).select(f(col("id")).as("k")), name, s"$dir/$name", Seq("k"), 2)
+    val t0 = System.nanoTime
+    val e = intercept[Exception] {
+      TableIO.writeBucketedAll(Seq(spec(slow, "wball_a"), spec(boom, "wball_b"),
+                                   spec(slow, "wball_c")))
+    }
+    val secs = (System.nanoTime - t0) / 1e9
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("planted write failure")), e)
+    assert(secs < 30, s"the call waited $secs s for the sibling writes")
+    val deadline = System.nanoTime + 10000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime < deadline)
+      Thread.sleep(100)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "sibling write jobs still running")
+  }
 }
