@@ -49,10 +49,8 @@ object Pipeline {
         val sc = turns.sparkSession.sparkContext
         allMentions(turns, sc.broadcast(dict), sc.broadcast(vecs), cfg)
       case Dictionary.Dimension(dictDf, vecDf, expectedDictKeys, bloomFpp) =>
-        if (cfg.coref)
-          Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp,
-                                       vecDf = Some(vecDf))
-        else MentionDetect.runJoinedFull(turns, dictDf, vecDf, expectedDictKeys, bloomFpp)
+        Coref.detectAndInheritJoined(turns, dictDf, expectedDictKeys, bloomFpp,
+                                     vecDf = Some(vecDf), coref = cfg.coref)
     }
   }
 
@@ -64,12 +62,12 @@ object Pipeline {
     /** Both dimension tables DISTRIBUTED — a REL-scale p(e|m) dictionary
       * (~10M surfaces × top-K candidates, several GB) and a
       * Wikipedia2Vec-scale vector table (tens of GB) fit in neither a
-      * driver Map nor a broadcast. Detection ∪ inheritance runs through
-      * Coref.detectAndInheritJoined (one Bloom probe of the slim turn
-      * projection, one dictionary join whose hits and candidate vectors
-      * regroup once with the turns into exact per-conversation
-      * mini-dictionaries and mini vector maps, identical `resolve`), or
-      * — with coref off — MentionDetect.runJoinedFull. Property-equal to
+      * driver Map nor a broadcast. Detection (∪ inheritance when
+      * `cfg.coref` is on) runs through Coref.detectAndInheritJoined for
+      * both coref settings: one Bloom probe of the slim turn projection,
+      * one dictionary join whose hits and candidate vectors regroup once
+      * with the turns into exact per-conversation mini-dictionaries and
+      * mini vector maps, identical `resolve`. Property-equal to
       * [[Broadcast]] on the same inputs (JoinedDetectSpec).
       *
       * `vecDf` schema: (entity: string, vec: array<float>). Pass
@@ -417,19 +415,19 @@ object Pipeline {
     // frames (bootstrap/apply localCheckpoint their outputs) writing to
     // disjoint paths/table names — overlapped via TableIO.writeBucketedAll
     // (guide §2.6) instead of serializing five write barriers.
-    def spec(df: DataFrame, n: String, key: String) =
-      (df, s"graft_${label}_${n}_e${epoch}_$app",
-       s"$root/epoch_$epoch/$n", Seq(key), buckets)
-    val specs = Seq(
-      spec(state.mentions, "mentions", "mention_id"),
-      spec(state.keyed, "keyed", "block_key"),
-      spec(state.reps, "reps", "rep_id"),
-      spec(state.clusters, "clusters", "mention_id")) ++
-      state.edges.map(e => spec(e, "edges", "src")).toSeq
-    val written = sources.TableIO.writeBucketedAll(specs)
+    val tables = Seq(
+      ("mentions", state.mentions, "mention_id"),
+      ("keyed", state.keyed, "block_key"),
+      ("reps", state.reps, "rep_id"),
+      ("clusters", state.clusters, "mention_id")) ++
+      state.edges.map(e => ("edges", e, "src"))
+    val written = tables.map(_._1).zip(sources.TableIO.writeBucketedAll(
+      tables.map { case (n, df, key) =>
+        (df, s"graft_${label}_${n}_e${epoch}_$app", s"$root/epoch_$epoch/$n", Seq(key), buckets)
+      })).toMap
     IncrementState(
-      mentions = written(0), keyed = written(1), reps = written(2),
-      clusters = written(3), edges = state.edges.map(_ => written(4)))
+      mentions = written("mentions"), keyed = written("keyed"), reps = written("reps"),
+      clusters = written("clusters"), edges = written.get("edges"))
   }
 
   /** Append-only INCREMENTAL maintenance of a clustered corpus — the

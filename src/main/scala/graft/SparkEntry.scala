@@ -381,7 +381,7 @@ object SparkEntry {
     // and equi-joined (bloom-prefiltered candidate explode) instead of
     // collected into a broadcast driver Map. Must produce EXACTLY the q12
     // mention set — same oracle; path equivalence is also property-tested
-    // against the broadcast path in MentionDetectSpec.
+    // against the broadcast path in JoinedDetectSpec.
     "q34_mentions_joined" -> ((s, dir) => {
       import s.implicits._
       // keyed by applicationId: two concurrent sessions must not race on
@@ -391,8 +391,9 @@ object SparkEntry {
       QueryLib.bigramDict.values.toSeq.sortBy(_.mention).toDS()
         .coalesce(1).write.mode("overwrite").parquet(dictPath)
       val dictDf = s.read.parquet(dictPath).as[DictEntry]
-      val vecsBc = s.sparkContext.broadcast(Map.empty[String, Array[Float]])
-      operators.MentionDetect.runJoined(QueryLib.turnsDs(s, dir), dictDf, vecsBc)
+      val vecDf = Seq.empty[(String, Array[Float])].toDF("entity", "vec")
+      Pipeline.Dictionary.Dimension(dictDf, vecDf)
+        .mentions(QueryLib.turnsDs(s, dir), Pipeline.Config(coref = false))
         .toDF()
         .select(col("conv_id"), col("turn_idx").cast("bigint"),
                 col("begin").cast("bigint").as("bpos"), col("norm").as("bg"))
@@ -564,8 +565,7 @@ object SparkEntry {
       // two serial write barriers
       val written = sources.TableIO.writeBucketedAll(Seq(
         (facts, s"graft_q43_facts_$appTag", s"$base/facts", Seq("user_id"), 8),
-        (dim, s"graft_q43_dim_$appTag", s"$base/dim", Seq("user_id"), 8)),
-        threads = 2)
+        (dim, s"graft_q43_dim_$appTag", s"$base/dim", Seq("user_id"), 8)))
       val (tf, td) = (written(0), written(1))
       tf.join(td, Seq("user_id"))
         .select(col("event_id"), col("user_id"), col("n_purchase"), col("purchase_value"))
@@ -678,13 +678,17 @@ object SparkEntry {
     // with the benchmark split (doc_id % 20 == 0 plays the eval set).
     // Benchmark grams explode+distinct on the SMALL side and broadcast;
     // the corpus gram stream is map-only and never crosses an exchange
-    // unless contaminated (Decontaminate Scaladoc). Exact positional
-    // n-gram oracle.
+    // unless contaminated (Decontaminate Scaladoc). Only the corpus scan
+    // gets the scan-parallelism floor (Fanout): its tokenize+gram kernel is
+    // the cost, while fanning out the small benchmark side measured as a
+    // q50/q68 regression. Exact positional n-gram oracle.
     "q50_decontaminate" -> ((s, dir) => {
       val d = docs(s, dir)
       val bench = d.where(col("doc_id") % 20 === 0)
       val corpus = d.where(col("doc_id") % 20 =!= 0)
-      operators.Decontaminate.flagged(corpus, bench, "doc_id", "text", n = 4)
+      operators.Decontaminate.flagged(
+          operators.Fanout(corpus.select(col("doc_id"), col("text"))),
+          bench, "doc_id", "text", n = 4)
         .select(col("id").as("doc_id"), col("n_hit_grams"), col("first_gram"))
         .orderBy("doc_id")
     }),

@@ -179,12 +179,18 @@ object Coref {
     * evaluate it twice, once per side of its self-join. With
     * `vecDf = None` resolution runs vector-less (span selection, norms,
     * candidates and ctx embeddings do not depend on entity vectors) and
-    * callers may re-resolve. */
+    * callers may re-resolve.
+    *
+    * `coref = false` is detection alone (REL without `with_coref`): each
+    * group runs only the per-turn MentionDetect.mentionsOfTurn over the
+    * same mini-dictionary and mini vector map — exact for the same reason,
+    * since every form a turn probes occurs in its conversation. */
   def detectAndInheritJoined(turns: Dataset[Turn], dictDf: Dataset[DictEntry],
                              expectedDictKeys: Long = 0L,
                              bloomFpp: Double = 0.01,
                              maxSeen: Int = Int.MaxValue,
-                             vecDf: Option[DataFrame] = None): Dataset[Mention] = {
+                             vecDf: Option[DataFrame] = None,
+                             coref: Boolean = true): Dataset[Mention] = {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -214,11 +220,12 @@ object Coref {
           if (mini.isEmpty) Iterator.empty
           else {
             val vecs = rows.collect { case (_, _, e, v) if v != null => e -> v }.toMap
+            val ev: String => Array[Float] = e => vecs.getOrElse(e, Array.empty[Float])
             val turnArr = ts.map { case (_, idx, text) =>
               Turn(convId, idx, null, text, null, null)
             }.toArray
-            detectAndInheritOfConv(convId, turnArr, mini,
-              e => vecs.getOrElse(e, Array.empty[Float]), maxSeen = maxSeen).iterator
+            if (coref) detectAndInheritOfConv(convId, turnArr, mini, ev, maxSeen = maxSeen).iterator
+            else turnArr.iterator.flatMap(t => MentionDetect.mentionsOfTurn(t, mini, ev))
           }
       }
   }

@@ -57,11 +57,7 @@ object Decontaminate {
     val benchGrams = gramSet(benchmark, idCol, textCol, n)
       .select("gram").distinct()
     val dim = if (broadcastBench) broadcast(benchGrams) else benchGrams
-    // CORPUS side only gets the scan-parallelism floor (Fanout): its
-    // tokenize+gram kernel is the 100-TB-side cost; fanning out the
-    // (small, curated) benchmark side is pure exchange overhead —
-    // measured as a q50/q68 regression when applied to both.
-    gramSet(Fanout(corpus.select(col(idCol), col(textCol))), idCol, textCol, n)
+    gramSet(corpus, idCol, textCol, n)
       .join(dim, "gram")
       .groupBy("id")
       .agg(count(lit(1)).as("n_hit_grams"), min("gram").as("first_gram"))

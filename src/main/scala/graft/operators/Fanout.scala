@@ -20,8 +20,11 @@ import org.apache.spark.sql.DataFrame
   * no-op (no Exchange added), so the floor cannot become a scale
   * regression. Round-robin repartition is deterministic under retry
   * (sortBeforeRepartition, on by default — SPARK-23207). Callers apply
-  * it to slim (id, text) projections BEFORE the expensive kernel, never
-  * to wide payloads, and only where downstream aggregation is exact
+  * it to slim (id, text) projections of a SCAN, BEFORE the expensive
+  * kernel — never to wide payloads, never to a derived frame with an
+  * exchange below it (under AQE the `.rdd` probe materializes the final
+  * plan, running every upstream shuffle once for the probe and again for
+  * the action) — and only where downstream aggregation is exact
   * (counts, min/max, integer sums) so partial-agg ORDER cannot perturb
   * rounded floating-point outputs. */
 object Fanout {

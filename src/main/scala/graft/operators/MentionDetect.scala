@@ -284,82 +284,13 @@ object MentionDetect {
     }
   }
 
-  /** Join-based detection for dictionaries too large to live in a driver
-    * Map — SURVEY.md D3's own degrade path ("large: a DataFrame joined via
-    * … hash join, persisted as a Parquet/Iceberg dimension table"). A
-    * REL-scale p(e|m) table (~10M surfaces × top-K candidates ≈ several
-    * GB) cannot be collected and broadcast; this path keeps it a
-    * distributed dimension table end to end.
-    *
-    * Shape (3 shuffles, each on uniform or AQE-managed keys — the price
-    * of not broadcasting):
-    *
-    *  1. Candidate explode (map-only): every ≤[[MaxNgram]]-token span of
-    *     every turn is probed through its [[cascadeForms]] against a
-    *     BROADCAST BLOOM FILTER of the dictionary keys (built with one
-    *     scan of the dimension table; ~12 MB at 10M keys / 1% fpp — the
-    *     distributed analogue of the broadcast path's first-token masks).
-    *     Only bloom survivors leave the mapper, deduped per turn, as slim
-    *     (conv_id, turn_idx, form) rows — at ~40-token turns that is the
-    *     true dictionary hits plus ~fpp of the ~200 spans/turn, a few
-    *     rows per turn rather than hundreds.
-    *  2. Equi-join survivor forms against the dictionary on its key
-    *     (shuffle hash/sort-merge join; a Zipf-hot surface form is a hot
-    *     JOIN KEY, handled by AQE skew-join — the dictionary side holds
-    *     one row per key so no pair explosion is possible).
-    *  3. Group matches back per turn (collect the turn's mini dictionary;
-    *     bounded by spans/turn × cascade forms, so no skew exposure) and
-    *     join to the turns table on the uniform (conv_id, turn_idx) key.
-    *     Each turn then runs the IDENTICAL greedy cascade resolution as
-    *     the broadcast path over its mini dictionary: `detect` only ever
-    *     probes forms occurring in the turn, and the mini dictionary
-    *     contains exactly the dictionary's entries for those forms (bloom
-    *     false positives die in the join), so the two paths are
-    *     equivalent by construction — property-tested in
-    *     MentionDetectSpec.
-    *
-    * Turns without any dictionary hit are dropped by the inner join
-    * before the final mapper — mention-free turns (the overwhelming
-    * majority at corpus scale) never reach the resolution stage.
-    *
-    * @param expectedDictKeys sizing hint for the Bloom filter; pass <= 0
-    *   to have it counted exactly (one extra columnar count scan). */
-  def runJoined(turns: Dataset[Turn], dictDf: Dataset[DictEntry],
-                entityVecBc: Broadcast[Map[String, Array[Float]]],
-                expectedDictKeys: Long = 0L,
-                bloomFpp: Double = 0.01): Dataset[Mention] = {
-    val spark = turns.sparkSession
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val (bloomBc, masksBc) = dictSketches(dictDf, expectedDictKeys, bloomFpp)
-
-    val cands = bloomSurvivorForms(turns, bloomBc, masksBc)
-
-    val matched = cands
-      .join(dictDf.toDF(), cands("form") === dictDf("mention"))
-      .groupBy("conv_id", "turn_idx")
-      .agg(collect_list(struct(col("mention"), col("lower"),
-                               col("freq"), col("candidates"))).as("hits"))
-
-    turns.toDF().select(col("conv_id"), col("turn_idx"), col("text"))
-      .join(matched, Seq("conv_id", "turn_idx"))
-      .as[(String, Int, String, Seq[DictEntry])]
-      .mapPartitions { it =>
-        val ev: String => Array[Float] =
-          e => entityVecBc.value.getOrElse(e, Array.empty[Float])
-        it.flatMap { case (conv, turn, text, hits) =>
-          val mini: Dict = hits.iterator.map(h => h.mention -> h).toMap
-          mentionsOfTurn(Turn(conv, turn, null, text, null, null), mini, ev)
-        }
-      }
-  }
-
-  /** Stage 1 of the join-based detection paths (map-only): every
-    * ≤[[MaxNgram]]-token span of every turn, probed through its
-    * [[cascadeForms]] against a broadcast Bloom of the dictionary keys;
-    * only survivors leave the mapper, deduped per turn, as slim
-    * (conv_id, turn_idx, form) rows. Shared by [[runJoined]] (turn-level
-    * regroup) and Coref.detectAndInheritJoined (conv-level regroup). The
+  /** Stage 1 of batch join-based detection (Coref.detectAndInheritJoined,
+    * map-only): every ≤[[MaxNgram]]-token span of every turn, probed
+    * through its [[cascadeForms]] against a broadcast Bloom of the
+    * dictionary keys — the distributed analogue of the broadcast path's
+    * first-token masks, for a REL-scale p(e|m) table (SURVEY D3) that
+    * cannot be collected into a driver Map; only survivors leave the
+    * mapper, deduped per turn, as slim (conv_id, turn_idx, form) rows. The
     * probe reads the slim (conv_id, turn_idx, text) projection, so the
     * scan never decodes `role`, `tool` or `ts`. `masksBc` (from
     * [[dictSketches]]) prunes span enumeration the same way the broadcast
@@ -377,8 +308,8 @@ object MentionDetect {
       }.toDF("conv_id", "turn_idx", "form")
   }
 
-  /** The two broadcast sketches of a DISTRIBUTED dictionary that every
-    * join-based path (batch, conv-level, streaming) probes, built in ONE pass
+  /** The two broadcast sketches of a DISTRIBUTED dictionary that both
+    * join-based paths (batch and streaming) probe, built in ONE pass
     * over its key column — one job, no shuffle: a Bloom filter over the
     * keys (`expectedDictKeys` <= 0 ⇒ one exact count scan for sizing), and
     * first-token length masks, the analogue of [[firstTokenMasks]]
@@ -462,10 +393,12 @@ object MentionDetect {
   }
 
   /** Re-run entity disambiguation against the entity-vector table as a
-    * JOIN DIMENSION instead of a broadcast Map — the embedding-side twin
-    * of [[runJoined]] (SURVEY D4: REL's Wikipedia2Vec table is millions
-    * of entities × 300 floats ≈ tens of GB; it can no more live in a
-    * driver Map than the p(e|m) dictionary can).
+    * JOIN DIMENSION instead of a broadcast Map (SURVEY D4: REL's
+    * Wikipedia2Vec table is millions of entities × 300 floats ≈ tens of
+    * GB; it can no more live in a driver Map than the p(e|m) dictionary
+    * can). Re-resolves the vector-less output of
+    * Coref.detectAndInheritJoined(vecDf = None); Pipeline.Dictionary.Dimension
+    * resolves in-group instead, which runs the mention kernel once.
     *
     * Shape: explode each mention's candidate entities (slim id+entity
     * rows; REL caps candidate lists at top-100, so the fan-out is
@@ -504,21 +437,5 @@ object MentionDetect {
           e => lookup.getOrElse(e, Array.empty[Float]), wPrior, wCtx)
         m.copy(resolved = resolved, resolvedScore = score)
       }
-  }
-
-  /** Fully join-based detection + disambiguation: BOTH reference
-    * dimension tables (p(e|m) dictionary and entity vectors) stay
-    * distributed. Span selection and context embedding don't depend on
-    * entity vectors at all, so running [[runJoined]] vector-less and then
-    * re-resolving via [[resolveJoined]] equals the broadcast path
-    * exactly. */
-  def runJoinedFull(turns: Dataset[Turn], dictDf: Dataset[DictEntry],
-                    vecDf: DataFrame,
-                    expectedDictKeys: Long = 0L,
-                    bloomFpp: Double = 0.01): Dataset[Mention] = {
-    val spark = turns.sparkSession
-    val emptyVecs = spark.sparkContext.broadcast(Map.empty[String, Array[Float]])
-    resolveJoined(
-      runJoined(turns, dictDf, emptyVecs, expectedDictKeys, bloomFpp), vecDf)
   }
 }

@@ -141,19 +141,20 @@ object TableIO {
     * instead of paying serial write barriers. Callers must pass frames
     * that are already materialized (checkpointed/staged) or whose
     * lineages are independent — overlapping writes that share an
-    * unmaterialized lineage would recompute it per thread. `threads = 1`
-    * degrades to the serial shape (the A/B arm CompactBench times).
+    * unmaterialized lineage would recompute it per thread. At most three
+    * writes run at once (compaction's five tables overlap three-wide).
     * The first failed write fails the call at once: the sibling writes
     * are interrupted and their Spark jobs cancelled (by a per-call job
     * tag), and the write's own exception is rethrown.
     * Specs: (df, tableName, path, bucketKeys, buckets); returns the
     * catalog-backed frames in spec order. */
-  def writeBucketedAll(specs: Seq[(DataFrame, String, String, Seq[String], Int)],
-                       threads: Int = 3): Seq[DataFrame] = {
+  def writeBucketedAll(specs: Seq[(DataFrame, String, String, Seq[String], Int)])
+      : Seq[DataFrame] = {
     import java.util.concurrent.{ExecutionException, ExecutorCompletionService, TimeUnit}
     lazy val sc = specs.head._1.sparkSession.sparkContext
     val tag = s"writeBucketedAll-${java.util.UUID.randomUUID}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, threads))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(3, specs.size)))
     val done = new ExecutorCompletionService[(Int, DataFrame)](pool)
     try {
       specs.zipWithIndex.foreach { case ((df, name, path, key, buckets), i) =>

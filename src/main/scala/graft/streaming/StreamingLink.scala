@@ -177,8 +177,9 @@ object StreamingLink {
 
   /** [[mentions]] with the p(e|m) dictionary as a STATIC DIMENSION TABLE
     * instead of a broadcast Map — the streaming twin of
-    * Pipeline.runJoined (a REL-scale dictionary is no more broadcastable
-    * to a streaming job than to a batch one).
+    * Pipeline.Dictionary.Dimension's Coref.detectAndInheritJoined (a
+    * REL-scale dictionary is no more broadcastable to a streaming job
+    * than to a batch one).
     *
     * Plan shape, all Structured-Streaming-legal:
     *

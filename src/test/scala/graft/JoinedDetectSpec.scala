@@ -23,12 +23,18 @@ class JoinedDetectSpec extends SparkSpec {
                  m.resolved, math.round(m.resolvedScore * 1e9), m.ctx.toSeq))
       .collect().toSet
 
+  private val noCoref = graft.Pipeline.Config(coref = false)
+
   test("join path emits exactly the broadcast path's mentions (full payload)") {
+    // coref off, vector-less in-group resolution, then re-resolved
+    // against the vector table
     val vecsBc = spark.sparkContext.broadcast(vecs)
     val viaBroadcast = mentionKeys(
       MentionDetect.run(turns, spark.sparkContext.broadcast(dict), vecsBc))
     val dictDf = dict.values.toSeq.toDS().repartition(4)
-    val viaJoin = mentionKeys(MentionDetect.runJoined(turns, dictDf, vecsBc))
+    val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
+    val viaJoin = mentionKeys(MentionDetect.resolveJoined(
+      graft.operators.Coref.detectAndInheritJoined(turns, dictDf, coref = false), vecDf))
     assert(viaBroadcast.nonEmpty)
     val onlyB = viaBroadcast -- viaJoin
     val onlyJ = viaJoin -- viaBroadcast
@@ -46,7 +52,8 @@ class JoinedDetectSpec extends SparkSpec {
       MentionDetect.run(turns, spark.sparkContext.broadcast(dict), vecsBc))
     val dictDf = dict.values.toSeq.toDS().repartition(4)
     val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
-    val viaJoin = mentionKeys(MentionDetect.runJoinedFull(turns, dictDf, vecDf))
+    val viaJoin = mentionKeys(
+      graft.Pipeline.Dictionary.Dimension(dictDf, vecDf).mentions(turns, noCoref))
     assert(viaJoin == viaBroadcast)
     // resolution really used the vectors: ambiguous golds resolve with
     // sub-1.0 margins, which only happens when cosines were computed
@@ -120,6 +127,31 @@ class JoinedDetectSpec extends SparkSpec {
     assert(count { case _: CoGroupExec => 1 } == 1, plan)
     // the dictionary join and the vector join
     assert(count { case _: BaseJoinExec => 1 } == 2, plan)
+  }
+
+  test("coref-off Dimension.mentions ≡ MentionDetect.run; plan: one probe, one regroup, no collect_list") {
+    // detection alone takes the same one-regroup shape as detect ∪ inherit
+    import org.apache.spark.sql.execution.{CoGroupExec, MapPartitionsExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val dictDf = dict.values.toSeq.toDS().repartition(4)
+    val vecDf = vecs.toSeq.toDF("entity", "vec").repartition(3)
+    val ms = graft.Pipeline.Dictionary.Dimension(dictDf, vecDf).mentions(turns, noCoref)
+    val viaJoin = mentionKeys(ms)
+    val viaBroadcast = mentionKeys(MentionDetect.run(turns,
+      spark.sparkContext.broadcast(dict), spark.sparkContext.broadcast(vecs)))
+    assert(viaBroadcast.nonEmpty)
+    assert(viaJoin == viaBroadcast)
+    ms.collect() // the final adaptive plan
+    object Plans extends AdaptiveSparkPlanHelper
+    val plan = ms.queryExecution.executedPlan
+    def count(pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, Int]) =
+      Plans.collect(plan)(pf).size
+    assert(count { case _: MapPartitionsExec => 1 } == 1, plan)
+    assert(count { case _: CoGroupExec => 1 } == 1, plan)
+    assert(count { case _: ObjectHashAggregateExec => 1 } == 0, plan)
+    assert(count { case _: SortMergeJoinExec => 1 } == 0, plan)
   }
 
   test("Dimension.mentions ≡ broadcast: missing vectors, shared candidates, hit-less convs, vecDf = None") {
@@ -300,8 +332,9 @@ class JoinedDetectSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir)
     val dictDf = spark.read.parquet(dir).as[DictEntry]
     val vecsBc = spark.sparkContext.broadcast(vecs)
-    val viaJoin = mentionKeys(
-      MentionDetect.runJoined(turns, dictDf, vecsBc, bloomFpp = 0.5))
+    val vecDf = vecs.toSeq.toDF("entity", "vec")
+    val viaJoin = mentionKeys(graft.Pipeline.Dictionary.Dimension(dictDf, vecDf, bloomFpp = 0.5)
+      .mentions(turns, noCoref))
     val viaBroadcast = mentionKeys(
       MentionDetect.run(turns, spark.sparkContext.broadcast(dict), vecsBc))
     assert(viaJoin == viaBroadcast)
