@@ -525,7 +525,10 @@ object Pipeline {
     * frame is `localCheckpoint(true)`d the moment it is defined (the
     * lineage rule on [[Pipeline]]). All of them are delta-sized, so the
     * materialization is O(delta) by construction, and the lineage
-    * truncation is what keeps the query plans bounded. Every touch of a
+    * truncation is what keeps the query plans bounded. The intermediate
+    * leaves are registered with [[CacheTracker]]: a caller checkpoints
+    * `memberEdges`/`newEdges`, which read them, before its scope drains.
+    * Every touch of a
     * base table is a slim semi-join carve (map-only scan when the
     * delta-derived probe side broadcasts, which AQE decides from its
     * measured size — never forced, so an unusually fat delta degrades to
@@ -545,8 +548,8 @@ object Pipeline {
     // delta group-min otherwise
     val deltaKeys = eligible.select("norm", "resolved").distinct()
     val activeReps = state.reps.join(deltaKeys, Seq("norm", "resolved"), "left_semi")
-    val withRep = eligible.join(activeReps, Seq("norm", "resolved"), "left")
-      .localCheckpoint(true)
+    val withRep = CacheTracker.leaf(
+      eligible.join(activeReps, Seq("norm", "resolved"), "left"))
     val attachedEdges = withRep.where(col("rep_id").isNotNull)
       .select(col("rep_id").as("src"), col("mention_id").as("dst"))
     val fresh = withRep.where(col("rep_id").isNull).drop("rep_id")
@@ -559,9 +562,8 @@ object Pipeline {
     val memberEdges = attachedEdges.unionByName(freshEdges)
 
     // delta scoring set: new reps + the low-margin/unresolved tail
-    val scoringIds = deltaReps.select(col("rep_id").as("mention_id"))
-      .unionByName(slim.where(!isEligible).select(col("mention_id")))
-      .localCheckpoint(true)
+    val scoringIds = CacheTracker.leaf(deltaReps.select(col("rep_id").as("mention_id"))
+      .unionByName(slim.where(!isEligible).select(col("mention_id"))))
     val scoringDeltaMs = deltaMs.join(scoringIds, Seq("mention_id"), "left_semi")
       .as[Mention]
 
@@ -571,22 +573,21 @@ object Pipeline {
       .localCheckpoint(true)
     val activeKeys = deltaKeyed.select("block_key").distinct()
     val baseActive = state.keyed.join(activeKeys, Seq("block_key"), "left_semi")
-    val keyedActive = baseActive.unionByName(deltaKeyed).localCheckpoint(true)
+    val keyedActive = CacheTracker.leaf(baseActive.unionByName(deltaKeyed))
     // delta-aware pair generation: O(d·n) per active block, never the
     // block's full O(n²) pair set — the output is delta-touching by
     // construction (regime decisions still follow the FULL block size,
     // so the pair set equals filtered candidatePairs exactly)
-    val pairs = Blocking.candidatePairsDelta(keyedActive,
+    val pairs = CacheTracker.leaf(Blocking.candidatePairsDelta(keyedActive,
         scoringIds.select(col("mention_id").as("mid")),
-        cfg.tau, cfg.blockMaxSize, cfg.starThreshold, cfg.starK)
-      .localCheckpoint(true)
+        cfg.tau, cfg.blockMaxSize, cfg.starThreshold, cfg.starK))
     // scoring payload only for pair participants — the base mention
     // table is scanned (semi-join carve), its payloads never shuffled
     val pairIds = pairs.select(col("a_id").as("mention_id"))
       .unionByName(pairs.select(col("b_id").as("mention_id"))).distinct()
-    val payloadMs = state.mentions.join(pairIds, Seq("mention_id"), "left_semi")
-      .unionByName(deltaMs.join(pairIds, Seq("mention_id"), "left_semi"))
-      .localCheckpoint(true)
+    val payloadMs = CacheTracker.leaf(
+      state.mentions.join(pairIds, Seq("mention_id"), "left_semi")
+        .unionByName(deltaMs.join(pairIds, Seq("mention_id"), "left_semi")))
       .as[Mention]
     val newEdges = Scoring.edges(Blocking.attachPayload(pairs, payloadMs), cfg.score)
     IncParts(deltaKeyed, deltaReps, memberEdges, newEdges)
@@ -802,8 +803,8 @@ object Pipeline {
 
     val slimClusters = state.clusters.select("mention_id", "conv_id", "cluster_id")
     val retracted = PhaseTimer.timed("retracted_carve") {
-      slimClusters.join(rconvs, Seq("conv_id"), "left_semi")
-        .select("mention_id", "cluster_id").localCheckpoint(true)
+      CacheTracker.leaf(slimClusters.join(rconvs, Seq("conv_id"), "left_semi")
+        .select("mention_id", "cluster_id"))
     }
     val retractIds = retracted.select("mention_id")
     // A cluster can change ONLY if it lost a SCORING mention (one with
@@ -826,10 +827,9 @@ object Pipeline {
 
     // survivors of affected clusters (meta + old assignment)
     val surv = PhaseTimer.timed("surv_carve") {
-      state.clusters
+      CacheTracker.leaf(state.clusters
         .join(affectedCids, Seq("cluster_id"), "left_semi")
-        .join(rconvs, Seq("conv_id"), "left_anti")
-        .localCheckpoint(true)
+        .join(rconvs, Seq("conv_id"), "left_anti"))
     }
     val survIds = surv.select("mention_id")
 
@@ -837,11 +837,10 @@ object Pipeline {
     // rep = min over eligible survivors (== from-scratch group-min)
     val isEligible = if (cfg.supernode) eligibleCond(cfg) else lit(false)
     val survMeta = PhaseTimer.timed("surv_meta_carve") {
-      state.mentions
+      CacheTracker.leaf(state.mentions
         .join(survIds, Seq("mention_id"), "left_semi")
         .select(col("mention_id"), col("norm"), col("resolved"),
-                col("resolvedScore"))
-        .localCheckpoint(true)
+                col("resolvedScore")))
     }
     val brokenGroups = state.reps
       .join(retractIds.withColumnRenamed("mention_id", "rep_id"),
@@ -880,28 +879,25 @@ object Pipeline {
     // scoring nodes of the affected region: surviving old scoring
     // mentions (they have keyed rows) + replacement reps
     val scoringSurvIds = PhaseTimer.timed("scoring_surv_ids") {
-      newKeyedAll
+      CacheTracker.leaf(newKeyedAll
         .join(survIds.withColumnRenamed("mention_id", "mid"), Seq("mid"), "left_semi")
-        .select(col("mid").as("mention_id")).distinct()
-        .localCheckpoint(true)
+        .select(col("mid").as("mention_id")).distinct())
     }
 
     // score the region-restricted pair set of the given keyed rows —
     // shared by both edge-derivation paths below
     def scoreRegionPairs(keyedRows: DataFrame, deltaMids: DataFrame): DataFrame = {
-      val pairs = Blocking.candidatePairsDelta(keyedRows,
+      val pairs = CacheTracker.leaf(Blocking.candidatePairsDelta(keyedRows,
           deltaMids,
           cfg.tau, cfg.blockMaxSize, cfg.starThreshold, cfg.starK)
         .join(scoringSurvIds.withColumnRenamed("mention_id", "a_id"),
               Seq("a_id"), "left_semi")
         .join(scoringSurvIds.withColumnRenamed("mention_id", "b_id"),
-              Seq("b_id"), "left_semi")
-        .localCheckpoint(true)
+              Seq("b_id"), "left_semi"))
       val pairIds = pairs.select(col("a_id").as("mention_id"))
         .unionByName(pairs.select(col("b_id").as("mention_id"))).distinct()
-      val payloadMs = state.mentions
-        .join(pairIds, Seq("mention_id"), "left_semi")
-        .localCheckpoint(true)
+      val payloadMs = CacheTracker.leaf(state.mentions
+        .join(pairIds, Seq("mention_id"), "left_semi"))
         .as[Mention]
       Scoring.edges(Blocking.attachPayload(pairs, payloadMs), cfg.score)
         .localCheckpoint(true)
@@ -960,7 +956,7 @@ object Pipeline {
           .groupBy("block_key").agg(count(lit(1)).as("r"))
         val nCounts = state.keyed.groupBy("block_key").agg(count(lit(1)).as("n"))
         val stats = PhaseTimer.timed("dirty_stats") {
-          nCounts.join(rCounts, Seq("block_key")).localCheckpoint(true)
+          CacheTracker.leaf(nCounts.join(rCounts, Seq("block_key")))
         }
         val regimeDirty = stats.where(
             (col("n") > cfg.blockMaxSize &&
@@ -974,10 +970,9 @@ object Pipeline {
         val starKeys = stats
           .where(col("n") > cfg.starThreshold && col("n") <= cfg.blockMaxSize)
           .select("block_key")
-        val oldHubs = Blocking.starHubs(
+        val oldHubs = CacheTracker.leaf(Blocking.starHubs(
             state.keyed.join(broadcast(starKeys), Seq("block_key"), "left_semi")
-              .select(col("block_key"), col("mid")), cfg.starK)
-          .localCheckpoint(true)
+              .select(col("block_key"), col("mid")), cfg.starK))
         val hubDirty = oldHubs
           .join(retractIds.withColumnRenamed("mention_id", "hub_id"),
                 Seq("hub_id"), "left_semi")
@@ -999,7 +994,7 @@ object Pipeline {
         //    Extra retained edges to DEMOTED hubs were valid scored
         //    edges inside one old cluster — retaining them is the
         //    documented monotone stance (deleting data never merges).
-        val fullDirty = regimeDirty.localCheckpoint(true)
+        val fullDirty = CacheTracker.leaf(regimeDirty)
         val deltaDirty = hubDirty
           .unionByName(newRepKeyed.select("block_key"))
           .distinct()
@@ -1010,15 +1005,14 @@ object Pipeline {
         val promotedMids = newHubs
           .join(oldHubs, Seq("block_key", "hub_id"), "left_anti")
           .select(col("hub_id").as("mid")).distinct()
-        val deltaMids = replacementRepIds
+        val deltaMids = CacheTracker.leaf(replacementRepIds
           .select(col("mention_id").as("mid"))
-          .unionByName(promotedMids).distinct()
-          .localCheckpoint(true)
+          .unionByName(promotedMids).distinct())
         val (keyedFullDirty, keyedDeltaDirty) = PhaseTimer.timed("dirty_classify") {
-          (newKeyedAll.join(broadcast(fullDirty), Seq("block_key"), "left_semi")
-             .localCheckpoint(true),
-           newKeyedAll.join(broadcast(deltaDirty), Seq("block_key"), "left_semi")
-             .localCheckpoint(true))
+          (CacheTracker.leaf(
+             newKeyedAll.join(broadcast(fullDirty), Seq("block_key"), "left_semi")),
+           CacheTracker.leaf(
+             newKeyedAll.join(broadcast(deltaDirty), Seq("block_key"), "left_semi")))
         }
         val fresh = PhaseTimer.timed("fresh_scoring") {
           // regime-change blocks are RARE (sizes must straddle a
@@ -1030,8 +1024,8 @@ object Pipeline {
             (keyedDeltaDirty, deltaMids),
             (keyedFullDirty, scoringSurvIds.select(col("mention_id").as("mid"))))
             .filter { case (rows, _) => !rows.isEmpty }
-            .map { case (rows, mids) => scoreRegionPairs(rows, mids) }
-          (if (sides.isEmpty) scoreRegionPairs(keyedDeltaDirty, deltaMids)
+            .map { case (rows, mids) => CacheTracker.register(scoreRegionPairs(rows, mids)) }
+          (if (sides.isEmpty) CacheTracker.register(scoreRegionPairs(keyedDeltaDirty, deltaMids))
            else sides.reduce(_ unionByName _))
             .localCheckpoint(true)
         }
@@ -1049,13 +1043,13 @@ object Pipeline {
                 Seq("mid"), "left_semi")
           .select("block_key").distinct()
         val keyedActive = PhaseTimer.timed("active_keys") {
-          newKeyedAll
-            .join(activeKeys, Seq("block_key"), "left_semi")
-            .localCheckpoint(true)
+          CacheTracker.leaf(newKeyedAll
+            .join(activeKeys, Seq("block_key"), "left_semi"))
         }
+        // no edge table to append to, so no returned frame reads these
         val all = PhaseTimer.timed("region_scoring") {
-          scoreRegionPairs(keyedActive,
-            scoringSurvIds.select(col("mention_id").as("mid")))
+          CacheTracker.register(scoreRegionPairs(keyedActive,
+            scoringSurvIds.select(col("mention_id").as("mid"))))
         }
         (all, all)
     }
@@ -1065,8 +1059,7 @@ object Pipeline {
     // Members still sort after their group rep, so component min over
     // scoring nodes is the global min — same id semantics as assemble.
     val assign = PhaseTimer.timed("carve_cc") {
-      Clustering.connectedComponents(edges, cfg.ccMaxIter)
-        .localCheckpoint(true)
+      CacheTracker.leaf(Clustering.connectedComponents(edges, cfg.ccMaxIter))
     }
     val scoringCid = scoringSurvIds
       .join(assign.withColumnRenamed("node", "mention_id"),
@@ -1080,7 +1073,7 @@ object Pipeline {
       .select(col("mention_id"),
               coalesce(col("cluster_id"), col("rep_id")).as("cluster_id"))
     val newAssign = PhaseTimer.timed("assign_attach") {
-      scoringCid.unionByName(memberCid).localCheckpoint(true)
+      CacheTracker.leaf(scoringCid.unionByName(memberCid))
     }
 
     // MERGE rows: surviving affected rows whose assignment changed

@@ -35,13 +35,14 @@ object Coref {
   /** Inherited mentions only (union with the detected set downstream).
     *
     * `maxSeen` bounds the inheritance-source list to the `maxSeen`
-    * NEAREST preceding mentions (default unbounded). Streaming parity:
-    * [[graft.streaming.StreamingLink]] keeps per-conversation state
-    * capped at its `MaxSeen` — batch output equals streaming output
-    * exactly when run with `maxSeen = StreamingLink.MaxSeen` (gated in
-    * StreamingLinkSpec, including a >MaxSeen-sources conversation); with
-    * the unbounded default they can diverge on conversations carrying
-    * more than MaxSeen detected mentions. */
+    * NEAREST preceding mentions (default unbounded). Streaming:
+    * [[graft.streaming.StreamingLink]] runs the same scan
+    * ([[inheritFrom]]) per micro-batch with the sources of the
+    * conversation's earlier batches carried as state and capped at its
+    * `MaxSeen`, so batch output equals streaming output by construction
+    * when run with `maxSeen = StreamingLink.MaxSeen`; with the unbounded
+    * default they can diverge on conversations carrying more than
+    * MaxSeen detected mentions. */
   def inherited(turns: Dataset[Turn], mentions: Dataset[Mention],
                 dictBc: Broadcast[MentionDetect.Dict],
                 entityVecBc: Broadcast[Map[String, Array[Float]]],
@@ -92,11 +93,22 @@ object Coref {
                              dict: MentionDetect.Dict,
                              entityVec: String => Array[Float],
                              masks: Option[Map[String, Int]] = None,
-                             maxSeen: Int = Int.MaxValue): Seq[Mention] = {
+                             maxSeen: Int = Int.MaxValue): Seq[Mention] =
+    detectAndInheritFrom(convId, ts, dict, entityVec, masks, maxSeen, Nil)._1
+
+  /** [[detectAndInheritOfConv]] over the next turns of a conversation
+    * whose earlier turns left the inheritance sources `seen0`; returns
+    * detected ∪ inherited and the sources it ends with — the per-batch
+    * step of [[graft.streaming.StreamingLink]]. */
+  def detectAndInheritFrom(convId: String, ts: Array[Turn],
+                           dict: MentionDetect.Dict,
+                           entityVec: String => Array[Float],
+                           masks: Option[Map[String, Int]], maxSeen: Int,
+                           seen0: Seq[SeenMention]): (Seq[Mention], List[SeenMention]) = {
     val detected = ts.sortBy(_.turn_idx)
       .flatMap(t => MentionDetect.mentionsOfTurn(t, dict, entityVec, masks))
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(detected) ++
-      inheritedOfConv(convId, ts, detected, dict, entityVec, maxSeen)
+    val (inh, seen) = inheritFrom(convId, ts, detected, dict, entityVec, maxSeen, seen0)
+    (scala.collection.immutable.ArraySeq.unsafeWrapArray(detected) ++ inh, seen)
   }
 
   /** ONE-SHUFFLE flagship mention stage: group the slim turn table by
@@ -230,21 +242,44 @@ object Coref {
       }
   }
 
+  /** An inheritance source: a detected mention slimmed to what the scan
+    * reads (no ctx vector, no ids) — also the per-conversation state
+    * StreamingLink carries between micro-batches. */
+  case class SeenMention(turnIdx: Int, begin: Int, norm: String,
+                         surfaceLower: String, candidates: Array[Candidate])
+
   /** Pure per-conversation logic (unit-testable without Spark). */
   def inheritedOfConv(convId: String, ts: Array[Turn], ms: Array[Mention],
                       dict: MentionDetect.Dict,
                       entityVec: String => Array[Float],
-                      maxSeen: Int = Int.MaxValue): Seq[Mention] = {
+                      maxSeen: Int = Int.MaxValue): Seq[Mention] =
+    inheritFrom(convId, ts, ms, dict, entityVec, maxSeen, Nil)._1
+
+  /** The inheritance scan — the one copy of the rule, run by both batch
+    * paths and by streaming. Scans the turns `ts` (with `ms`, their
+    * detected mentions) starting from the sources `seen0` and returns
+    * the inherited mentions and the sources it ends with: nearest first,
+    * at most `maxSeen`. `seen0` is what an earlier call over the same
+    * conversation returned (Nil for a whole conversation).
+    *
+    * Turn-order rule: turns arrive in turn order within a conversation —
+    * every turn of `ts` comes after every turn that produced `seen0`.
+    * Out-of-order arrival is not detected; its output is unspecified. */
+  def inheritFrom(convId: String, ts: Array[Turn], ms: Array[Mention],
+                  dict: MentionDetect.Dict,
+                  entityVec: String => Array[Float],
+                  maxSeen: Int,
+                  seen0: Seq[SeenMention]): (List[Mention], List[SeenMention]) = {
     val turnsSorted = ts.sortBy(_.turn_idx)
     val msSorted = ms.sortBy(m => (m.turn_idx, m.begin))
     val out = scala.collection.mutable.ListBuffer.empty[Mention]
-    // mentions of earlier turns, most recent first; token forms lowercased
-    var seenRev = List.empty[(Mention, Array[String])]
+    // sources, most recent first, each with its lowercased surface tokens
+    var seenRev = seen0.iterator.map(s => (s, s.surfaceLower.split(" "))).toList
     // running max of seen surface token-lengths — O(1) per turn instead of
     // the full seenRev scan the round-5 shape paid per turn (O(T·M) on
     // long conversations; the sfDir fixtures carry thousands of mentions
     // per conversation, so the scan dominated the whole mention stage)
-    var seenMaxLen = 0
+    var seenMaxLen = seenRev.foldLeft(0)((n, s) => math.max(n, s._2.length))
     // Conservative SUPERSET of the tokens occurring in seen surfaces: a
     // gram can only match a contiguous surface run if every gram token is
     // a surface token, so one hash probe per position rejects the
@@ -256,6 +291,7 @@ object Coref {
     // detection itself at 26M turns (10.2k core-s → the round-3 scaling
     // session's dominant stage).
     val seenTokens = scala.collection.mutable.HashSet.empty[String]
+    seenRev.foreach(_._2.foreach(seenTokens += _))
     var mi = 0
     turnsSorted.foreach { t =>
       // longest inheritable n-gram = longest seen surface minus one token
@@ -313,37 +349,38 @@ object Coref {
       // this turn's detected mentions become inheritance sources for later
       // turns — prepended so the NEAREST preceding mention is found first
       val miStart = mi
-      var newBlock = List.empty[(Mention, Array[String])]
+      var newBlock = List.empty[(SeenMention, Array[String])]
       while (mi < msSorted.length && msSorted(mi).turn_idx == t.turn_idx) {
         val m = msSorted(mi)
-        val surfToks = m.surface.toLowerCase.split(" ")
+        val surfaceLower = m.surface.toLowerCase
+        val surfToks = surfaceLower.split(" ")
         surfToks.foreach(seenTokens += _)
         if (surfToks.length > seenMaxLen) seenMaxLen = surfToks.length
-        newBlock = (m, surfToks) :: newBlock
+        newBlock = (SeenMention(m.turn_idx, m.begin, m.norm, surfaceLower, m.candidates),
+                    surfToks) :: newBlock
         mi += 1
       }
       // deterministic nearest-first order: (turn_idx desc, begin desc,
       // norm asc); cap at the maxSeen nearest (streaming-parity bound —
       // see `inherited`). This turn's block sorts AS A WHOLE before every
-      // already-seen mention (its turn_idx is strictly larger), so
-      // sorting just the block and prepending IS the full-list re-sort —
-      // minus the O(M log M)-per-turn cost the round-5 shape paid.
+      // already-seen mention (its turn_idx is strictly larger — the
+      // turn-order rule), so sorting just the block and prepending IS the
+      // full-list re-sort, minus the O(M log M)-per-turn cost the round-5
+      // shape paid.
       if (mi != miStart) {
-        seenRev = newBlock.sortBy { case (m, _) => (-m.begin, m.norm) } ::: seenRev
+        seenRev = newBlock.sortBy { case (s, _) => (-s.begin, s.norm) } ::: seenRev
         if (maxSeen != Int.MaxValue) {
           seenRev = seenRev.take(maxSeen)
           // with a finite window the truncation can evict the longest
           // surface — recompute the kept-window max (O(maxSeen), only on
-          // turns that added sources) so maxN matches the round-5
-          // post-truncation scan exactly (streaming-parity: the
-          // StreamingLink kernel derives maxN from ITS capped window)
+          // turns that added sources) so maxN is that of the kept window
           seenMaxLen =
             if (seenRev.isEmpty) 0
             else seenRev.iterator.map(_._2.length).max
         }
       }
     }
-    out.toList
+    (out.toList, seenRev.map(_._1))
   }
 
   /** True iff `run` occurs as a contiguous sub-array of `hay` AND is

@@ -80,7 +80,7 @@ object MentionDetect {
       else acc.updated(first, acc.getOrElse(first, 0) | (1 << (n - 1)))
     }
 
-  private[operators] def cachedMasks(dict: Dict, cacheKey: Long): Map[String, Int] =
+  private[graft] def cachedMasks(dict: Dict, cacheKey: Long): Map[String, Int] =
     indexCache.computeIfAbsent(cacheKey, _ => firstTokenMasks(dict))
 
   /** The candidate dictionary-key forms of a raw surface — the
@@ -353,7 +353,12 @@ object MentionDetect {
     * ≤[[MaxNgram]]-token span, through its [[cascadeForms]], filtered by
     * the dictionary-key Bloom. The per-turn kernel shared by
     * [[bloomSurvivorForms]] (batch) and StreamingLink.mentionsJoined
-    * (stream-static join path). */
+    * (stream-static join path). Both join the survivors to the dictionary
+    * into per-conversation mini-dictionaries that feed the one
+    * detect-and-inherit kernel, Coref.detectAndInheritFrom: every form
+    * that kernel looks up — detection spans and inheritance grams alike —
+    * is a span of a turn of the conversation, so every real dictionary key
+    * among them survives here. */
   private[graft] def probeForms(
       text: String,
       bloom: org.apache.spark.util.sketch.BloomFilter,

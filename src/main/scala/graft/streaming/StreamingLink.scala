@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.functions.MinHash
 import graft.model._
 import graft.operators.{Coref, MentionDetect}
 import org.apache.spark.broadcast.Broadcast
@@ -11,14 +10,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `conv_el.py::ConvEL` analogue): transcripts arrive as an append stream
   * of turns; detection is stateless per turn, while coref candidate
   * inheritance is PER-CONVERSATION STATE carried across micro-batches
-  * with `flatMapGroupsWithState` — the streaming twin of the batch
-  * `Coref.inheritedOfConv` (same greedy discipline, same
-  * nearest-preceding rule), so a conversation linked incrementally emits
+  * with `flatMapGroupsWithState`. Each micro-batch of a conversation runs
+  * the batch kernel itself — Coref.detectAndInheritFrom, whose
+  * inheritance scan is Coref.inheritFrom — starting from the sources its
+  * earlier batches left, so a conversation linked incrementally emits
   * exactly the mentions the batch pipeline emits on the completed
-  * transcript WHEN the batch side runs with `maxSeen = MaxSeen` (gated by
-  * StreamingLinkSpec, including a conversation with more than MaxSeen
-  * sources); the batch default is unbounded, so conversations carrying
-  * more than [[MaxSeen]] detected mentions can diverge from it.
+  * transcript with `maxSeen = MaxSeen`, by construction. This holds under
+  * the kernel's turn-order rule: a conversation's turns arrive in turn
+  * order (a later micro-batch never carries an earlier turn). The batch
+  * default is unbounded, so conversations carrying more than [[MaxSeen]]
+  * detected mentions can diverge from it.
   *
   * State discipline for 10¹²-turn scale: state per conv_id is the list of
   * inheritance-source mentions, capped at [[MaxSeen]] most-recent (a
@@ -32,82 +33,17 @@ object StreamingLink {
   val MaxSeen = 64
   val IdleTimeoutMs: Long = 6 * 3600 * 1000L // 6h idle → conversation over
 
-  /** Inheritance source kept in state (slim: no ctx vector, no ids). */
-  case class SeenMention(turnIdx: Int, begin: Int, norm: String,
-                         surfaceLower: String, candidates: Array[Candidate])
-  case class ConvState(seen: Seq[SeenMention])
+  case class ConvState(seen: Seq[Coref.SeenMention])
 
   /** Detect + coref-link the turns of one conversation micro-batch given
-    * the seen-mention state; returns (emitted mentions, new state).
-    * Turns are processed in turn_idx order; arrival across batches is
-    * assumed turn-ordered per conversation (live transcript appends). */
-  def processBatch(convId: String, batch: Array[Turn], seen0: Seq[SeenMention],
+    * the sources its earlier batches left; returns (emitted mentions, new
+    * sources). Turns are processed in turn_idx order; arrival across
+    * batches is assumed turn-ordered per conversation (live transcript
+    * appends). */
+  def processBatch(convId: String, batch: Array[Turn], seen0: Seq[Coref.SeenMention],
                    dict: MentionDetect.Dict,
-                   entityVec: String => Array[Float]): (Seq[Mention], Seq[SeenMention]) = {
-    var seen = seen0
-    // token-membership guard — same optimization (and same conservative-
-    // superset semantics) as Coref.inheritedOfConv's seenTokens
-    val seenTokens = scala.collection.mutable.HashSet.empty[String]
-    seen0.foreach(s => s.surfaceLower.split(" ").foreach(seenTokens += _))
-    val out = scala.collection.mutable.ListBuffer.empty[Mention]
-    batch.sortBy(_.turn_idx).foreach { t =>
-      val detected = MentionDetect.mentionsOfTurn(t, dict, entityVec)
-      out ++= detected
-      // coref against state: earlier turns of THIS conversation only
-      val maxN = if (seen.isEmpty) 0 else seen.iterator.map(_.surfaceLower.count(_ == ' ') + 1).max - 1
-      if (maxN > 0) {
-        val toks = MentionDetect.tokenizeCased(if (t.text == null) "" else t.text)
-        val lowerToks = toks.map(_.toLowerCase)
-        val taken = new Array[Boolean](toks.length)
-        detected.foreach { m =>
-          var p = m.begin
-          while (p < math.min(m.end, toks.length)) { taken(p) = true; p += 1 }
-        }
-        var size = math.min(maxN, toks.length)
-        while (size >= 1) {
-          var i = 0
-          while (i + size <= toks.length) {
-            var free = true
-            var p = i
-            while (free && p < i + size) {
-              if (taken(p) || !seenTokens.contains(lowerToks(p))) free = false
-              p += 1
-            }
-            if (free) {
-              val rawSurface = toks.slice(i, i + size).mkString(" ")
-              if (MentionDetect.normalizeMention(rawSurface, dict).isEmpty) {
-                val gram = lowerToks.slice(i, i + size)
-                seen.find(s => Coref.containsRun(s.surfaceLower.split(" "), gram)) match {
-                  case Some(src) =>
-                    val ctxToks = MentionDetect.contextTokens(toks, i, i + size)
-                      .map(_.toLowerCase)
-                    val ctx = MinHash.meanEmbedding(ctxToks, MentionDetect.CtxDim)
-                    val (resolved, score) =
-                      MentionDetect.resolve(src.candidates, ctx, entityVec)
-                    out += Mention(Ids.mentionId(convId, t.turn_idx, i),
-                                   convId, t.turn_idx, i, i + size, rawSurface,
-                                   src.norm, src.candidates, ctx, resolved, score)
-                    p = i
-                    while (p < i + size) { taken(p) = true; p += 1 }
-                    i += size - 1
-                  case None =>
-                }
-              }
-            }
-            i += 1
-          }
-          size -= 1
-        }
-      }
-      // this turn's DETECTED mentions become sources for later turns
-      detected.foreach(m => m.surface.toLowerCase.split(" ").foreach(seenTokens += _))
-      seen = (seen ++ detected.map(m => SeenMention(m.turn_idx, m.begin, m.norm,
-                                                    m.surface.toLowerCase, m.candidates)))
-        .sortBy(s => (-s.turnIdx, -s.begin, s.norm)) // nearest-preceding first
-        .take(MaxSeen)
-    }
-    (out.toList, seen)
-  }
+                   entityVec: String => Array[Float]): (Seq[Mention], Seq[Coref.SeenMention]) =
+    Coref.detectAndInheritFrom(convId, batch, dict, entityVec, None, MaxSeen, seen0)
 
   /** Watermarked windowed aggregation over the mention stream: mentions
     * per (event-time window, surface form) — the SURVEY §2.10 "windowed
@@ -145,26 +81,12 @@ object StreamingLink {
                entityVecBc: Broadcast[Map[String, Array[Float]]],
                timeout: GroupStateTimeout = GroupStateTimeout.ProcessingTimeTimeout)
       : Dataset[Mention] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val armTimeout = timeout == GroupStateTimeout.ProcessingTimeTimeout
-    turns.groupByKey(_.conv_id)
-      .flatMapGroupsWithState[ConvState, Mention](OutputMode.Append, timeout) {
-        (convId, it, state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val dict = dictBc.value
-            val ev: String => Array[Float] =
-              e => entityVecBc.value.getOrElse(e, Array.empty[Float])
-            val seen0 = state.getOption.map(_.seen).getOrElse(Seq.empty)
-            val (ms, seen) = processBatch(convId, it.toArray, seen0, dict, ev)
-            state.update(ConvState(seen))
-            if (armTimeout) state.setTimeoutDuration(IdleTimeoutMs)
-            ms.iterator
-          }
-      }
+    val bcId = dictBc.id
+    linkGroups(turns, (t: Turn) => t.conv_id, entityVecBc, timeout) { (_, ts) =>
+      // first-token masks, as Coref.detectAndInherit: a superset filter
+      val dict = dictBc.value
+      (ts.toArray, dict, Some(MentionDetect.cachedMasks(dict, bcId)))
+    }
   }
 
   /** One probe/hit row of the streaming joined path — a turn sentinel
@@ -190,10 +112,10 @@ object StreamingLink {
     *     even when they detect nothing).
     *  2. STREAM-STATIC left outer join against the dictionary — per
     *     micro-batch, stateless, no watermark needed on the static side.
-    *  3. groupByKey(conv_id) + flatMapGroupsWithState: rebuild the
-    *     micro-batch's per-conversation MINI-dictionary from the joined
-    *     hits and run the IDENTICAL [[processBatch]] kernel over the
-    *     batch's turns with it. Exactness argument as in
+    *  3. groupByKey(conv_id) + flatMapGroupsWithState, the stateful
+    *     stage of [[mentions]], with the micro-batch's per-conversation
+    *     MINI-dictionary rebuilt from the joined hits in place of the
+    *     broadcast Map. Exactness argument as in
     *     Coref.detectAndInheritJoined: every form the kernel probes
     *     (detection spans AND the inheritance rejector's grams) is built
     *     from the batch's own turn tokens, so a real dictionary key was
@@ -233,25 +155,44 @@ object StreamingLink {
               coalesce(col("candidates"),
                        typedLit(Array.empty[Candidate])).as("candidates"))
       .as[ProbeRow]
+    linkGroups(joined, (r: ProbeRow) => r.conv_id, entityVecBc, timeout) { (convId, it) =>
+      val rows = it.toArray
+      val ts = rows.iterator.map(r => (r.turn_idx, r.text)).toSet
+        .toArray.map { case (i, txt) => Turn(convId, i, null, txt, null, null) }
+      val mini: MentionDetect.Dict = rows.iterator
+        .filter(_.freq >= 0L)
+        .map(r => r.mention -> DictEntry(r.mention, r.lower, r.freq, r.candidates))
+        .toMap
+      (ts, mini, None)
+    }
+  }
+
+  /** The stateful stage of both queries: group `rows` by conversation and
+    * run Coref.detectAndInheritFrom over each micro-batch group, with the
+    * conversation's inheritance sources as state. `group` builds one
+    * group's turns, dictionary and first-token masks from its rows — the
+    * only thing the two queries do differently. */
+  private def linkGroups[R](rows: Dataset[R], convOf: R => String,
+                            entityVecBc: Broadcast[Map[String, Array[Float]]],
+                            timeout: GroupStateTimeout)(
+      group: (String, Iterator[R]) => (Array[Turn], MentionDetect.Dict, Option[Map[String, Int]]))
+      : Dataset[Mention] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
     val armTimeout = timeout == GroupStateTimeout.ProcessingTimeTimeout
-    joined.groupByKey(_.conv_id)
+    rows.groupByKey(convOf)
       .flatMapGroupsWithState[ConvState, Mention](OutputMode.Append, timeout) {
         (convId, it, state: GroupState[ConvState]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            val rows = it.toArray
-            val batch = rows.iterator.map(r => (r.turn_idx, r.text)).toSet
-              .toArray.map { case (i, txt) => Turn(convId, i, null, txt, null, null) }
-            val mini: MentionDetect.Dict = rows.iterator
-              .filter(_.freq >= 0L)
-              .map(r => r.mention -> DictEntry(r.mention, r.lower, r.freq, r.candidates))
-              .toMap
+            val (ts, dict, masks) = group(convId, it)
             val ev: String => Array[Float] =
               e => entityVecBc.value.getOrElse(e, Array.empty[Float])
-            val seen0 = state.getOption.map(_.seen).getOrElse(Seq.empty)
-            val (ms, seen) = processBatch(convId, batch, seen0, mini, ev)
+            val seen0 = state.getOption.map(_.seen).getOrElse(Nil)
+            val (ms, seen) =
+              Coref.detectAndInheritFrom(convId, ts, dict, ev, masks, MaxSeen, seen0)
             state.update(ConvState(seen))
             if (armTimeout) state.setTimeoutDuration(IdleTimeoutMs)
             ms.iterator

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Pipeline
-import graft.model.{DictEntry, Turn}
+import graft.model.Turn
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -29,14 +29,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Increments must be conversation-complete (coref inheritance reaches
   * only within a batch — route a conversation's turns into one batch,
   * e.g. session-gap windowing upstream); this is [[Pipeline.runIncremental]]'s
-  * documented contract, inherited verbatim.
+  * documented contract, inherited verbatim. `dictionary` picks broadcast
+  * or distributed-dimension detection, as for [[Pipeline.runIncremental]].
   */
-class StreamingMaintain(dict: Map[String, DictEntry],
-                        vecs: Map[String, Array[Float]],
+class StreamingMaintain(dictionary: Pipeline.Dictionary,
                         initial: Pipeline.IncrementState,
                         cfg: Pipeline.Config = Pipeline.Config()) {
 
-  private val dictionary = Pipeline.Dictionary.Broadcast(dict, vecs)
   @volatile private var current: Pipeline.IncrementState = initial
 
   /** The state after all processed batches (thread-safe snapshot). */

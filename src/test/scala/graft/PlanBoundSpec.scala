@@ -1,19 +1,22 @@
 package graft
 
+import graft.model.Turn
 import graft.operators.MentionDetect
 import graft.sources.TranscriptGen
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{CoGroupExec, MapGroupsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CoGroupExec, LogicalRDD, MapGroupsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan shape of the batch flagship. Stage boundaries are lineage-cut
   * leaves (the lineage rule on [[Pipeline]]), so one action per run
   * executes — and renders, and analyses — the detection plan; a run's job
-  * count repeats; and a run leaves nothing cached but its output. */
+  * count repeats; and a run leaves nothing cached but its output (an
+  * increment or a retraction, nothing but what its returned frames read). */
 class PlanBoundSpec extends SparkSpec {
   import spark.implicits._
 
@@ -81,6 +84,10 @@ class PlanBoundSpec extends SparkSpec {
     }
   }
 
+  /** RDD ids of the checkpoint leaves `df` reads. */
+  private def leafRdds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRDD => r.rdd.id }.toSet
+
   test("a run leaves only its output's RDD persisted") {
     val sc = spark.sparkContext
     for ((name, run) <- runs) {
@@ -92,5 +99,36 @@ class PlanBoundSpec extends SparkSpec {
       assert(outRdd.nonEmpty, name)
       assert(added == outRdd.toSet, name)
     }
+    // the maintenance verbs: only leaves their returned frames read stay
+    val convs = turns.select("conv_id").distinct().as[String].collect().sorted
+    val (baseC, deltaC) = convs.splitAt(convs.length * 2 / 3)
+    val state = Pipeline.bootstrapState(Pipeline.allMentions(
+      turns.where(col("conv_id").isInCollection(baseC)).as[Turn],
+      sc.broadcast(dict), sc.broadcast(vecs)))
+    val forget = baseC.zipWithIndex.collect { case (c, i) if i % 7 == 0 => c }.toSeq.toDF("conv_id")
+    val verbs: Seq[(String, () => Seq[DataFrame])] = Seq(
+      "runIncremental" -> { () =>
+        val inc = Pipeline.runIncremental(
+          turns.where(col("conv_id").isInCollection(deltaC)).as[Turn],
+          Pipeline.Dictionary.Broadcast(dict, vecs), state)
+        Seq(inc.deltaMentions, inc.deltaKeyed, inc.deltaReps, inc.newEdges,
+            inc.memberEdges, inc.clusterUpserts, inc.clusters)
+      },
+      "runRetraction" -> { () => retractionFrames(Pipeline.runRetraction(forget, state)) },
+      "runRetraction without edges" -> { () =>
+        retractionFrames(Pipeline.runRetraction(forget, state.copy(edges = None)))
+      })
+    for ((name, verb) <- verbs) {
+      val before = sc.getPersistentRDDs.keySet
+      val outs = verb()
+      val added = sc.getPersistentRDDs.keySet -- before
+      val read = outs.flatMap(leafRdds).toSet -- before
+      assert(read.nonEmpty, name)
+      assert(added == read, name)
+    }
   }
+
+  private def retractionFrames(r: Pipeline.Retraction): Seq[DataFrame] =
+    Seq(r.clusterUpserts, r.clusters, r.newState.mentions, r.newState.keyed,
+        r.newState.reps, r.newState.clusters) ++ r.newState.edges
 }

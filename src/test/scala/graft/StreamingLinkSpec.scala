@@ -2,6 +2,7 @@ package graft
 
 import graft.model._
 import graft.operators.{Coref, MentionDetect}
+import graft.sources.TranscriptGen
 import graft.streaming.StreamingLink
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -153,6 +154,68 @@ class StreamingLinkSpec extends SparkSpec {
     val lastTurn = streamOut.filter(_.turn_idx == 3 * StreamingLink.MaxSeen)
     assert(lastTurn.map(_.norm).toSet == Set("barack obama", "angela merkel"))
   }
+
+  test("property: chained processBatch and the masked broadcast stream equal one capped batch call") {
+    // generated conversations with entity vectors, plus one conversation
+    // made of all of them in a row, which carries more than MaxSeen sources
+    val cfg = TranscriptGen.GenConfig(nEntities = 40, nConvs = 120, seed = 7L)
+    val gdict = TranscriptGen.dict(cfg)
+    val vecs = TranscriptGen.entityVectors(cfg, MentionDetect.CtxDim)
+    assert(vecs.nonEmpty && vecs.values.forall(_.nonEmpty))
+    val ev: String => Array[Float] = e => vecs.getOrElse(e, Array.empty[Float])
+    val convs = (0L until cfg.nConvs.toLong).map(c => TranscriptGen.genConv(cfg, c)._1)
+    val long = convs.flatten.zipWithIndex.map { case (t, i) =>
+      t.copy(conv_id = "clong", turn_idx = i) }
+    val all = convs :+ long
+    val batch = all.map { ts =>
+      ts.head.conv_id -> Coref.detectAndInheritOfConv(ts.head.conv_id, ts.toArray,
+        gdict, ev, maxSeen = StreamingLink.MaxSeen).map(full).sortBy(_._1)
+    }.toMap
+    def detected(ts: Seq[Turn]) = ts.flatMap(t => MentionDetect.mentionsOfTurn(t, gdict, ev)).size
+    assert(detected(long) > StreamingLink.MaxSeen, detected(long))
+    assert(all.exists(ts => batch(ts.head.conv_id).size > detected(ts)), "nothing inherited")
+    assert(batch.values.flatten.exists(_._8 != ""), "nothing resolved")
+
+    // contiguous turn-order slices at random split points, each slice's
+    // turns shuffled (processBatch sorts them)
+    val rnd = new scala.util.Random(11)
+    def slices(ts: Seq[Turn], n: Int): Seq[Seq[Turn]] = {
+      val cuts = (Seq(0, ts.length) ++ Seq.fill(n - 1)(rnd.nextInt(ts.length + 1))).sorted
+      cuts.sliding(2).map { case Seq(a, b) => rnd.shuffle(ts.slice(a, b)) }.toSeq
+    }
+    for (_ <- 0 until 3; ts <- all) {
+      val id = ts.head.conv_id
+      val (out, _) = slices(ts, 1 + rnd.nextInt(4)).foldLeft(
+          (Seq.empty[Mention], Seq.empty[Coref.SeenMention])) { case ((acc, seen), b) =>
+        val (ms, seen2) = StreamingLink.processBatch(id, b.toArray, seen, gdict, ev)
+        (acc ++ ms, seen2)
+      }
+      assert(out.map(full).sortBy(_._1) == batch(id), id)
+    }
+
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Turn]
+    val q = StreamingLink.mentions(input.toDS(), spark.sparkContext.broadcast(gdict),
+        spark.sparkContext.broadcast(vecs),
+        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
+      .writeStream.format("memory").queryName("stream_generated")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val perConv = all.map(ts => slices(ts, 3))
+      for (i <- 0 until 3) {
+        input.addData(perConv.flatMap(_(i)))
+        q.processAllAvailable()
+      }
+      val got = spark.table("stream_generated").as[Mention].collect().map(full).sortBy(_._1)
+      assert(got.toSeq == batch.values.flatten.toSeq.sortBy(_._1))
+    } finally q.stop()
+  }
+
+  /** Every field of a mention, arrays as sequences. */
+  private def full(m: Mention) =
+    (m.mention_id, m.conv_id, m.turn_idx, m.begin, m.end, m.surface, m.norm,
+     m.resolved, m.resolvedScore, m.candidates.toSeq.map(c => (c.entity, c.prior)),
+     m.ctx.toSeq)
 
   test("watermarked windowed mention counts run incrementally") {
     implicit val sqlCtx = spark.sqlContext

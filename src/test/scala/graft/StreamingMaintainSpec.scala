@@ -19,6 +19,7 @@ class StreamingMaintainSpec extends SparkSpec {
   lazy val vecs = TranscriptGen.entityVectors(cfg, graft.operators.MentionDetect.CtxDim)
   lazy val dictBc = spark.sparkContext.broadcast(dict)
   lazy val vecsBc = spark.sparkContext.broadcast(vecs)
+  lazy val dictionary = Pipeline.Dictionary.Broadcast(dict, vecs)
   lazy val full = Pipeline.run(turns, dict, vecs).cache()
 
   private def assign(df: org.apache.spark.sql.DataFrame): Map[String, String] =
@@ -44,7 +45,7 @@ class StreamingMaintainSpec extends SparkSpec {
     val state0 = Pipeline.bootstrapState(
       Pipeline.allMentions(
         turns.where(col("conv_id").isInCollection(baseC)).as[Turn], dictBc, vecsBc))
-    val maintain = new StreamingMaintain(dict, vecs, state0)
+    val maintain = new StreamingMaintain(dictionary, state0)
     stream(maintain, Seq(slice(b1), slice(b2)))
     assert(assign(maintain.state.clusters) == assign(full))
   }
@@ -59,22 +60,25 @@ class StreamingMaintainSpec extends SparkSpec {
     val state0 = Pipeline.bootstrapState(
       Pipeline.allMentions(
         turns.where(col("conv_id").isInCollection(baseC)).as[Turn], dictBc, vecsBc))
-    val maintain = new StreamingMaintain(dict, vecs, state0)
+    val maintain = new StreamingMaintain(dictionary, state0)
     val stream = graft.sources.TranscriptSource.readJsonlStream(spark, dir)
     val q = maintain.start(graft.sources.TranscriptSource.turns(stream))
     try {
       for ((batch, i) <- Seq(b1, b2).zipWithIndex) {
         // real ingestion shape: write to a staging dir, then atomically
-        // move the finished files into the watched directory
+        // move the finished file into the watched directory. One part file
+        // per batch, so the batch becomes visible as one micro-batch —
+        // conversation-complete and after the earlier batch in id order,
+        // runIncremental's preconditions (several part files moved one by
+        // one can be split across micro-batches, out of id order)
         val staging = java.nio.file.Files.createTempDirectory(s"graft-stage$i")
         turns.where(col("conv_id").isInCollection(batch)).as[Turn]
-          .write.mode("overwrite").json(staging.toString)
+          .coalesce(1).write.mode("overwrite").json(staging.toString)
         val parts = new java.io.File(staging.toString).listFiles()
           .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-        parts.zipWithIndex.foreach { case (f, j) =>
-          java.nio.file.Files.move(f.toPath,
-            java.nio.file.Paths.get(dir, s"batch$i-$j.json"))
-        }
+        assert(parts.length == 1)
+        java.nio.file.Files.move(parts.head.toPath,
+          java.nio.file.Paths.get(dir, s"batch$i.json"))
         q.processAllAvailable()
       }
     } finally q.stop()
@@ -92,7 +96,7 @@ class StreamingMaintainSpec extends SparkSpec {
     val state0 = Pipeline.bootstrapState(
       Pipeline.allMentions(
         turns.where(col("conv_id").isInCollection(baseC)).as[Turn], dictBc, vecsBc))
-    val maintain = new StreamingMaintain(dict, vecs, state0)
+    val maintain = new StreamingMaintain(dictionary, state0)
 
     val turnsIn = MemoryStream[Turn]
     val forgetIn = MemoryStream[String]
@@ -115,7 +119,7 @@ class StreamingMaintainSpec extends SparkSpec {
 
   test("maintaining from NOTHING (empty bootstrap) converges to from-scratch") {
     val empty = Pipeline.bootstrapState(spark.emptyDataset[graft.model.Mention])
-    val maintain = new StreamingMaintain(dict, vecs, empty)
+    val maintain = new StreamingMaintain(dictionary, empty)
     val third = convs.length / 3
     val (a, rest) = convs.splitAt(third)
     val (b, c) = rest.splitAt(third)
