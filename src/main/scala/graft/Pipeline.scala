@@ -6,6 +6,7 @@ import graft.sources.{TableIO, TranscriptGen}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Leaves
 
 /** End-to-end ER pipeline: block → score → cluster (SURVEY.md §3).
   *
@@ -126,11 +127,12 @@ object Pipeline {
     * wJw + wLev + wAgree + wPrior·p_top − wCos ≥ threshold for the default
     * weights), so pairing inside such a group is pure O(n²) waste. Only
     * one representative (min id) per group enters blocking/scoring; group
-    * members attach through direct member→rep edges. This turns the
+    * members take their representative's cluster. This turns the
     * same-entity clique volume (quadratic in corpus size — fatal at 10^12
-    * turns where a hot surface has 10^8 identical mentions) into linear
-    * pre-edges. Low-margin mentions are never collapsed. The output is a
-    * checkpoint leaf; every other leaf of the run is released. */
+    * turns where a hot surface has 10^8 identical mentions) into one
+    * linear member→rep lookup. Low-margin mentions are never collapsed.
+    * The output is a checkpoint leaf; every other leaf of the run is
+    * released. */
   def cluster(ms: Dataset[Mention], cfg: Config = Config()): DataFrame =
     CacheTracker.scoped { // per-run registry: concurrent runs can't drain each other
       val run = flagship(ms, cfg, Stager.InMemory)
@@ -151,11 +153,18 @@ object Pipeline {
   private def flagship(ms0: => Dataset[Mention], cfg: Config, stage: Stager): Flagship = {
     def leafStage(name: String)(df: => DataFrame): DataFrame =
       stage(name)(PhaseTimer.timed(name)(df.localCheckpoint(true)))
-    val msDf = leafStage("mentions")(ms0.toDF())
+    // sized by its rows, not by the detection plan's estimate: every stage
+    // after it plans (and generates classes) the same whichever dictionary
+    // detected the mentions
+    val msDf = {
+      val leaf = leafStage("mentions")(ms0.toDF())
+      Leaves.sized(leaf, CacheTracker.leafRdd(leaf).fold(0L)(_.count()))
+    }
     val spark = msDf.sparkSession
     import spark.implicits._
-    lazy val (scoringMs, memberEdges) = PhaseTimer.timed("supernode") {
-      if (cfg.supernode) supernodeCollapse(msDf, cfg) else (msDf, None)
+    lazy val (scoringMs, toRep) = PhaseTimer.timed("supernode") {
+      if (cfg.supernode) supernodeCollapse(msDf, cfg)
+      else (msDf, msDf.select(metaCols.map(col) :+ col("mention_id").as("rep_id"): _*))
     }
     val keyed = leafStage("keyed")(Blocking.withBlockKeys(scoringMs.as[Mention], cfg.lsh))
     // the scored edges land BEFORE assemble so the edge table is
@@ -166,36 +175,28 @@ object Pipeline {
                                             cfg.starThreshold, cfg.starK)
       Scoring.edges(Blocking.attachPayload(pairIds, scoringMs.as[Mention]), cfg.score)
     }
-    val clusters = leafStage("clusters")(assemble(msDf, edges, memberEdges, cfg))
+    val clusters = leafStage("clusters")(assemble(toRep, edges, cfg))
     Flagship(msDf, keyed, edges, clusters)
   }
 
+  /** The columns of a mention that the cluster assignment carries. */
+  private val metaCols = Seq("mention_id", "conv_id", "turn_idx", "begin", "end",
+                             "surface", "norm", "resolved")
+
   /** CC over the SCORING graph only (representatives + low-margin
-    * mentions — size ∝ distinct surface forms, not corpus rows), then a
-    * single join attaches supernode members to their rep's cluster.
-    * Because members sort after their rep (rep = group min), the
-    * component min over scoring nodes is the global min — cluster ids
-    * stay min-member. */
-  private def assemble(msDf: DataFrame, scored: DataFrame,
-                       memberEdges: Option[DataFrame], cfg: Config): DataFrame = {
+    * mentions — size ∝ distinct surface forms, not corpus rows); every
+    * mention then takes the cluster of its scoring node (`rep_id`, itself
+    * when it scores) in one join, a map-only broadcast of the components
+    * when they are broadcast-sized. Because members sort after their rep
+    * (rep = group min), the component min over scoring nodes is the
+    * global min — cluster ids stay min-member. */
+  private def assemble(toRep: DataFrame, scored: DataFrame, cfg: Config): DataFrame = {
     val assign = PhaseTimer.timed("cc") {
       Clustering.connectedComponents(scored, cfg.ccMaxIter)
     }
-    val full = memberEdges match {
-      case Some(me) =>
-        val memberAssign = me
-          .select(col("src").as("rep_id"), col("dst").as("member_id"))
-          .join(assign, col("rep_id") === col("node"), "left")
-          .select(col("member_id").as("node"),
-                  coalesce(col("cluster_id"), col("rep_id")).as("cluster_id"))
-        assign.unionByName(memberAssign)
-      case None => assign
-    }
-    msDf
-      .join(full, msDf("mention_id") === full("node"), "left")
-      .select(col("mention_id"), col("conv_id"), col("turn_idx"), col("begin"),
-              col("end"), col("surface"), col("norm"), col("resolved"),
-              coalesce(col("cluster_id"), col("mention_id")).as("cluster_id"))
+    toRep.join(assign, toRep("rep_id") === assign("node"), "left")
+      .select(metaCols.map(col) :+
+              coalesce(col("cluster_id"), col("rep_id")).as("cluster_id"): _*)
   }
 
   /** Supernode eligibility: confidently resolved mentions collapse into
@@ -213,42 +214,40 @@ object Pipeline {
       .groupBy("norm", "resolved")
       .agg(min("mention_id").as("rep_id"))
 
-  /** Split mentions into (scoring set = representatives + low-margin
-    * mentions, member→rep pre-edges).
+  /** Split mentions into the scoring set (representatives + low-margin
+    * mentions) and every mention's scoring node: (metaCols, rep_id), a
+    * checkpoint leaf.
     *
     * Shuffle discipline: the full Mention payload (context vector +
-    * candidate list) never crosses a shuffle here. Grouping and the
-    * member-edge join run on a 4-column slim projection (a hot surface
-    * form is ~13% of all rows — shipping payloads through that key was
-    * measured as THE pipeline bottleneck), and the scoring set is carved
-    * out of the payload table with a broadcast semi-join on the (small)
-    * representative + low-margin id set — map-only. */
-  private def supernodeCollapse(msDf: DataFrame, cfg: Config)
-      : (DataFrame, Option[DataFrame]) = {
-    val slim = msDf.select(col("mention_id"), col("norm"), col("resolved"),
-                           col("resolvedScore"))
-    val isEligible = eligibleCond(cfg)
-    // each mention's scoring node: its group rep if eligible, else itself;
-    // the leaf's own job observes the scoring-set size
-    val toRep = slim.where(isEligible).join(repsFrame(msDf, cfg), Seq("norm", "resolved"))
-      .select(col("mention_id"), col("rep_id"))
-      .unionByName(slim.where(!isEligible)
-        .select(col("mention_id"), col("mention_id").as("rep_id")))
-      .observe("scoring_ids", count(when(col("mention_id") === col("rep_id"), 1)).as("n"))
-    val repOf = CacheTracker.leaf(toRep)
-    val memberEdges = repOf.where(col("mention_id") =!= col("rep_id"))
-      .select(col("rep_id").as("src"), col("mention_id").as("dst"))
-    val scoringIds = repOf.where(col("mention_id") === col("rep_id")).select("mention_id")
+    * candidate list) never crosses a shuffle here. The rep join runs on
+    * the payload-free columns (a hot surface form is ~13% of all rows —
+    * shipping payloads through that key was measured as THE pipeline
+    * bottleneck), and the scoring set is carved out of the payload table
+    * with a broadcast semi-join on the (small) representative +
+    * low-margin id set — map-only. */
+  private def supernodeCollapse(msDf: DataFrame, cfg: Config): (DataFrame, DataFrame) = {
+    val reps = repsFrame(msDf, cfg)
+      .select(col("norm").as("rep_norm"), col("resolved").as("rep_resolved"), col("rep_id"))
+    // each mention's scoring node: its group rep if eligible, else itself
+    // (reps hold eligible groups only, so only eligible mentions match)
+    val toRep = CacheTracker.leaf(msDf
+      .join(reps, col("norm") === col("rep_norm") && col("resolved") === col("rep_resolved") &&
+                  eligibleCond(cfg), "left")
+      .select(metaCols.map(col) :+ coalesce(col("rep_id"), col("mention_id")).as("rep_id"): _*))
+    val scoringIds = toRep.where(col("mention_id") === col("rep_id")).select("mention_id")
     // broadcast the id set when it is broadcast-sized (the normal case:
     // #distinct surfaces + low-margin tail); degrade to a shuffled
     // semi-join on the uniform mention_id key otherwise. Cutoff 1M rows:
     // mention ids are ~25-byte strings, so 1M ≈ 25-50 MB serialized —
     // comfortably under executor broadcast budgets; 5M (round 1) risked
-    // a 100-300 MB broadcast per executor.
-    val idRows = toRep.queryExecution.observedMetrics("scoring_ids").getLong(0)
-    val idSide = if (idRows <= 1000000L) broadcast(scoringIds) else scoringIds
-    val scoringMs = CacheTracker.leaf(msDf.join(idSide, Seq("mention_id"), "left_semi"))
-    (scoringMs, Some(memberEdges))
+    // a 100-300 MB broadcast per executor. The ids are a subset of the
+    // mentions, so they are counted only when the mentions leaf's row
+    // count (its size estimate) is over the cutoff.
+    val maxIds = 1000000L
+    val fits = msDf.queryExecution.analyzed.stats.rowCount.exists(_ <= maxIds) ||
+      scoringIds.count() <= maxIds
+    val idSide = if (fits) broadcast(scoringIds) else scoringIds
+    (CacheTracker.leaf(msDf.join(idSide, Seq("mention_id"), "left_semi")), toRep)
   }
 
   /** Full run from raw turns with a broadcast dictionary: detect
@@ -260,7 +259,8 @@ object Pipeline {
     cluster(Dictionary.Broadcast(dict, vecs).mentions(turns, cfg), cfg)
 
   /** [[run]] with both dimension tables distributed
-    * ([[Dictionary.Dimension]]) — no driver Map anywhere in the path. */
+    * ([[Dictionary.Dimension]]): neither table is collected to the driver;
+    * only the dictionary's sketches (MentionDetect.dictSketches) are. */
   def runJoined(turns: Dataset[Turn],
                 dictDf: Dataset[DictEntry],
                 vecDf: DataFrame,

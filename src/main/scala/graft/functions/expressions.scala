@@ -4,12 +4,12 @@
 // graft.functions.GraftFunctions below via this object's re-export.
 package org.apache.spark.sql.graft
 
-import graft.functions.StringSim
+import graft.functions.{MinHash, StringSim}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -175,6 +175,45 @@ case class UnicodeFold(child: Expression)
     copy(child = newChild)
 }
 
+/** Blocking keys of one mention (graft.operators.Blocking.withBlockKeys):
+  * "nm:<norm>", the MinHash-LSH band keys of the norm's character n-grams
+  * and "ent:<entity>" per candidate entity, distinct, in that order.
+  * Codegen'd so keying stays inside the scan's whole-stage stage. */
+case class BlockKeys(left: Expression, right: Expression, k: Int, bands: Int, rows: Int,
+                     charNgram: Int)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, ArrayType(StringType))
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "block_keys"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    BlockKeys.keys(a.asInstanceOf[UTF8String], b.asInstanceOf[ArrayData], k, bands, rows,
+                   charNgram)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"org.apache.spark.sql.graft.BlockKeys.keys($a, $b, $k, $bands, $rows, $charNgram)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BlockKeys =
+    copy(left = newLeft, right = newRight)
+}
+
+object BlockKeys {
+  /** Called from generated code. */
+  def keys(norm: UTF8String, ents: ArrayData, k: Int, bands: Int, rows: Int,
+           charNgram: Int): ArrayData = {
+    val n = norm.toString
+    val bandKeys = MinHash.bandKeys(MinHash.signature(MinHash.charNgrams(n, charNgram), k),
+                                    bands, rows)
+    val entKeys = (0 until ents.numElements()).map(i => "ent:" + ents.getUTF8String(i))
+    new GenericArrayData((("nm:" + n) +: (bandKeys ++ entKeys)).distinct
+      .map(UTF8String.fromString).toArray[Any])
+  }
+}
+
 /** Column wrappers + SQL registration for the custom expressions. */
 object GraftFunctions {
   def jaroWinkler(a: Column, b: Column): Column =
@@ -188,6 +227,11 @@ object GraftFunctions {
   def sortedIntersectSize(a: Column, b: Column): Column =
     ExpressionUtils.column(SortedIntersectSize(ExpressionUtils.expression(a),
                                                ExpressionUtils.expression(b)))
+
+  def blockKeys(norm: Column, ents: Column, k: Int, bands: Int, rows: Int,
+                charNgram: Int): Column =
+    ExpressionUtils.column(BlockKeys(ExpressionUtils.expression(norm),
+                                     ExpressionUtils.expression(ents), k, bands, rows, charNgram))
 
   def unicodeFold(a: Column): Column =
     ExpressionUtils.column(UnicodeFold(ExpressionUtils.expression(a)))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TopKAgg
+import graft.sources.TableIO
 import org.apache.spark.sql.graft.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -249,17 +250,14 @@ object Ann {
     val body = cents.map { case (cell, v) =>
       s"""{"cell":$cell,"v":[${v.mkString(",")}]}"""
     }.mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "centroids.json"),
-      s"""{"roundTo":$roundTo,"nlist":${cents.length},"cells":$body}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    TableIO.writeText(s"$dir/centroids.json",
+      s"""{"roundTo":$roundTo,"nlist":${cents.length},"cells":$body}""")
     cents
   }
 
   /** Centroids + roundTo of an index written by [[buildIvfIndex]]. */
   def loadIvfIndexMeta(dir: String): (Array[(Long, Array[Float])], Int) = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "centroids.json")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val s = TableIO.readText(s"$dir/centroids.json")
     val roundTo = """"roundTo":(\d+)""".r.findFirstMatchIn(s).get.group(1).toInt
     val cents = """\{"cell":(-?\d+),"v":\[([^\]]*)\]\}""".r.findAllMatchIn(s).map { m =>
       (m.group(1).toLong,
@@ -385,17 +383,14 @@ object Ann {
       .repartition(col("band"), col("pfx"))
       .sortWithinPartitions("bucket", "id")
       .write.mode("overwrite").partitionBy("band", "pfx").parquet(s"$dir/data")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "lsh.json"),
-      s"""{"bands":$bands,"rows":$rows,"pfxBits":$pfxBitsEff,"roundTo":$roundTo}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    TableIO.writeText(s"$dir/lsh.json",
+      s"""{"bands":$bands,"rows":$rows,"pfxBits":$pfxBitsEff,"roundTo":$roundTo}""")
   }
 
   /** (bands, rows, pfxBits, roundTo) of an index written by
     * [[buildLshIndex]]. */
   def loadLshIndexMeta(dir: String): (Int, Int, Int, Int) = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "lsh.json")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val s = TableIO.readText(s"$dir/lsh.json")
     def get(k: String): Int =
       (s""""$k":(\\d+)""").r.findFirstMatchIn(s).get.group(1).toInt
     (get("bands"), get("rows"), get("pfxBits"), get("roundTo"))

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.MinHash
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.graft.GraftFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,23 +42,12 @@ object Blocking {
     * p(e|m) dictionary land in the same block, so in-dictionary variants
     * (typos, abbreviations, aliases) have recall 1.0 independent of LSH. */
   def withBlockKeys(mentions: Dataset[Mention], lsh: LshConfig = LshConfig()): DataFrame = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    // project to exactly the three fields the key kernel reads BEFORE
-    // the opaque flatMap (guide §2.3): a typed flatMap over the full
-    // Mention defeats column pruning and decodes the 32-float ctx
-    // vector + full candidate structs per row for nothing
-    mentions.select(col("mention_id"), col("norm"),
-        col("candidates.entity").as("ents"))
-      .as[(String, String, Seq[String])]
-      .flatMap { case (mid, norm, ents) =>
-        val exact = "nm:" + norm
-        val shingles = MinHash.charNgrams(norm, lsh.charNgram)
-        val sig = MinHash.signature(shingles, lsh.k)
-        val bandKeys = MinHash.bandKeys(sig, lsh.bands, lsh.rows)
-        val entKeys = ents.map("ent:" + _)
-        (exact +: (bandKeys ++ entKeys)).distinct.map(k => (k, mid))
-      }.toDF("block_key", "mid")
+    // one codegen'd expression: the keys are built inside the scan's
+    // whole-stage stage, with no object round trip (a typed flatMap adds
+    // a deserialize stage and a serialize stage)
+    val keys = GraftFunctions.blockKeys(col("norm"), col("candidates.entity"),
+                                        lsh.k, lsh.bands, lsh.rows, lsh.charNgram)
+    mentions.select(explode(keys).as("block_key"), col("mention_id").as("mid"))
   }
 
   /** Join the scoring payload back onto deduped id pairs (two hash joins;
@@ -159,28 +148,29 @@ object Blocking {
   /** Block purging (meta-blocking): a mention's nm:, ent: and all 16 LSH
     * band keys are often IDENTICAL member sets (e.g. every mention of one
     * hot surface form shares all its keys) — pairing each copy would
-    * materialize the same pair set 18x. Collapse keys with identical
-    * (size, member-set hash) to one representative key. The signature is
-    * (count, two independent sums of per-id hashes mod ~2³⁰ primes) —
-    * ~60 bits of hash entropy plus the exact size, so two same-size
-    * member sets collide with p ≈ 2⁻⁶⁰: negligible at any realistic
-    * block-key count. Pair-set equality with the naive join is
-    * property-tested (BlockingSpec). Returns the purged (block_key, mid,
-    * key_n) member rows — singleton and beyond-`blockMaxSize` keys
-    * dropped — as a checkpoint leaf registered with CacheTracker (several
-    * regime branches consume it; it is far smaller than the pair output),
-    * and the largest `key_n` (0 if none), observed by the same job. */
+    * materialize the same pair set 18x. Keys with identical (size,
+    * member-set hash) collapse to one block named by that signature
+    * ("n:sig1:sig2"), each member once. The signature is (count, two
+    * independent sums of per-id hashes mod ~2³⁰ primes) — ~60 bits of hash
+    * entropy plus the exact size, so two same-size member sets collide
+    * with p ≈ 2⁻⁶⁰: negligible at any realistic block-key count. Pair-set
+    * equality with the naive join is property-tested (BlockingSpec).
+    * Returns the purged (block_key, mid, key_n) member rows — singleton
+    * and beyond-`blockMaxSize` keys dropped — as a checkpoint leaf
+    * registered with CacheTracker (several regime branches consume it; it
+    * is far smaller than the pair output), and the largest `key_n` (0 if
+    * none), observed by the same job. Every aggregate here is a hash
+    * aggregate: no string-valued buffer. */
   private def purgedRows(keyed: DataFrame, blockMaxSize: Int): (DataFrame, Long) = {
     val sigs = keyed.groupBy("block_key").agg(
       count(lit(1)).as("key_n"),
       sum(pmod(xxhash64(col("mid")), lit(1000000007L))).as("sig1"),
       sum(pmod(xxhash64(col("mid"), lit(7)), lit(998244353L))).as("sig2"))
-    val repKeys = sigs
       .where(col("key_n") >= 2 && col("key_n") <= blockMaxSize)
-      .groupBy("key_n", "sig1", "sig2")
-      .agg(min("block_key").as("block_key"))
-      .select("block_key", "key_n")
-    val observed = keyed.join(repKeys, Seq("block_key"))
+    val observed = keyed.join(sigs, Seq("block_key"))
+      .select(concat_ws(":", col("key_n"), col("sig1"), col("sig2")).as("block_key"),
+              col("mid"), col("key_n"))
+      .distinct()
       .observe("purged_rows", coalesce(max(col("key_n")), lit(0L)).as("max_n"))
     val rows = graft.CacheTracker.leaf(observed)
     (rows, observed.queryExecution.observedMetrics("purged_rows").getLong(0))

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Leaves
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Transitive clustering: connected components over the match-edge frame
   * via alternating large-star / small-star rounds (Kiveris et al.,
@@ -28,34 +31,37 @@ object Clustering {
   def connectedComponents(edges0: DataFrame, maxIter: Int = 50,
                           driverEdgeLimit: Long = 1000000L): DataFrame = {
     require(maxIter >= 1)
+    val spark = edges0.sparkSession
+
+    // Scale-adaptive physical strategy (the same decision a broadcast-join
+    // threshold makes): after supernode collapse the scoring graph is
+    // routinely tiny relative to the corpus (nodes ∝ distinct surface
+    // forms, not turns). When the edges fit comfortably on the driver, one
+    // bounded collect + union-find replaces the O(log n) round loop whose
+    // per-round fixed job latency is pure serial fraction at any cluster
+    // size — identical output (min-member components, property-tested
+    // against the loop in ClusteringSpec). Above the limit, the distributed
+    // large/small-star loop runs as before. The edges are a leaf first, so
+    // the upstream (blocking + scoring, or the q16 tokenize self-join) runs
+    // once whichever path runs; a caller's leaf is read as it is.
+    val isLeaf = graft.CacheTracker.leafRdd(edges0).isDefined
+    val leaf = if (isLeaf) edges0 else edges0.localCheckpoint(true)
+    val head = Leaves.strings(leaf, "src", "dst")(
+      math.min(driverEdgeLimit + 1, Int.MaxValue.toLong).toInt)
+    if (head.length <= driverEdgeLimit) {
+      if (!isLeaf) graft.CacheTracker.release(leaf)
+      return driverCC(spark, head)
+    }
 
     // canonical parent-pointer form: dst < src, no self-loops, distinct
-    val canonical = edges0
+    val canonical = leaf
       .where(col("src") =!= col("dst"))
       .select(
         greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .distinct()
     var (edges, prevSig) = checkpointWithSignature(canonical, "cc_init")
-
-    // Scale-adaptive physical strategy (the same decision a broadcast-join
-    // threshold makes): after supernode collapse the scoring graph is
-    // routinely tiny relative to the corpus (nodes ∝ distinct surface
-    // forms, not turns). When the deduped edge count fits comfortably on
-    // the driver, a single collect + union-find replaces the O(log n)
-    // round loop whose per-round fixed job latency is pure serial fraction
-    // at any cluster size — identical output (min-member components,
-    // property-tested against the loop in ClusteringSpec). Above the
-    // limit, the distributed large/small-star loop runs as before.
-    if (prevSig._1 <= driverEdgeLimit) {
-      // Collect from the CHECKPOINTED frame, not `canonical` — collecting
-      // canonical would re-run the whole upstream (blocking + scoring or
-      // the q16 tokenize self-join) a second time. driverCC's collect is
-      // eager, so releasing the leaf after it returns is safe.
-      val out = driverCC(edges)
-      graft.CacheTracker.release(edges)
-      return out
-    }
+    if (!isLeaf) graft.CacheTracker.release(leaf)
 
     var converged = false
     var iter = 0
@@ -112,11 +118,9 @@ object Clustering {
   }
 
   /** Driver-side union-find over a collected edge list. Output identical
-    * to the distributed loop: (node, cluster_id = min member id). */
-  private def driverCC(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val pairs = edges.select(col("src"), col("dst")).as[(String, String)].collect()
+    * to the distributed loop: (node, cluster_id = min member id) for every
+    * node of a non-loop edge. */
+  private def driverCC(spark: SparkSession, pairs: Array[Array[String]]): DataFrame = {
     val idx = scala.collection.mutable.HashMap.empty[String, Int]
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     def id(s: String): Int = idx.getOrElseUpdate(s, { names += s; names.length - 1 })
@@ -126,11 +130,14 @@ object Clustering {
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    pairs.foreach { case (a, b) =>
-      val ia = id(a); val ib = id(b)
-      while (parent.length < names.length) parent += parent.length
-      val ra = find(ia); val rb = find(ib)
-      if (ra != rb) parent(ra) = rb
+    // the loop's canonical form drops self-loops and null ends
+    pairs.foreach { case Array(a, b) =>
+      if (a != null && b != null && a != b) {
+        val ia = id(a); val ib = id(b)
+        while (parent.length < names.length) parent += parent.length
+        val ra = find(ia); val rb = find(ib)
+        if (ra != rb) parent(ra) = rb
+      }
     }
     // min member name per component root
     val minOf = scala.collection.mutable.HashMap.empty[Int, String]
@@ -141,8 +148,10 @@ object Clustering {
       if (cur.isEmpty || names(i) < cur.get) minOf(r) = names(i)
       i += 1
     }
-    val out = (0 until names.length).map(i => (names(i), minOf(find(i))))
-    spark.createDataset(out).toDF("node", "cluster_id")
+    // external rows become a local relation without a generated serializer
+    val rows = names.indices.map(i => Row(names(i), minOf(find(i))))
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("node", StringType), StructField("cluster_id", StringType))))
   }
 
   /** Eagerly checkpoint `df` while computing its change-detection

@@ -208,8 +208,15 @@ object Coref {
     import org.apache.spark.sql.functions._
     val (bloomBc, masksBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
 
-    val convForms = MentionDetect.bloomSurvivorForms(turns, bloomBc, masksBc)
-      .select(col("conv_id"), col("form")).distinct()
+    // one conv_id shuffle of the slim turns feeds both the probe and the
+    // regroup: the turn scan is one stage, the same one the broadcast
+    // path's detectAndInherit runs. The survivors are shuffled on conv_id
+    // too, so their dedup and the (broadcast) dictionary and vector joins
+    // keep the regroup's partitioning and the side rows need no shuffle
+    val slimTurns = turns.select(col("conv_id"), col("turn_idx"), col("text"))
+      .repartition(col("conv_id"))
+    val convForms = MentionDetect.bloomSurvivorForms(slimTurns, bloomBc, masksBc)
+      .select(col("conv_id"), col("form")).repartition(col("conv_id")).distinct()
     val side = convForms.join(dictDf.toDF(), convForms("form") === dictDf("mention"))
       .select(col("conv_id"), struct(col("mention"), col("lower"), col("freq"),
                                      col("candidates")).as("hit"),
@@ -221,8 +228,7 @@ object Coref {
       case None => side.withColumn("vec", lit(null).cast("array<float>"))
     }
 
-    turns.select(col("conv_id"), col("turn_idx"), col("text"))
-      .groupBy(col("conv_id")).as[String, (String, Int, String)]
+    slimTurns.groupBy(col("conv_id")).as[String, (String, Int, String)]
       .cogroup(sideVecs.select(col("conv_id"), col("hit"), col("entity"), col("vec"))
         .groupBy(col("conv_id")).as[String, (String, DictEntry, String, Array[Float])]) {
         (convId, ts, sideRows) =>

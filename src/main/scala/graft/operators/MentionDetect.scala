@@ -291,18 +291,17 @@ object MentionDetect {
     * first-token masks, for a REL-scale p(e|m) table (SURVEY D3) that
     * cannot be collected into a driver Map; only survivors leave the
     * mapper, deduped per turn, as slim (conv_id, turn_idx, form) rows. The
-    * probe reads the slim (conv_id, turn_idx, text) projection, so the
-    * scan never decodes `role`, `tool` or `ts`. `masksBc` (from
+    * probe reads `slimTurns`, the (conv_id, turn_idx, text) projection, so
+    * the scan never decodes `role`, `tool` or `ts`. `masksBc` (from
     * [[dictSketches]]) prunes span enumeration the same way the broadcast
     * path's [[firstTokenMasks]] does. */
   private[operators] def bloomSurvivorForms(
-      turns: Dataset[Turn],
+      slimTurns: DataFrame,
       bloomBc: Broadcast[org.apache.spark.util.sketch.BloomFilter],
       masksBc: Broadcast[Map[String, Int]]): DataFrame = {
-    val spark = turns.sparkSession
+    val spark = slimTurns.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    turns.select(col("conv_id"), col("turn_idx"), col("text")).as[(String, Int, String)]
+    slimTurns.as[(String, Int, String)]
       .flatMap { case (conv, turn, text) =>
         probeForms(text, bloomBc.value, masksBc.value).map(f => (conv, turn, f))
       }.toDF("conv_id", "turn_idx", "form")

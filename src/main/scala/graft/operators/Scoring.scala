@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.TableIO
 import org.apache.spark.sql.graft.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -105,19 +106,13 @@ object Scoring {
   def saveConfig(path: String, cfg: ScoreConfig): Unit = {
     val body = ArtifactFields
       .map { case (k, get) => s""""$k":${get(cfg)}""" }.mkString(",")
-    val p = java.nio.file.Paths.get(path)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(p,
-      s"""{"artifact":"graft-score-config","version":1,$body}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    TableIO.writeText(path, s"""{"artifact":"graft-score-config","version":1,$body}""")
   }
 
   /** Load a fitted scoring artifact written by [[saveConfig]]. Missing
     * fields keep their code defaults (forward-compatible artifacts). */
   def loadConfig(path: String): ScoreConfig = {
-    val s = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val s = TableIO.readText(path)
     def get(k: String, dflt: Double): Double =
       (s""""$k"\\s*:\\s*(-?[0-9.eE+-]+)""").r.findFirstMatchIn(s)
         .map(_.group(1).toDouble).getOrElse(dflt)

@@ -25,6 +25,30 @@ object TableIO {
   case class Manifest(stage: String, fingerprint: String, rows: Long,
                       partitions: Seq[(Int, Long)])
 
+  /** Write a small UTF-8 side file (JSON metadata of a table or model)
+    * through the Hadoop FileSystem of `path`'s scheme, so on an HDFS or S3
+    * root it lands beside the data, not on the driver's local disk. Parent
+    * directories are created; an existing file is replaced. */
+  def writeText(path: String, body: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = p.getFileSystem(hadoopConf).create(p, true)
+    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** A side file written by [[writeText]]. */
+  def readText(path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(hadoopConf).open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** The active session's Hadoop configuration (a default one without a
+    * session: local and classpath file systems still resolve). */
+  private def hadoopConf: org.apache.hadoop.conf.Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
   private def manifestPath(dir: String): Path = Paths.get(dir, "_graft_manifest.json")
 
   def writeManifest(dir: String, m: Manifest): Unit = {

@@ -115,6 +115,22 @@ class AnnSpec extends SparkSpec {
            canon(Ann.ivfTopK(emb, qs2, 5, nlist = 8, nprobe = 2, centroids = Some(cents))))
   }
 
+  test("index sidecars round-trip through a non-local Hadoop file system") {
+    SchemeLocalFs.register(spark)
+    val local = java.nio.file.Files.createTempDirectory("graft-annfs").toString
+    val ivfDir = SchemeLocalFs.uri(s"$local/ivf")
+    val cents = Ann.buildIvfIndex(emb, ivfDir, nlist = 8)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(local, "ivf", "centroids.json")))
+    val (loaded, roundTo) = Ann.loadIvfIndexMeta(ivfDir)
+    assert(roundTo == 5)
+    assert(loaded.map(_._1).toSeq == cents.map(_._1).toSeq)
+    assert(loaded.zip(cents).forall { case ((_, a), (_, b)) => a.sameElements(b) })
+    val lshDir = SchemeLocalFs.uri(s"$local/lsh")
+    Ann.buildLshIndex(emb, lshDir, bands = 8, rows = 16, pfxBits = 6)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(local, "lsh", "lsh.json")))
+    assert(Ann.loadLshIndexMeta(lshDir) == ((8, 16, 6, 5)))
+  }
+
   test("indexed query physically reads only the probed cells (partition pruning)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfprune").toString
     Ann.buildIvfIndex(emb, dir, nlist = 8)

@@ -84,6 +84,63 @@ class PlanBoundSpec extends SparkSpec {
     }
   }
 
+  /** `plan` without the ids that differ between two runs of one plan:
+    * expression, exchange and observation ids, lambda instances. Codegen
+    * stage ids stay: a generated class's source carries its stage id. */
+  private def normalized(plan: SparkPlan): String = plan.toString
+    .replaceAll("#\\d+L?", "#")
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("\\$Lambda\\$?[0-9/x]+@[0-9a-f]+", "Lambda")
+    .replaceAll("(CollectMetrics [\\w_]+, \\[.*\\]), \\d+", "$1")
+
+  test("run and runJoined execute the same plans after the mentions leaf") {
+    val tails = for ((name, run) <- runs) yield {
+      val (plans, _) = observe(run())
+      name -> plans.drop(plans.indexWhere(detectOps(_) > 0) + 1).map(normalized)
+    }
+    val Seq((_, viaRun), (_, viaJoined)) = tails
+    assert(viaRun.nonEmpty)
+    viaRun.zipAll(viaJoined, "", "").zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"action ${i + 1} after the mentions leaf differs")
+    }
+  }
+
+  // distinct (class loader, source) entries of one run + runJoined cycle
+  // on this fixture (135 before run and runJoined shared their tail)
+  private val CycleEntries = 85
+
+  test("one run + runJoined cycle fits Spark's codegen cache") {
+    import CodegenCache.Entry
+    def drain(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def distinct(es: Seq[Entry]) = es.groupBy(_.key).values.map(_.head).toSeq
+    turns.count()
+    // layer of a compile: detection until the mentions leaf lands, the
+    // shared tail after it (the caller's drain included)
+    def layer(e: Entry) = if (e.phase == "mentions") "detect" else "tail"
+    val perVerb = runs.map { case (name, run) =>
+      name -> distinct(CodegenCache.compiles(spark)(drain(run()))._2)
+    }
+    for ((name, es) <- perVerb) {
+      val byLayer = es.groupBy(e => (layer(e), e.loader)).map { case (k, v) => k -> v.size }
+      info(f"$name%-9s detect driver ${byLayer.getOrElse(("detect", "driver"), 0)}%3d " +
+           f"executor ${byLayer.getOrElse(("detect", "executor"), 0)}%3d | " +
+           f"tail driver ${byLayer.getOrElse(("tail", "driver"), 0)}%3d " +
+           f"executor ${byLayer.getOrElse(("tail", "executor"), 0)}%3d")
+      es.filter(layer(_) == "tail").groupBy(_.kind).toSeq.sortBy(_._1).foreach { case (k, v) =>
+        info(f"  tail $k%-32s ${v.size}%3d")
+      }
+    }
+    val tailKeys = perVerb.map(_._2.filter(layer(_) == "tail").map(_.key).toSet)
+    info(s"tail entries shared by both verbs: ${tailKeys.reduce(_ intersect _).size}")
+    val cycle = distinct(CodegenCache.compiles(spark) {
+      runs.foreach { case (_, run) => drain(run()) }
+    }._2)
+    info(s"cycle: ${cycle.size} entries (" +
+      cycle.groupBy(_.loader).toSeq.sortBy(_._1).map { case (l, v) => s"$l ${v.size}" }.mkString(", ") +
+      "); Spark's cache holds 100")
+    assert(cycle.size <= CycleEntries, s"${cycle.size} entries")
+  }
+
   /** RDD ids of the checkpoint leaves `df` reads. */
   private def leafRdds(df: DataFrame): Set[Int] =
     df.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRDD => r.rdd.id }.toSet

@@ -17,6 +17,17 @@ class ScoringSpec extends SparkSpec {
     assert(Scoring.loadConfig(s"$dir/score.json") == cfg)
   }
 
+  test("score-config artifact round-trips through a non-local Hadoop file system") {
+    SchemeLocalFs.register(spark)
+    val dir = Files.createTempDirectory("graft-score-fs").toString
+    val cfg = Scoring.ScoreConfig(wCosine = 0.21, threshold = 0.42)
+    val path = SchemeLocalFs.uri(s"$dir/nested/score.json")
+    Scoring.saveConfig(path, cfg)
+    // the file went through the scheme's FileSystem to its local path
+    assert(Files.exists(java.nio.file.Paths.get(dir, "nested", "score.json")))
+    assert(Scoring.loadConfig(path) == cfg)
+  }
+
   test("artifact with missing fields falls back to code defaults") {
     val dir = Files.createTempDirectory("graft-score2").toString
     Files.writeString(java.nio.file.Paths.get(dir, "partial.json"),
