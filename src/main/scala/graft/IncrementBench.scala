@@ -22,7 +22,14 @@ import org.apache.spark.sql.functions._
   *
   * `sbt "runMain graft.IncrementBench"`; GRAFT_INC_CONVS sizes the
   * corpus (default 200k convs ≈ 1.3M turns), GRAFT_INC_FRAC the delta
-  * share (default 0.1).
+  * share (default 0.1). GRAFT_INC_JOINED=1 detects the delta with the
+  * distributed dimension dictionary. GRAFT_INC_RETRACT=1 times the
+  * forget path instead: [[Pipeline.runRetraction]] of GRAFT_INC_FRAC of
+  * the base conversations (edge-carve repair over the bootstrapped
+  * edge table), against from-scratch over the remaining ones.
+  * GRAFT_INC_PROFILE=1 replaces the timed maintenance op with a phased
+  * run that reports per-phase walls (with GRAFT_INC_RETRACT=1, the
+  * retraction's [[Pipeline.PhaseTimer]] phases).
   *
   * Scaling protocol (the north-rule two-cluster-size criterion applied
   * to the steady-state maintenance job): set GRAFT_INC_STATE_DIR so the
@@ -100,10 +107,6 @@ object IncrementBench {
     // production, so deriving it is untimed). The comparison leg is a
     // from-scratch run over the remaining conversations.
     val retractMode = sys.env.get("GRAFT_INC_RETRACT").contains("1")
-    // GRAFT_INC_NO_EDGES=1: drop the staged edge table before the timed
-    // retraction — times the re-scoring SLOW path on the identical
-    // state, for a same-protocol A/B against the edge-carve fast path
-    val dropEdges = sys.env.get("GRAFT_INC_NO_EDGES").contains("1")
     val retractConvs =
       if (retractMode)
         baseTurns.select(col("conv_id")).distinct()
@@ -118,8 +121,7 @@ object IncrementBench {
     // blocks contaminating the second's phase attribution.
     val t1 = System.nanoTime()
     val (nUpserts, incS, nClusters) = if (profile) (-1L, -1.0, -1L) else if (retractMode) {
-      val ret = Pipeline.runRetraction(retractConvs,
-        if (dropEdges) state.copy(edges = None) else state)
+      val ret = Pipeline.runRetraction(retractConvs, state)
       val ups = ret.clusterUpserts.count()
       val secs = (System.nanoTime() - t1) / 1e9
       (ups, secs, ret.clusters.count())
@@ -161,7 +163,7 @@ object IncrementBench {
       s""""delta_turns_per_sec":$deltaThr,""" +
       s""""upsert_rows":$nUpserts,"inc_rows":$nClusters,"full_rows":$nFull,""" +
       s""""joined":$joined,"retract":$retractMode,"retract_convs":$nRetract,""" +
-      s""""retract_fast":${retractMode && !dropEdges && state.edges.isDefined},"ncpu":$cpus}"""
+      s""""ncpu":$cpus}"""
     println(json)
 
     // GRAFT_INC_PROFILE=1 + GRAFT_INC_RETRACT=1: attribute the retraction
@@ -171,14 +173,13 @@ object IncrementBench {
       val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
       Pipeline.PhaseTimer.sink = Some((n, s) => phases.synchronized { phases += ((n, s)) })
       val tr = System.nanoTime()
-      val ret = Pipeline.runRetraction(retractConvs,
-        if (dropEdges) state.copy(edges = None) else state)
+      val ret = Pipeline.runRetraction(retractConvs, state)
       val ups = ret.clusterUpserts.count()
       val wall = (System.nanoTime() - tr) / 1e9
       Pipeline.PhaseTimer.sink = None
       val body = phases.map { case (n, s) => s""""$n":$s""" }.mkString(",")
       println(s"""{"metric":"retraction_profile","wall_s":$wall,""" +
-        s""""upsert_rows":$ups,"fast":${!dropEdges && state.edges.isDefined},$body}""")
+        s""""upsert_rows":$ups,$body}""")
     }
     // GRAFT_INC_PROFILE=1: run the increment phase by phase in a clean
     // JVM (the headline run is skipped) and report where the wall goes

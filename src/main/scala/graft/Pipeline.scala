@@ -206,6 +206,11 @@ object Pipeline {
   private def eligibleCond(cfg: Config) =
     col("resolved") =!= "" && col("resolvedScore") >= cfg.score.minMargin
 
+  /** The maintenance paths' attach test: [[eligibleCond]] when the
+    * supernode collapse is on, no mention when it is off. */
+  private def attachCond(cfg: Config) =
+    if (cfg.supernode) eligibleCond(cfg) else lit(false)
+
   /** (norm, resolved, rep_id) supernode representatives — rep = group-min
     * mention_id over the ELIGIBLE members. Map-side partial min, no skew
     * exposure. This is the `reps` base table of [[IncrementState]]. */
@@ -270,7 +275,7 @@ object Pipeline {
     cluster(Dictionary.Dimension(dictDf, vecDf, expectedDictKeys, bloomFpp)
               .mentions(turns, cfg), cfg)
 
-  /** The four base tables an incrementally-maintained deployment keeps
+  /** The five base tables an incrementally-maintained deployment keeps
     * (each an Iceberg table in production; appended/merged between
     * ingestion cycles, never recomputed):
     *
@@ -284,20 +289,16 @@ object Pipeline {
     *    delta mention of a known surface group attaches here without any
     *    re-grouping of the base;
     *  - `clusters`: the previous full assignment (assemble's schema) —
-    *    the increment contracts new edges onto it and emits upserts. */
+    *    the increment contracts new edges onto it and emits upserts;
+    *  - `edges`: the cumulative scored (src, dst) edge set (bootstrap
+    *    edges + every increment's newEdges), one slim append per cycle.
+    *    [[runRetraction]] repairs clusters by carving it and re-derives
+    *    pairs only in blocks whose pair set the retraction changed.
+    *    [[bootstrapState]] always fills it; [[runRetraction]] rejects a
+    *    state without it. */
   case class IncrementState(mentions: DataFrame, keyed: DataFrame,
                             reps: DataFrame, clusters: DataFrame,
-                            // optional FIFTH table: the cumulative scored
-                            // edge set (bootstrap edges + every
-                            // increment's newEdges). Costs one slim
-                            // (src,dst) append per cycle and buys
-                            // retraction a fast path: carve surviving
-                            // edges + re-derive pairs ONLY in blocks
-                            // that actually lost a member, instead of
-                            // re-scoring the whole affected region
-                            // (measured: re-scoring saturates at the
-                            // hot-cluster mass on Zipf corpora).
-                            edges: Option[DataFrame] = None)
+                            edges: Option[DataFrame])
 
   /** One incremental update's outputs. `deltaMentions`/`deltaKeyed`/
     * `deltaReps`/`newEdges` are APPEND rows for the corresponding
@@ -341,7 +342,7 @@ object Pipeline {
       .unionByName(upserts)
 
   /** Roll an increment into the state for the next ingestion cycle
-    * (production: four-or-five Iceberg appends + one MERGE INTO). */
+    * (production: four Iceberg appends + one MERGE INTO). */
   def applyIncrement(state: IncrementState, inc: Increment): IncrementState =
     IncrementState(
       mentions = state.mentions.unionByName(inc.deltaMentions),
@@ -537,7 +538,7 @@ object Pipeline {
                              cfg: Config): IncParts = {
     val spark = deltaMs.sparkSession
     import spark.implicits._
-    val isEligible = if (cfg.supernode) eligibleCond(cfg) else lit(false)
+    val isEligible = attachCond(cfg)
     val slim = deltaMs.select(col("mention_id"), col("norm"), col("resolved"),
                               col("resolvedScore"))
     val eligible = slim.where(isEligible)
@@ -603,8 +604,6 @@ object Pipeline {
                                memberEdges: DataFrame, newEdges: DataFrame,
                                state: IncrementState, cfg: Config): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val metaCols = Seq("mention_id", "conv_id", "turn_idx", "begin", "end",
-                       "surface", "norm", "resolved")
     val deltaMeta = deltaMs.select(metaCols.map(col): _*)
     val baseAssign = state.clusters.select(col("mention_id").as("node"),
                                            col("cluster_id"))
@@ -638,7 +637,7 @@ object Pipeline {
       .select(metaCols.map(state.clusters(_)) :+
               remapChanged("new_cid").as("cluster_id"): _*)
     // (b) delta scoring mentions: own node id, remapped if merged
-    val isEligible = if (cfg.supernode) eligibleCond(cfg) else lit(false)
+    val isEligible = attachCond(cfg)
     val scoringIds = deltaReps.select(col("rep_id").as("mention_id"))
       .unionByName(deltaMs.where(!isEligible).select(col("mention_id")))
     val scoringRows = deltaMeta.join(scoringIds, Seq("mention_id"), "left_semi")
@@ -704,24 +703,22 @@ object Pipeline {
     *     exactly the from-scratch group-min over the remaining corpus.
     *     Replacement reps get block keys computed from their own
     *     payloads (a member was never keyed);
-    *  4. edges among the affected scoring survivors are re-derived with
-    *     [[Blocking.candidatePairsDelta]] over the full post-retraction
-    *     membership of every block an affected survivor belongs to —
-    *     regime and hub decisions follow the block's NEW full size, so
-    *     the pair set matches a from-scratch run over the remaining
-    *     corpus restricted to those nodes. Payloads are carved from the
-    *     base mention table by pair-id semi-join and never shuffled.
-    *     When the state carries the optional EDGE table
-    *     ([[IncrementState.edges]] — populated by [[bootstrapState]] and
-    *     maintained by [[applyIncrement]]), the repair takes the fast
-    *     path instead: carve the surviving affected edges (slim
-    *     anti/semi-joins, no payloads) and re-derive pairs only in DIRTY
-    *     blocks under a regime-aware criterion (cold/triangle blocks
-    *     emit full pair sets so subtraction is always exact; star
-    *     blocks are dirty only on hub loss or a fall through
-    *     starThreshold; oversized only on re-entering pairing;
-    *     rep-gaining blocks always — the per-regime proof is at the
-    *     dirty-classification site below);
+    *  4. edges among the affected scoring survivors come from the
+    *     state's edge table ([[IncrementState.edges]], filled by
+    *     [[bootstrapState]] and maintained by [[applyIncrement]]): carve
+    *     the surviving affected edges (slim anti/semi-joins, no
+    *     payloads), then re-derive pairs with
+    *     [[Blocking.candidatePairsDelta]] only in DIRTY blocks, those
+    *     whose from-scratch pair set over the remaining corpus is not a
+    *     subset of the old one (cold/triangle blocks emit full pair sets,
+    *     so they are never dirty; star blocks are dirty on hub loss or a
+    *     fall through starThreshold; oversized ones on re-entering
+    *     pairing; rep-gaining blocks always — the per-regime proof is at
+    *     the dirty-classification site below). Regime and hub decisions
+    *     follow the block's NEW full size. Payloads are carved from the
+    *     base mention table by pair-id semi-join and never shuffled. A
+    *     state without the edge table is rejected before any job runs;
+    *     build it with [[bootstrapState]];
     *  5. connected components run over that O(affected) subgraph only;
     *     min-member ids survive because members still sort after their
     *     (possibly replacement) group rep.
@@ -751,6 +748,8 @@ object Pipeline {
   def runRetraction(retractConvs: DataFrame, state: IncrementState,
                     cfg: Config = Config(),
                     stage: Stager = Stager.InMemory): Retraction = CacheTracker.scoped {
+    require(state.edges.isDefined,
+      "runRetraction needs the state's edge table: build the state with bootstrapState")
     val rconvs = retractConvs.select(col("conv_id")).distinct()
       .localCheckpoint(true)
     // retractionParts is EAGER: lazy, so a fully-staged rerun computes nothing
@@ -765,13 +764,17 @@ object Pipeline {
     out
   }
 
-  /** Opt-in wall-clock attribution for maintenance internals: when a
-    * sink is installed (IncrementBench profile mode), stages wrapped in
-    * [[PhaseTimer.timed]] report their wall seconds. The stages below
-    * each end in an EAGER localCheckpoint, so the measured wall is the
-    * stage's real compute, not lazy-plan bleed into a later stage. Never
-    * installed in production paths — a None sink is a virtual call and
-    * nothing else. */
+  /** Opt-in wall-clock attribution for pipeline and maintenance stages:
+    * when a sink is installed, stages wrapped in [[PhaseTimer.timed]]
+    * report their wall seconds. The stages each end in an EAGER
+    * localCheckpoint, so the measured wall is the stage's real compute,
+    * not lazy-plan bleed into a later stage. Installed by the profilers
+    * (IncrementBench's profile mode, [[StageProfile]]), the test suite's
+    * codegen-cache probe, and erbench's traced retraction
+    * (`Maintenance.retract`), which reports each retraction phase as the
+    * metric `retract.<name>_s` (`Metrics.retractPhases`): renaming a
+    * phase renames a benchmark metric. The library's own verbs never
+    * install a sink — a None sink is a virtual call and nothing else. */
   private[graft] object PhaseTimer {
     @volatile var sink: Option[(String, Double) => Unit] = None
     def timed[A](name: String)(body: => A): A = sink match {
@@ -784,16 +787,17 @@ object Pipeline {
     }
   }
 
-  /** The retraction's three affected-region artifacts — each
+  /** The retraction's four affected-region artifacts — each
     * retract-sized, each a checkpointable stage table. */
   private[graft] case class RetrParts(replacementReps: DataFrame,
                                       replacementKeyed: DataFrame,
                                       upserts: DataFrame,
-                                      // edges re-derived during the
-                                      // repair — the APPEND rows for the
-                                      // optional edge table (deduped
-                                      // against the surviving carve at
-                                      // assemble time)
+                                      // edges re-scored in dirty blocks —
+                                      // the APPEND rows for the edge
+                                      // table (deduped against the
+                                      // surviving carve at assemble
+                                      // time); empty, with no plan over
+                                      // the state, when no block is dirty
                                       freshEdges: DataFrame)
 
   private[graft] def retractionParts(rconvs: DataFrame, state: IncrementState,
@@ -835,7 +839,7 @@ object Pipeline {
 
     // supernode repair: groups whose representative was retracted re-mint
     // rep = min over eligible survivors (== from-scratch group-min)
-    val isEligible = if (cfg.supernode) eligibleCond(cfg) else lit(false)
+    val isEligible = attachCond(cfg)
     val survMeta = PhaseTimer.timed("surv_meta_carve") {
       CacheTracker.leaf(state.mentions
         .join(survIds, Seq("mention_id"), "left_semi")
@@ -884,8 +888,8 @@ object Pipeline {
         .select(col("mid").as("mention_id")).distinct())
     }
 
-    // score the region-restricted pair set of the given keyed rows —
-    // shared by both edge-derivation paths below
+    // score the region-restricted pair set of the given keyed rows,
+    // deriving only pairs that touch `deltaMids`
     def scoreRegionPairs(keyedRows: DataFrame, deltaMids: DataFrame): DataFrame = {
       val pairs = CacheTracker.leaf(Blocking.candidatePairsDelta(keyedRows,
           deltaMids,
@@ -903,157 +907,130 @@ object Pipeline {
         .localCheckpoint(true)
     }
 
-    // edge derivation for the affected-region CC:
+    // edge derivation for the affected-region CC: carve the surviving
+    // edges of the affected region from the edge table (two slim
+    // anti-joins + one semi-join — no payloads, no scoring) and
+    // re-derive pairs ONLY in DIRTY blocks. Scoring is a pure function
+    // of the two payloads, so a block whose from-scratch pair set over
+    // the survivors is a SUBSET of its old pair set needs no re-scoring
+    // at all — subtraction of retracted-touching edges is exact. Per
+    // regime (Blocking.candidatePairs):
+    //   cold/triangle — both emit the FULL pair set of the block, and
+    //     shrinking n only moves between these two regimes ⇒ NEVER
+    //     dirty;
+    //   star — pairs are members × the starK min-id hubs, and removing
+    //     non-hub members keeps the min-K set identical ⇒ dirty only if
+    //     a hub was retracted, or the block fell through starThreshold
+    //     (the triangle regime wants full pairs the star never scored);
+    //   oversized — dropped from pairing ⇒ dirty only if the retraction
+    //     brought it back under blockMaxSize;
+    //   any block that GAINED a replacement rep ⇒ dirty.
+    // On a Zipf corpus this is the whole game: every retraction touches
+    // the hot star blocks, but their hubs survive with probability
+    // ≈ 1 − retract_frac, so the saturating hub-spoke re-score (measured
+    // flat 93–117 s on 20.8M turns regardless of retract size when every
+    // touched block was re-scored — BENCH.md Round 5) almost never
+    // re-runs. The naive "lost a member ⇒ dirty" criterion was measured
+    // SLOWER than re-scoring every touched block (140.9 s vs ~117 s at
+    // frac 0.003): it re-derived exactly the hot blocks the carve was
+    // meant to skip, and paid the carve on top.
     //
-    //  - WITHOUT the edge table (state.edges = None): re-derive pairs in
-    //    EVERY block an affected survivor touches (regimes/hubs by the
-    //    block's NEW full size) and re-score them. Correct, but the work
-    //    saturates at the hot-cluster mass on skewed corpora (measured:
-    //    flat ~95-117 s at 8c across retract fractions 0.003-0.1 on a
-    //    20.8M-turn Zipf corpus, vs 149 s from-scratch).
-    //  - WITH the edge table: carve the surviving edges of the affected
-    //    region (two slim anti-joins + one semi-join — no payloads, no
-    //    scoring) and re-derive pairs ONLY in DIRTY blocks. Scoring is a
-    //    pure function of the two payloads, so a block whose from-scratch
-    //    pair set over the survivors is a SUBSET of its old pair set
-    //    needs no re-scoring at all — subtraction of retracted-touching
-    //    edges is exact. Per regime (Blocking.candidatePairs):
-    //      cold/triangle — both emit the FULL pair set of the block, and
-    //        shrinking n only moves between these two regimes ⇒ NEVER
-    //        dirty;
-    //      star — pairs are members × the starK min-id hubs, and
-    //        removing non-hub members keeps the min-K set identical ⇒
-    //        dirty only if a hub was retracted, or the block fell
-    //        through starThreshold (the triangle regime wants full pairs
-    //        the star never scored);
-    //      oversized — dropped from pairing ⇒ dirty only if the
-    //        retraction brought it back under blockMaxSize;
-    //      any block that GAINED a replacement rep ⇒ dirty.
-    //    On a Zipf corpus this is the whole game: every retraction
-    //    touches the hot star blocks, but their hubs survive with
-    //    probability ≈ 1 − retract_frac, so the saturating hub-spoke
-    //    re-score (measured flat 93–117 s on 20.8M turns regardless of
-    //    retract size — BENCH.md Round 5) almost never re-runs. The
-    //    naive "lost a member ⇒ dirty" criterion was measured SLOWER
-    //    than the no-edge-table path (140.9 s vs ~117 s at frac 0.003):
-    //    it re-derived exactly the hot blocks the carve was meant to
-    //    skip, and paid the carve on top.
-    val (ccEdges, freshEdges) = state.edges match {
-      case Some(e) =>
-        // Block stats WITHOUT materializing membership (a first cut
-        // localCheckpointed the touched blocks' keyed rows and measured
-        // SLOWER than the whole re-scoring slow path — on a Zipf corpus
-        // the touched membership is most of the keyed table):
-        //  - r (members lost) per block: broadcast semi-join on the
-        //    retract-id set, then a map-side-partial count — slim;
-        //  - n (old size) per block: one full slim aggregation of the
-        //    keyed table, inner-joined to r so only touched blocks
-        //    survive (the full agg's shuffle carries per-partition
-        //    partial counts, never membership).
-        val rCounts = state.keyed
-          .join(retractIds.withColumnRenamed("mention_id", "mid"),
-                Seq("mid"), "left_semi")
-          .groupBy("block_key").agg(count(lit(1)).as("r"))
-        val nCounts = state.keyed.groupBy("block_key").agg(count(lit(1)).as("n"))
-        val stats = PhaseTimer.timed("dirty_stats") {
-          CacheTracker.leaf(nCounts.join(rCounts, Seq("block_key")))
-        }
-        val regimeDirty = stats.where(
-            (col("n") > cfg.blockMaxSize &&
-             col("n") - col("r") <= cfg.blockMaxSize) ||
-            (col("n") > cfg.starThreshold && col("n") <= cfg.blockMaxSize &&
-             col("n") - col("r") <= cfg.starThreshold))
-          .select("block_key")
-        // star-hub retention check: the touched star blocks are FEW
-        // (their key set broadcasts), so the hub scan is a map-only
-        // carve of the keyed table + a min-K partial aggregation
-        val starKeys = stats
-          .where(col("n") > cfg.starThreshold && col("n") <= cfg.blockMaxSize)
-          .select("block_key")
-        val oldHubs = CacheTracker.leaf(Blocking.starHubs(
-            state.keyed.join(broadcast(starKeys), Seq("block_key"), "left_semi")
-              .select(col("block_key"), col("mid")), cfg.starK))
-        val hubDirty = oldHubs
-          .join(retractIds.withColumnRenamed("mention_id", "hub_id"),
-                Seq("hub_id"), "left_semi")
-          .select("block_key").distinct()
-        // Two classes of dirty block, re-derived at DIFFERENT widths
-        // (profile: full-width re-derivation of rep-gaining hot blocks
-        // was 19.7 of the 53.1 s wall):
-        //  - FULL-dirty (regime changed): the from-scratch pair set has
-        //    pairs among untouched old members (star→triangle wants the
-        //    full O(n²) set; oversized re-entry starts from zero) —
-        //    re-derive everything in the block;
-        //  - DELTA-dirty (hub lost and/or replacement rep gained, regime
-        //    held): every pair the from-scratch run has and the carve
-        //    lacks touches a NEW participant — a replacement rep (its
-        //    pairs all touch it, including the all-members×rep set when
-        //    its group-min id promotes it into the hub set: the delta
-        //    pair generator derives delta-hub × all-members natively) or
-        //    a PROMOTED hub (members × new-hub pairs all touch it).
-        //    Extra retained edges to DEMOTED hubs were valid scored
-        //    edges inside one old cluster — retaining them is the
-        //    documented monotone stance (deleting data never merges).
-        val fullDirty = CacheTracker.leaf(regimeDirty)
-        val deltaDirty = hubDirty
-          .unionByName(newRepKeyed.select("block_key"))
-          .distinct()
-          .join(fullDirty, Seq("block_key"), "left_anti")
-        val newHubs = Blocking.starHubs(
-            newKeyedAll.join(broadcast(hubDirty), Seq("block_key"), "left_semi")
-              .select(col("block_key"), col("mid")), cfg.starK)
-        val promotedMids = newHubs
-          .join(oldHubs, Seq("block_key", "hub_id"), "left_anti")
-          .select(col("hub_id").as("mid")).distinct()
-        val deltaMids = CacheTracker.leaf(replacementRepIds
-          .select(col("mention_id").as("mid"))
-          .unionByName(promotedMids).distinct())
-        val (keyedFullDirty, keyedDeltaDirty) = PhaseTimer.timed("dirty_classify") {
-          (CacheTracker.leaf(
-             newKeyedAll.join(broadcast(fullDirty), Seq("block_key"), "left_semi")),
-           CacheTracker.leaf(
-             newKeyedAll.join(broadcast(deltaDirty), Seq("block_key"), "left_semi")))
-        }
-        val fresh = PhaseTimer.timed("fresh_scoring") {
-          // regime-change blocks are RARE (sizes must straddle a
-          // threshold exactly where the retraction crossed it), and a
-          // retraction that kept every hub and rep has no delta side —
-          // skip either pass entirely in its empty case rather than
-          // paying its fixed pair/payload/score stages
-          val sides = Seq(
-            (keyedDeltaDirty, deltaMids),
-            (keyedFullDirty, scoringSurvIds.select(col("mention_id").as("mid"))))
-            .filter { case (rows, _) => !rows.isEmpty }
-            .map { case (rows, mids) => CacheTracker.register(scoreRegionPairs(rows, mids)) }
-          (if (sides.isEmpty) CacheTracker.register(scoreRegionPairs(keyedDeltaDirty, deltaMids))
-           else sides.reduce(_ unionByName _))
-            .localCheckpoint(true)
-        }
-        val carvedAffected = e
-          .join(retractIds.withColumnRenamed("mention_id", "src"),
-                Seq("src"), "left_anti")
-          .join(retractIds.withColumnRenamed("mention_id", "dst"),
-                Seq("dst"), "left_anti")
-          .join(scoringSurvIds.withColumnRenamed("mention_id", "src"),
-                Seq("src"), "left_semi")
-        (carvedAffected.unionByName(fresh), fresh)
-      case None =>
-        val activeKeys = newKeyedAll
-          .join(scoringSurvIds.withColumnRenamed("mention_id", "mid"),
-                Seq("mid"), "left_semi")
-          .select("block_key").distinct()
-        val keyedActive = PhaseTimer.timed("active_keys") {
-          CacheTracker.leaf(newKeyedAll
-            .join(activeKeys, Seq("block_key"), "left_semi"))
-        }
-        // no edge table to append to, so no returned frame reads these
-        val all = PhaseTimer.timed("region_scoring") {
-          CacheTracker.register(scoreRegionPairs(keyedActive,
-            scoringSurvIds.select(col("mention_id").as("mid"))))
-        }
-        (all, all)
+    // Block stats WITHOUT materializing membership (a first cut
+    // localCheckpointed the touched blocks' keyed rows and measured
+    // SLOWER than re-scoring every touched block — on a Zipf corpus
+    // the touched membership is most of the keyed table):
+    //  - r (members lost) per block: broadcast semi-join on the
+    //    retract-id set, then a map-side-partial count — slim;
+    //  - n (old size) per block: one full slim aggregation of the
+    //    keyed table, inner-joined to r so only touched blocks
+    //    survive (the full agg's shuffle carries per-partition
+    //    partial counts, never membership).
+    val rCounts = state.keyed
+      .join(retractIds.withColumnRenamed("mention_id", "mid"),
+            Seq("mid"), "left_semi")
+      .groupBy("block_key").agg(count(lit(1)).as("r"))
+    val nCounts = state.keyed.groupBy("block_key").agg(count(lit(1)).as("n"))
+    val stats = PhaseTimer.timed("dirty_stats") {
+      CacheTracker.leaf(nCounts.join(rCounts, Seq("block_key")))
     }
-    val edges = ccEdges
+    val regimeDirty = stats.where(
+        (col("n") > cfg.blockMaxSize &&
+         col("n") - col("r") <= cfg.blockMaxSize) ||
+        (col("n") > cfg.starThreshold && col("n") <= cfg.blockMaxSize &&
+         col("n") - col("r") <= cfg.starThreshold))
+      .select("block_key")
+    // star-hub retention check: the touched star blocks are FEW
+    // (their key set broadcasts), so the hub scan is a map-only
+    // carve of the keyed table + a min-K partial aggregation
+    val starKeys = stats
+      .where(col("n") > cfg.starThreshold && col("n") <= cfg.blockMaxSize)
+      .select("block_key")
+    val oldHubs = CacheTracker.leaf(Blocking.starHubs(
+        state.keyed.join(broadcast(starKeys), Seq("block_key"), "left_semi")
+          .select(col("block_key"), col("mid")), cfg.starK))
+    val hubDirty = oldHubs
+      .join(retractIds.withColumnRenamed("mention_id", "hub_id"),
+            Seq("hub_id"), "left_semi")
+      .select("block_key").distinct()
+    // Two classes of dirty block, re-derived at DIFFERENT widths
+    // (profile: full-width re-derivation of rep-gaining hot blocks
+    // was 19.7 of the 53.1 s wall):
+    //  - FULL-dirty (regime changed): the from-scratch pair set has
+    //    pairs among untouched old members (star→triangle wants the
+    //    full O(n²) set; oversized re-entry starts from zero) —
+    //    re-derive everything in the block;
+    //  - DELTA-dirty (hub lost and/or replacement rep gained, regime
+    //    held): every pair the from-scratch run has and the carve
+    //    lacks touches a NEW participant — a replacement rep (its
+    //    pairs all touch it, including the all-members×rep set when
+    //    its group-min id promotes it into the hub set: the delta
+    //    pair generator derives delta-hub × all-members natively) or
+    //    a PROMOTED hub (members × new-hub pairs all touch it).
+    //    Extra retained edges to DEMOTED hubs were valid scored
+    //    edges inside one old cluster — retaining them is the
+    //    documented monotone stance (deleting data never merges).
+    val fullDirty = CacheTracker.leaf(regimeDirty)
+    val deltaDirty = hubDirty
+      .unionByName(newRepKeyed.select("block_key"))
+      .distinct()
+      .join(fullDirty, Seq("block_key"), "left_anti")
+    val newHubs = Blocking.starHubs(
+        newKeyedAll.join(broadcast(hubDirty), Seq("block_key"), "left_semi")
+          .select(col("block_key"), col("mid")), cfg.starK)
+    val promotedMids = newHubs
+      .join(oldHubs, Seq("block_key", "hub_id"), "left_anti")
+      .select(col("hub_id").as("mid")).distinct()
+    val deltaMids = CacheTracker.leaf(replacementRepIds
+      .select(col("mention_id").as("mid"))
+      .unionByName(promotedMids).distinct())
+    val (keyedFullDirty, keyedDeltaDirty) = PhaseTimer.timed("dirty_classify") {
+      (CacheTracker.leaf(
+         newKeyedAll.join(broadcast(fullDirty), Seq("block_key"), "left_semi")),
+       CacheTracker.leaf(
+         newKeyedAll.join(broadcast(deltaDirty), Seq("block_key"), "left_semi")))
+    }
+    val freshEdges = PhaseTimer.timed("fresh_scoring") {
+      // regime-change blocks are RARE (sizes must straddle a
+      // threshold exactly where the retraction crossed it), and a
+      // retraction that kept every hub and rep has no delta side —
+      // skip either pass entirely in its empty case rather than
+      // paying its fixed pair/payload/score stages; with no dirty
+      // block at all nothing is planned
+      Seq((keyedDeltaDirty, deltaMids),
+          (keyedFullDirty, scoringSurvIds.select(col("mention_id").as("mid"))))
+        .filter { case (rows, _) => !rows.isEmpty }
+        .map { case (rows, mids) => CacheTracker.register(scoreRegionPairs(rows, mids)) }
+        .reduceOption(_ unionByName _)
+        .fold(Seq.empty[(String, String)].toDF("src", "dst"))(_.localCheckpoint(true))
+    }
+    val edges = state.edges.get
+      .join(retractIds.withColumnRenamed("mention_id", "src"),
+            Seq("src"), "left_anti")
+      .join(retractIds.withColumnRenamed("mention_id", "dst"),
+            Seq("dst"), "left_anti")
+      .join(scoringSurvIds.withColumnRenamed("mention_id", "src"),
+            Seq("src"), "left_semi")
+      .unionByName(freshEdges)
 
     // CC over the affected subgraph; singletons coalesce to themselves.
     // Members still sort after their group rep, so component min over
@@ -1077,8 +1054,6 @@ object Pipeline {
     }
 
     // MERGE rows: surviving affected rows whose assignment changed
-    val metaCols = Seq("mention_id", "conv_id", "turn_idx", "begin", "end",
-                       "surface", "norm", "resolved")
     val upserts = PhaseTimer.timed("upserts") {
       surv
         .withColumnRenamed("cluster_id", "old_cid")

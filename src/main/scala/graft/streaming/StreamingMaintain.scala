@@ -57,8 +57,8 @@ class StreamingMaintain(dictionary: Pipeline.Dictionary,
   /** Apply one batch of FORGET requests (conversation ids) — the
     * streaming right-to-be-forgotten path, symmetric to [[applyBatch]]:
     * each micro-batch of retraction requests runs ONE
-    * [[Pipeline.runRetraction]] repair (O(affected-cluster) work, the
-    * edge-table fast path when the state carries it) and rolls the
+    * [[Pipeline.runRetraction]] repair (O(affected-cluster) work over
+    * the state's edge table) and rolls the
     * carved state forward. Appends only MERGE clusters and retractions
     * only SPLIT them, so interleaving the two streams converges to the
     * from-scratch clustering over (ingested − forgotten) regardless of

@@ -171,10 +171,7 @@ class PlanBoundSpec extends SparkSpec {
         Seq(inc.deltaMentions, inc.deltaKeyed, inc.deltaReps, inc.newEdges,
             inc.memberEdges, inc.clusterUpserts, inc.clusters)
       },
-      "runRetraction" -> { () => retractionFrames(Pipeline.runRetraction(forget, state)) },
-      "runRetraction without edges" -> { () =>
-        retractionFrames(Pipeline.runRetraction(forget, state.copy(edges = None)))
-      })
+      "runRetraction" -> { () => retractionFrames(Pipeline.runRetraction(forget, state)) })
     for ((name, verb) <- verbs) {
       val before = sc.getPersistentRDDs.keySet
       val outs = verb()

@@ -2,6 +2,9 @@ package graft
 
 import graft.model.{Candidate, Mention, Turn}
 import graft.sources.TranscriptGen
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Retraction-maintenance gate: forgetting conversations via
@@ -132,14 +135,26 @@ class RetractionSpec extends SparkSpec {
     val state = stateOf(turns.as[Turn])
     assert(state.edges.isDefined, "bootstrapState must capture the edge table")
     val fast = Pipeline.runRetraction(retract.toDF("conv_id"), state)
-    val slow = Pipeline.runRetraction(retract.toDF("conv_id"),
-                                      state.copy(edges = None))
     val remaining = turns.where(!col("conv_id").isInCollection(retract)).as[Turn]
     val scratch = assign(Pipeline.run(remaining, dict, vecs))
     assert(assign(fast.clusters) == scratch)
-    assert(assign(slow.clusters) == scratch)
     assert(fast.newState.edges.isDefined)
-    assert(slow.newState.edges.isEmpty)
+  }
+
+  test("a state without the edge table is rejected before any job runs") {
+    val state = stateOf(turns.where(col("conv_id").isInCollection(convs.take(8))).as[Turn])
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val err = try intercept[IllegalArgumentException] {
+      Pipeline.runRetraction(convs.take(1).toDF("conv_id"), state.copy(edges = None))
+    } finally { ListenerBus.drain(sc); sc.removeSparkListener(listener) }
+    assert(err.getMessage.contains("build the state with bootstrapState"))
+    assert(jobs.get == 0)
   }
 
   test("star-regime hub retraction: orphaned spokes re-link via the new hub (both paths)") {
@@ -155,10 +170,7 @@ class RetractionSpec extends SparkSpec {
     assert(scratch.values.toSet == Set("c02:000000:000000"),
       "from-scratch over the survivors re-links them via a new hub")
     val fast = Pipeline.runRetraction(Seq("c01").toDF("conv_id"), state, starCfg)
-    val slow = Pipeline.runRetraction(Seq("c01").toDF("conv_id"),
-                                      state.copy(edges = None), starCfg)
     assert(assign(fast.clusters) == scratch)
-    assert(assign(slow.clusters) == scratch)
   }
 
   test("spoke retraction of a star block re-derives ZERO fresh edges (clean-block carve)") {
@@ -172,6 +184,8 @@ class RetractionSpec extends SparkSpec {
     val parts = Pipeline.retractionParts(Seq("c05").toDF("conv_id"), state, starCfg)
     assert(parts.freshEdges.isEmpty,
       "no hub left and the regime held — nothing may be re-scored")
+    assert(!parts.freshEdges.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRDD]),
+      "with no dirty block the fresh edges read no leaf: no scoring plan over state.keyed")
 
     val survivors = ms.zipWithIndex.collect { case (m, i) if i != 4 => m }
     val scratchState = Pipeline.bootstrapState(survivors.toDS(), starCfg)
