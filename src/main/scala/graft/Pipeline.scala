@@ -1015,13 +1015,18 @@ object Pipeline {
       // retraction that kept every hub and rep has no delta side —
       // skip either pass entirely in its empty case rather than
       // paying its fixed pair/payload/score stages; with no dirty
-      // block at all nothing is planned
+      // block at all nothing is planned. One side's leaf is kept
+      // unregistered: newState.edges reads it after the scope drains
       Seq((keyedDeltaDirty, deltaMids),
           (keyedFullDirty, scoringSurvIds.select(col("mention_id").as("mid"))))
         .filter { case (rows, _) => !rows.isEmpty }
-        .map { case (rows, mids) => CacheTracker.register(scoreRegionPairs(rows, mids)) }
-        .reduceOption(_ unionByName _)
-        .fold(Seq.empty[(String, String)].toDF("src", "dst"))(_.localCheckpoint(true))
+        .map { case (rows, mids) => scoreRegionPairs(rows, mids) } match {
+        case Seq() => Seq.empty[(String, String)].toDF("src", "dst")
+        case Seq(side) => side
+        case sides =>
+          sides.foreach(CacheTracker.register(_))
+          sides.reduce(_ unionByName _).localCheckpoint(true)
+      }
     }
     val edges = state.edges.get
       .join(retractIds.withColumnRenamed("mention_id", "src"),

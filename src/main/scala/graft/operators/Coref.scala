@@ -88,13 +88,13 @@ object Coref {
     * same function the map-only path runs); the detected set then feeds
     * [[inheritedOfConv]] directly, so the result is detected ∪ inherited
     * BY CONSTRUCTION — no separate detection job, no mention-side
-    * shuffle, no cogroup. */
+    * shuffle, no cogroup. `sketch` is `dict`'s FirstTokenSketch. */
   def detectAndInheritOfConv(convId: String, ts: Array[Turn],
                              dict: MentionDetect.Dict,
                              entityVec: String => Array[Float],
-                             masks: Option[Map[String, Int]] = None,
+                             sketch: MentionDetect.FirstTokenSketch,
                              maxSeen: Int = Int.MaxValue): Seq[Mention] =
-    detectAndInheritFrom(convId, ts, dict, entityVec, masks, maxSeen, Nil)._1
+    detectAndInheritFrom(convId, ts, dict, entityVec, sketch, maxSeen, Nil)._1
 
   /** [[detectAndInheritOfConv]] over the next turns of a conversation
     * whose earlier turns left the inheritance sources `seen0`; returns
@@ -103,10 +103,10 @@ object Coref {
   def detectAndInheritFrom(convId: String, ts: Array[Turn],
                            dict: MentionDetect.Dict,
                            entityVec: String => Array[Float],
-                           masks: Option[Map[String, Int]], maxSeen: Int,
+                           sketch: MentionDetect.FirstTokenSketch, maxSeen: Int,
                            seen0: Seq[SeenMention]): (Seq[Mention], List[SeenMention]) = {
     val detected = ts.sortBy(_.turn_idx)
-      .flatMap(t => MentionDetect.mentionsOfTurn(t, dict, entityVec, masks))
+      .flatMap(t => MentionDetect.mentionsOfTurn(t, dict, entityVec, sketch))
     val (inh, seen) = inheritFrom(convId, ts, detected, dict, entityVec, maxSeen, seen0)
     (scala.collection.immutable.ArraySeq.unsafeWrapArray(detected) ++ inh, seen)
   }
@@ -125,7 +125,8 @@ object Coref {
     * are bounded so per-group work is uniform — no skew exposure), the
     * detected set never crosses any shuffle, and the union is free.
     * Property-equal to detect ∪ [[inherited]] (CorefSpec / PipelineSpec).
-    */
+    * The dictionary's FirstTokenSketch is built on the driver and
+    * broadcast beside it. */
   def detectAndInherit(turns: Dataset[Turn],
                        dictBc: Broadcast[MentionDetect.Dict],
                        entityVecBc: Broadcast[Map[String, Array[Float]]],
@@ -133,21 +134,20 @@ object Coref {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val bcId = dictBc.id
+    val sketchBc = spark.sparkContext.broadcast(MentionDetect.FirstTokenSketch.of(dictBc.value))
     // grouped on the conv_id column, not by a key function: no
     // AppendColumns stage, and the turn side generates the same classes as
     // detectAndInheritJoined's, so the two paths share codegen cache entries
     turns.select(col("conv_id"), col("turn_idx"), col("text"))
       .groupBy(col("conv_id")).as[String, (String, Int, String)]
       .flatMapGroups { (convId, it) =>
-        val dict = dictBc.value
-        val masks = Some(MentionDetect.cachedMasks(dict, bcId))
+        val (dict, sketch) = (dictBc.value, sketchBc.value)
         val ev: String => Array[Float] =
           e => entityVecBc.value.getOrElse(e, Array.empty[Float])
         val ts = it.map { case (_, idx, text) =>
           Turn(convId, idx, null, text, null, null)
         }.toArray
-        detectAndInheritOfConv(convId, ts, dict, ev, masks, maxSeen).iterator
+        detectAndInheritOfConv(convId, ts, dict, ev, sketch, maxSeen).iterator
       }
   }
 
@@ -158,11 +158,13 @@ object Coref {
     *
     * Shape: one probe pass, one dictionary join, one regroup.
     *
-    *  1. Probe (map-only, MentionDetect.bloomSurvivorForms): every
+    *  1. Probe (map-only, MentionDetect.probeForms): every
     *     ≤MaxNgram-token span of the slim (conv_id, turn_idx, text)
-    *     projection probes its cascade forms against a broadcast Bloom of
-    *     dictionary keys; survivors leave as (conv_id, form) rows, deduped
-    *     per conversation.
+    *     projection that the dictionary's FirstTokenSketch admits probes
+    *     its cascade forms against a Bloom of dictionary keys (both
+    *     broadcast by MentionDetect.dictSketches, fixed in size by the key
+    *     count); survivors leave as (conv_id, form) rows, deduped per
+    *     conversation.
     *  2. Equi-join survivors against the dictionary on its key (one row
     *     per key on the dictionary side — no pair explosion; AQE skew
     *     handles Zipf-hot surfaces) and explode each hit into one slim
@@ -171,8 +173,8 @@ object Coref {
     *     `vecDf`, the side rows left-join it on entity, so each row
     *     carries its entity's vector.
     *  3. Cogroup slim turns with the side rows on the conv_id column: each
-    *     group builds its MINI-DICTIONARY and mini vector map and runs the
-    *     IDENTICAL [[detectAndInheritOfConv]].
+    *     group builds its MINI-DICTIONARY (and its FirstTokenSketch) and
+    *     mini vector map and runs the IDENTICAL [[detectAndInheritOfConv]].
     *
     * Exactness (not approximate): every form the in-group code probes —
     * detection candidates AND the inheritance rejector's grams — is built
@@ -206,7 +208,7 @@ object Coref {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val (bloomBc, masksBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
+    val (bloomBc, sketchBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
 
     // one conv_id shuffle of the slim turns feeds both the probe and the
     // regroup: the turn scan is one stage, the same one the broadcast
@@ -215,7 +217,10 @@ object Coref {
     // keep the regroup's partitioning and the side rows need no shuffle
     val slimTurns = turns.select(col("conv_id"), col("turn_idx"), col("text"))
       .repartition(col("conv_id"))
-    val convForms = MentionDetect.bloomSurvivorForms(slimTurns, bloomBc, masksBc)
+    val convForms = slimTurns.as[(String, Int, String)]
+      .flatMap { case (conv, turn, text) =>
+        MentionDetect.probeForms(text, bloomBc.value, sketchBc.value).map(f => (conv, turn, f))
+      }.toDF("conv_id", "turn_idx", "form")
       .select(col("conv_id"), col("form")).repartition(col("conv_id")).distinct()
     val side = convForms.join(dictDf.toDF(), convForms("form") === dictDf("mention"))
       .select(col("conv_id"), struct(col("mention"), col("lower"), col("freq"),
@@ -237,13 +242,14 @@ object Coref {
             rows.collect { case (_, h, _, _) if h != null => h.mention -> h }.toMap
           if (mini.isEmpty) Iterator.empty
           else {
+            val sketch = MentionDetect.FirstTokenSketch.of(mini)
             val vecs = rows.collect { case (_, _, e, v) if v != null => e -> v }.toMap
             val ev: String => Array[Float] = e => vecs.getOrElse(e, Array.empty[Float])
             val turnArr = ts.map { case (_, idx, text) =>
               Turn(convId, idx, null, text, null, null)
             }.toArray
-            if (coref) detectAndInheritOfConv(convId, turnArr, mini, ev, maxSeen = maxSeen).iterator
-            else turnArr.iterator.flatMap(t => MentionDetect.mentionsOfTurn(t, mini, ev))
+            if (coref) detectAndInheritOfConv(convId, turnArr, mini, ev, sketch, maxSeen).iterator
+            else turnArr.iterator.flatMap(t => MentionDetect.mentionsOfTurn(t, mini, ev, sketch))
           }
       }
   }

@@ -61,27 +61,59 @@ object MentionDetect {
     out.toArray
   }
 
-  /** Per-executor index: first token of a dictionary surface → bitmask of
-    * entry lengths starting with it (bit n-1 = an n-token entry exists).
-    * Lets `detect` skip the n-gram join+probe for the overwhelming
-    * majority of positions (one array read instead of a string build +
-    * hash probe per (position, size)). Cached per broadcast id. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, Map[String, Int]]()
+  /** Bounded first-token length sketch of a dictionary's keys: bucket
+    * h(lowercased first token) holds the OR of the token-count bits
+    * (bit n-1 = an n-token key) of the keys whose first token hashes there.
+    * A collision only adds bits, so pruning span enumeration with
+    * `lengths` is a SUPERSET filter: it skips the string build, cascade
+    * and probe at positions whose token starts no key, and never drops a
+    * mention. The size is fixed by the key count (next power of two
+    * >= 8 x keys, 2^6 to 2^22 bytes), so a REL-scale dictionary (SURVEY
+    * D3) broadcasts at most 4 MB however many distinct first tokens it
+    * has. [[FirstTokenSketch.of]] builds one from a Map; `add` + `merge`
+    * inside a distributed aggregate ([[dictSketches]]) fill the identical
+    * buckets from the same keys. */
+  final class FirstTokenSketch private[graft] (private[graft] val buckets: Array[Byte])
+      extends Serializable {
+    private def slot(token: String): Int =
+      scala.util.hashing.MurmurHash3.stringHash(token.toLowerCase) & (buckets.length - 1)
 
-  /** Masks are keyed by the LOWERCASED first token so a probe works for
-    * raw cased input; dictionary keys themselves may be cased. */
-  def firstTokenMasks(dict: Dict): Map[String, Int] =
-    dict.keysIterator.foldLeft(Map.empty[String, Int]) { (acc, surface) =>
-      val sp = surface.indexOf(' ')
-      val first = (if (sp < 0) surface else surface.substring(0, sp)).toLowerCase
-      val n = surface.count(_ == ' ') + 1
-      if (n > MaxNgram) acc
-      else acc.updated(first, acc.getOrElse(first, 0) | (1 << (n - 1)))
+    /** Record dictionary key `key`; keys over [[MaxNgram]] tokens are
+      * never probed, so they set nothing. */
+    def add(key: String): this.type = {
+      val n = 1 + key.count(_ == ' ')
+      if (n <= MaxNgram) {
+        val i = slot(key.takeWhile(_ != ' '))
+        buckets(i) = (buckets(i) | (1 << (n - 1))).toByte
+      }
+      this
     }
 
-  private[graft] def cachedMasks(dict: Dict, cacheKey: Long): Map[String, Int] =
-    indexCache.computeIfAbsent(cacheKey, _ => firstTokenMasks(dict))
+    /** Token counts (bit n-1) of the keys that may start with `token`. */
+    def lengths(token: String): Int = buckets(slot(token))
+
+    /** [[lengths]] at every position of a token array. */
+    def lengths(tokens: Array[String]): Array[Int] = tokens.map(t => lengths(t))
+
+    /** OR `other`, sized for the same key count, into this sketch. */
+    def merge(other: FirstTokenSketch): this.type = {
+      require(other.buckets.length == buckets.length, "sketches of different sizes")
+      for (i <- buckets.indices) buckets(i) = (buckets(i) | other.buckets(i)).toByte
+      this
+    }
+  }
+
+  object FirstTokenSketch {
+    /** An empty sketch sized for `keys` dictionary keys. */
+    def apply(keys: Long): FirstTokenSketch = {
+      var n = 1 << 6
+      while (n < (1 << 22) && n < 8 * keys) n <<= 1
+      new FirstTokenSketch(new Array[Byte](n))
+    }
+
+    def of(dict: Dict): FirstTokenSketch =
+      dict.keysIterator.foldLeft(FirstTokenSketch(dict.size.toLong))(_ add _)
+  }
 
   /** The candidate dictionary-key forms of a raw surface — the
     * preprocess_mention cascade's probe set: exact, recased phrase,
@@ -124,24 +156,29 @@ object MentionDetect {
   /** Detected span: token [begin, end) + dictionary entry. */
   final case class Span(begin: Int, end: Int, surface: String, entry: DictEntry)
 
+  /** Tokens [i, i + size) joined by single spaces: a candidate surface. */
+  private def span(tokens: Array[String], i: Int, size: Int): String =
+    if (size == 1) tokens(i)
+    else {
+      val sb = new java.lang.StringBuilder(tokens(i))
+      var k = i + 1
+      while (k < i + size) { sb.append(' ').append(tokens(k)); k += 1 }
+      sb.toString
+    }
+
   /** Greedy longest-match detection over a token array (cased or lower).
-    * Deterministic: longer n-grams win, then leftmost-first. `masks`
-    * (lowercased-first-token → length bitmask) prunes probes; pass None to
-    * build it ad hoc.
+    * Deterministic: longer n-grams win, then leftmost-first. `sketch`, the
+    * dictionary's [[FirstTokenSketch]], prunes probes to the spans whose
+    * first token may start a key of their token count.
     *
     * Each candidate surface is probed through the normalization cascade
     * (exact → recased → lower, most-frequent wins) — REL
     * preprocess_mention LIVE in the detection path, so cased input like
     * "TABLE HASH" or "Table hash" hits a lowercase dictionary entry. For
     * all-lowercase tokens the cascade degenerates to the plain probe. */
-  def detect(tokens: Array[String], dict: Dict,
-             masksOpt: Option[Map[String, Int]] = None): List[Span] = {
-    val masks = masksOpt.getOrElse(firstTokenMasks(dict))
+  def detect(tokens: Array[String], dict: Dict, sketch: FirstTokenSketch): List[Span] = {
     val n = tokens.length
-    // per-position length mask, one hash probe per token
-    val posMask = new Array[Int](n)
-    var p = 0
-    while (p < n) { posMask(p) = masks.getOrElse(tokens(p).toLowerCase, 0); p += 1 }
+    val posMask = sketch.lengths(tokens)
     val taken = new Array[Boolean](n)
     val out = scala.collection.mutable.ListBuffer.empty[Span]
     var size = math.min(MaxNgram, n)    // REL Cmns: longest n first
@@ -154,14 +191,7 @@ object MentionDetect {
           var j = i
           while (j < i + size) { if (taken(j)) free = false; j += 1 }
           if (free) {
-            val surface =
-              if (size == 1) tokens(i)
-              else {
-                val sb = new java.lang.StringBuilder(tokens(i))
-                var k = i + 1
-                while (k < i + size) { sb.append(' ').append(tokens(k)); k += 1 }
-                sb.toString
-              }
+            val surface = span(tokens, i, size)
             normalizeMention(surface, dict) match {
               case Some(normKey) =>
                 out += Span(i, i + size, surface, dict(normKey))
@@ -254,11 +284,11 @@ object MentionDetect {
     * context embed → resolve. Pure; maps a Turn to its Mentions. */
   def mentionsOfTurn(t: Turn, dict: Dict,
                      entityVec: String => Array[Float],
-                     masks: Option[Map[String, Int]] = None): Seq[Mention] = {
+                     sketch: FirstTokenSketch): Seq[Mention] = {
     // cased tokens feed detection (cascade-live); context embeddings use
     // the lowercased forms so vectors are case-stable
     val toks = tokenizeCased(if (t.text == null) "" else t.text)
-    detect(toks, dict, masks).map { s =>
+    detect(toks, dict, sketch).map { s =>
       val ctxToks = contextTokens(toks, s.begin, s.end).map(_.toLowerCase)
       val ctx = MinHash.meanEmbedding(ctxToks, CtxDim)
       val (resolved, score) = resolve(s.entry.candidates, ctx, entityVec)
@@ -268,90 +298,60 @@ object MentionDetect {
     }
   }
 
-  /** Distributed detection: typed flatMap with a broadcast dictionary.
+  /** Distributed detection: typed flatMap with a broadcast dictionary and
+    * its [[FirstTokenSketch]], built once on the driver and broadcast.
     * Map-only — zero shuffles (SURVEY.md §3 Stage A). */
   def run(turns: Dataset[Turn], dictBc: Broadcast[Dict],
           entityVecBc: Broadcast[Map[String, Array[Float]]]): Dataset[Mention] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    val bcId = dictBc.id
+    val sketchBc = spark.sparkContext.broadcast(FirstTokenSketch.of(dictBc.value))
     turns.mapPartitions { it =>
-      val dict = dictBc.value
-      val masks = Some(cachedMasks(dict, bcId))
+      val (dict, sketch) = (dictBc.value, sketchBc.value)
       val ev: String => Array[Float] =
         e => entityVecBc.value.getOrElse(e, Array.empty[Float])
-      it.flatMap(t => mentionsOfTurn(t, dict, ev, masks))
+      it.flatMap(t => mentionsOfTurn(t, dict, ev, sketch))
     }
-  }
-
-  /** Stage 1 of batch join-based detection (Coref.detectAndInheritJoined,
-    * map-only): every ≤[[MaxNgram]]-token span of every turn, probed
-    * through its [[cascadeForms]] against a broadcast Bloom of the
-    * dictionary keys — the distributed analogue of the broadcast path's
-    * first-token masks, for a REL-scale p(e|m) table (SURVEY D3) that
-    * cannot be collected into a driver Map; only survivors leave the
-    * mapper, deduped per turn, as slim (conv_id, turn_idx, form) rows. The
-    * probe reads `slimTurns`, the (conv_id, turn_idx, text) projection, so
-    * the scan never decodes `role`, `tool` or `ts`. `masksBc` (from
-    * [[dictSketches]]) prunes span enumeration the same way the broadcast
-    * path's [[firstTokenMasks]] does. */
-  private[operators] def bloomSurvivorForms(
-      slimTurns: DataFrame,
-      bloomBc: Broadcast[org.apache.spark.util.sketch.BloomFilter],
-      masksBc: Broadcast[Map[String, Int]]): DataFrame = {
-    val spark = slimTurns.sparkSession
-    import spark.implicits._
-    slimTurns.as[(String, Int, String)]
-      .flatMap { case (conv, turn, text) =>
-        probeForms(text, bloomBc.value, masksBc.value).map(f => (conv, turn, f))
-      }.toDF("conv_id", "turn_idx", "form")
   }
 
   /** The two broadcast sketches of a DISTRIBUTED dictionary that both
     * join-based paths (batch and streaming) probe, built in ONE pass
     * over its key column — one job, no shuffle: a Bloom filter over the
-    * keys (`expectedDictKeys` <= 0 ⇒ one exact count scan for sizing), and
-    * first-token length masks, the analogue of [[firstTokenMasks]]
-    * (lowercased first token → bitmask of entry token counts; bounded by
-    * DISTINCT FIRST TOKENS, a few MB at 10M keys). Both are SUPERSET
-    * filters: every true key's span passes both, so the survivor set after
-    * the dictionary join — hence the mention output — is unchanged; the
-    * win is skipping span builds + cascade + Bloom probes at positions
-    * whose token starts no key. */
+    * keys and the [[FirstTokenSketch]] of their first tokens, both sized
+    * by the key count (`expectedDictKeys` <= 0 ⇒ one exact count scan)
+    * and merged by OR across partitions, so neither grows with the
+    * dictionary's distinct first tokens. Both are SUPERSET filters: every
+    * true key's span passes both, so the survivor set after the
+    * dictionary join — hence the mention output — is unchanged; the win
+    * is skipping span builds + cascade + Bloom probes at positions whose
+    * token starts no key. */
   private[graft] def dictSketches(dictDf: Dataset[DictEntry],
                                   expectedDictKeys: Long,
                                   fpp: Double)
-      : (Broadcast[org.apache.spark.util.sketch.BloomFilter], Broadcast[Map[String, Int]]) = {
+      : (Broadcast[org.apache.spark.util.sketch.BloomFilter], Broadcast[FirstTokenSketch]) = {
     val spark = dictDf.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val nKeys = 1L + (if (expectedDictKeys > 0) expectedDictKeys
-                      else math.max(dictDf.count(), 1L))
-    val zero = (org.apache.spark.util.sketch.BloomFilter.create(nKeys, fpp),
-                scala.collection.mutable.HashMap.empty[String, Int])
-    val (bloom, masks) = dictDf.toDF().select(col("mention")).as[String].rdd
-      .aggregate(zero)({ case (acc @ (b, m), key) =>
-        if (key != null) {
-          b.putString(key)
-          val n = 1 + key.count(_ == ' ')
-          if (n <= MaxNgram) {
-            val first = key.takeWhile(_ != ' ').toLowerCase
-            m(first) = m.getOrElse(first, 0) | (1 << (n - 1))
-          }
-        }
+    val keys = if (expectedDictKeys > 0) expectedDictKeys else dictDf.count()
+    val zero = (org.apache.spark.util.sketch.BloomFilter.create(1L + math.max(keys, 1L), fpp),
+                FirstTokenSketch(keys))
+    val (bloom, sketch) = dictDf.toDF().select(col("mention")).as[String].rdd
+      .aggregate(zero)({ case (acc @ (b, s), key) =>
+        if (key != null) { b.putString(key); s.add(key) }
         acc
-      }, { case (acc @ (b1, m1), (b2, m2)) =>
+      }, { case (acc @ (b1, s1), (b2, s2)) =>
         b1.mergeInPlace(b2)
-        m2.foreach { case (k, v) => m1(k) = m1.getOrElse(k, 0) | v }
+        s1.merge(s2)
         acc
       })
-    (spark.sparkContext.broadcast(bloom), spark.sparkContext.broadcast(masks.toMap))
+    (spark.sparkContext.broadcast(bloom), spark.sparkContext.broadcast(sketch))
   }
 
   /** The deduped candidate dictionary-key forms of ONE turn: every
     * ≤[[MaxNgram]]-token span, through its [[cascadeForms]], filtered by
-    * the dictionary-key Bloom. The per-turn kernel shared by
-    * [[bloomSurvivorForms]] (batch) and StreamingLink.mentionsJoined
+    * the dictionary-key Bloom and pruned by the dictionary's
+    * [[FirstTokenSketch]]. The per-turn kernel shared by
+    * Coref.detectAndInheritJoined (batch) and StreamingLink.mentionsJoined
     * (stream-static join path). Both join the survivors to the dictionary
     * into per-conversation mini-dictionaries that feed the one
     * detect-and-inherit kernel, Coref.detectAndInheritFrom: every form
@@ -361,15 +361,10 @@ object MentionDetect {
   private[graft] def probeForms(
       text: String,
       bloom: org.apache.spark.util.sketch.BloomFilter,
-      masks: Map[String, Int]): Iterator[String] = {
+      sketch: FirstTokenSketch): Iterator[String] = {
     val toks = tokenizeCased(if (text == null) "" else text)
     val n = toks.length
-    // per-position length mask (one hash probe per token), the same
-    // pruning `detect` does: span (i, size) is enumerated only when some
-    // dictionary key of that token count starts with toks(i)
-    val posMask = new Array[Int](n)
-    var p = 0
-    while (p < n) { posMask(p) = masks.getOrElse(toks(p).toLowerCase, 0); p += 1 }
+    val posMask = sketch.lengths(toks)
     val forms = scala.collection.mutable.HashSet.empty[String]
     var size = 1
     while (size <= MaxNgram) {
@@ -377,15 +372,7 @@ object MentionDetect {
       var i = 0
       while (i + size <= n) {
         if ((posMask(i) & bit) != 0) {
-          val raw =
-            if (size == 1) toks(i)
-            else {
-              val sb = new java.lang.StringBuilder(toks(i))
-              var k = i + 1
-              while (k < i + size) { sb.append(' ').append(toks(k)); k += 1 }
-              sb.toString
-            }
-          cascadeForms(raw).foreach { f =>
+          cascadeForms(span(toks, i, size)).foreach { f =>
             if (bloom.mightContain(f)) forms += f
           }
         }

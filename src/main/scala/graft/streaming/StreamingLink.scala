@@ -43,7 +43,8 @@ object StreamingLink {
   def processBatch(convId: String, batch: Array[Turn], seen0: Seq[Coref.SeenMention],
                    dict: MentionDetect.Dict,
                    entityVec: String => Array[Float]): (Seq[Mention], Seq[Coref.SeenMention]) =
-    Coref.detectAndInheritFrom(convId, batch, dict, entityVec, None, MaxSeen, seen0)
+    Coref.detectAndInheritFrom(convId, batch, dict, entityVec,
+                               MentionDetect.FirstTokenSketch.of(dict), MaxSeen, seen0)
 
   /** Watermarked windowed aggregation over the mention stream: mentions
     * per (event-time window, surface form) — the SURVEY §2.10 "windowed
@@ -58,10 +59,11 @@ object StreamingLink {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
+    val sketchBc = spark.sparkContext.broadcast(MentionDetect.FirstTokenSketch.of(dictBc.value))
     val hits = turns.flatMap { t =>
-      val dict = dictBc.value
       MentionDetect.detect(
-        MentionDetect.tokenizeCased(if (t.text == null) "" else t.text), dict)
+        MentionDetect.tokenizeCased(if (t.text == null) "" else t.text),
+        dictBc.value, sketchBc.value)
         .map(s => (t.ts, s.entry.mention))
     }.toDF("ts", "norm")
     hits.withWatermark("ts", watermark)
@@ -75,17 +77,17 @@ object StreamingLink {
     * `timeout` defaults to ProcessingTimeTimeout so idle conversations'
     * state is dropped after [[IdleTimeoutMs]] (production setting; note
     * Spark keeps scheduling timeout-evaluation micro-batches while any
-    * timeout is armed). Tests pass NoTimeout for bounded queries. */
+    * timeout is armed). Tests pass NoTimeout for bounded queries. The
+    * dictionary's FirstTokenSketch is built on the driver and broadcast. */
   def mentions(turns: Dataset[Turn],
                dictBc: Broadcast[MentionDetect.Dict],
                entityVecBc: Broadcast[Map[String, Array[Float]]],
                timeout: GroupStateTimeout = GroupStateTimeout.ProcessingTimeTimeout)
       : Dataset[Mention] = {
-    val bcId = dictBc.id
+    val sketchBc = turns.sparkSession.sparkContext
+      .broadcast(MentionDetect.FirstTokenSketch.of(dictBc.value))
     linkGroups(turns, (t: Turn) => t.conv_id, entityVecBc, timeout) { (_, ts) =>
-      // first-token masks, as Coref.detectAndInherit: a superset filter
-      val dict = dictBc.value
-      (ts.toArray, dict, Some(MentionDetect.cachedMasks(dict, bcId)))
+      (ts.toArray, dictBc.value, sketchBc.value)
     }
   }
 
@@ -114,8 +116,8 @@ object StreamingLink {
     *     micro-batch, stateless, no watermark needed on the static side.
     *  3. groupByKey(conv_id) + flatMapGroupsWithState, the stateful
     *     stage of [[mentions]], with the micro-batch's per-conversation
-    *     MINI-dictionary rebuilt from the joined hits in place of the
-    *     broadcast Map. Exactness argument as in
+    *     MINI-dictionary (and its FirstTokenSketch) rebuilt from the
+    *     joined hits in place of the broadcast Map. Exactness argument as in
     *     Coref.detectAndInheritJoined: every form the kernel probes
     *     (detection spans AND the inheritance rejector's grams) is built
     *     from the batch's own turn tokens, so a real dictionary key was
@@ -126,8 +128,9 @@ object StreamingLink {
     *     broadcast Map — parity with [[mentions]] gated in
     *     StreamingLinkSpec across mid-conversation batch splits.
     *
-    * The Bloom is built once at query-definition time from the static
-    * dictionary (setup cost, not per-batch). Inheritance state is the
+    * The Bloom and the FirstTokenSketch (MentionDetect.dictSketches) are
+    * built once at query-definition time from the static dictionary
+    * (setup cost, not per-batch). Inheritance state is the
     * same capped [[ConvState]]; the mini-dict is NOT state — each
     * micro-batch brings its own. */
   def mentionsJoined(turns: Dataset[Turn], dictDf: Dataset[DictEntry],
@@ -138,12 +141,10 @@ object StreamingLink {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // first-token length masks prune the span enumeration exactly as in
-    // the batch joined path (superset filter — survivor set unchanged)
-    val (bloomBc, masksBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
+    val (bloomBc, sketchBc) = MentionDetect.dictSketches(dictDf, expectedDictKeys, bloomFpp)
     val probes = turns.flatMap { t =>
       val text = if (t.text == null) "" else t.text
-      val fs = MentionDetect.probeForms(text, bloomBc.value, masksBc.value).toSeq
+      val fs = MentionDetect.probeForms(text, bloomBc.value, sketchBc.value).toSeq
       ("" +: fs).map(f => (t.conv_id, t.turn_idx, text, f))
     }.toDF("conv_id", "turn_idx", "text", "form")
     val joined = probes
@@ -163,19 +164,19 @@ object StreamingLink {
         .filter(_.freq >= 0L)
         .map(r => r.mention -> DictEntry(r.mention, r.lower, r.freq, r.candidates))
         .toMap
-      (ts, mini, None)
+      (ts, mini, MentionDetect.FirstTokenSketch.of(mini))
     }
   }
 
   /** The stateful stage of both queries: group `rows` by conversation and
     * run Coref.detectAndInheritFrom over each micro-batch group, with the
     * conversation's inheritance sources as state. `group` builds one
-    * group's turns, dictionary and first-token masks from its rows — the
-    * only thing the two queries do differently. */
+    * group's turns, dictionary and that dictionary's first-token sketch
+    * from its rows — the only thing the two queries do differently. */
   private def linkGroups[R](rows: Dataset[R], convOf: R => String,
                             entityVecBc: Broadcast[Map[String, Array[Float]]],
                             timeout: GroupStateTimeout)(
-      group: (String, Iterator[R]) => (Array[Turn], MentionDetect.Dict, Option[Map[String, Int]]))
+      group: (String, Iterator[R]) => (Array[Turn], MentionDetect.Dict, MentionDetect.FirstTokenSketch))
       : Dataset[Mention] = {
     val spark = rows.sparkSession
     import spark.implicits._
@@ -187,12 +188,12 @@ object StreamingLink {
             state.remove()
             Iterator.empty
           } else {
-            val (ts, dict, masks) = group(convId, it)
+            val (ts, dict, sketch) = group(convId, it)
             val ev: String => Array[Float] =
               e => entityVecBc.value.getOrElse(e, Array.empty[Float])
             val seen0 = state.getOption.map(_.seen).getOrElse(Nil)
             val (ms, seen) =
-              Coref.detectAndInheritFrom(convId, ts, dict, ev, masks, MaxSeen, seen0)
+              Coref.detectAndInheritFrom(convId, ts, dict, ev, sketch, MaxSeen, seen0)
             state.update(ConvState(seen))
             if (armTimeout) state.setTimeoutDuration(IdleTimeoutMs)
             ms.iterator

@@ -2,6 +2,7 @@ package graft
 
 import graft.model._
 import graft.operators.{Coref, MentionDetect}
+import graft.operators.MentionDetect.FirstTokenSketch
 import java.sql.Timestamp
 
 class CorefSpec extends SparkSpec {
@@ -16,7 +17,7 @@ class CorefSpec extends SparkSpec {
   private val noVec: String => Array[Float] = _ => Array.empty[Float]
 
   private def detected(dict: MentionDetect.Dict, ts: Turn*): Array[Mention] =
-    ts.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec)).toArray
+    ts.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec, FirstTokenSketch.of(dict))).toArray
 
   test("a later uncovered token inherits the earlier mention's candidates") {
     val dict: MentionDetect.Dict = Map(entry("barack obama", "e_bo"))
@@ -88,7 +89,7 @@ class CorefSpec extends SparkSpec {
       turn("c3", 0, "nothing here"))
     val dictBc = spark.sparkContext.broadcast(dict)
     val vecsBc = spark.sparkContext.broadcast(Map.empty[String, Array[Float]])
-    val ms = turns.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec))
+    val ms = turns.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec, FirstTokenSketch.of(dict)))
     val got = Coref.inherited(turns.toDS(), ms.toDS(), dictBc, vecsBc)
       .collect().map(m => (m.conv_id, m.turn_idx, m.begin, m.norm)).toSet
     // c2 turn1: "merkel" inherits angela merkel; "obama" has no earlier

@@ -3,6 +3,7 @@ package graft
 import graft.functions.MinHash
 import graft.model._
 import graft.operators.MentionDetect
+import graft.operators.MentionDetect.FirstTokenSketch
 import org.scalatest.funsuite.AnyFunSuite
 
 class MentionDetectSpec extends AnyFunSuite {
@@ -21,14 +22,14 @@ class MentionDetectSpec extends AnyFunSuite {
 
   test("greedy longest-match picks the longest n-gram first") {
     val toks = "the new york times reported".split(" ")
-    val spans = MentionDetect.detect(toks, dict)
+    val spans = MentionDetect.detect(toks, dict, FirstTokenSketch.of(dict))
     assert(spans.map(s => (s.begin, s.end, s.surface)) ==
       List((1, 4, "new york times")))
   }
 
   test("greedy is leftmost-first among equal lengths and non-overlapping") {
     val toks = "acme corp sued new york acme".split(" ")
-    val spans = MentionDetect.detect(toks, dict)
+    val spans = MentionDetect.detect(toks, dict, FirstTokenSketch.of(dict))
     assert(spans.map(s => (s.begin, s.end, s.surface)) ==
       List((0, 2, "acme corp"), (3, 5, "new york"), (5, 6, "acme")))
   }
@@ -36,12 +37,13 @@ class MentionDetectSpec extends AnyFunSuite {
   test("shorter match fills the gap left by a longer one") {
     // "york times": "new york times" absent, "york" and "times" both match
     val toks = "york times".split(" ")
-    val spans = MentionDetect.detect(toks, dict)
+    val spans = MentionDetect.detect(toks, dict, FirstTokenSketch.of(dict))
     assert(spans.map(_.surface) == List("york", "times"))
   }
 
   test("no dictionary hit → no mentions") {
-    assert(MentionDetect.detect("completely unrelated words".split(" "), dict).isEmpty)
+    assert(MentionDetect.detect("completely unrelated words".split(" "), dict,
+                                FirstTokenSketch.of(dict)).isEmpty)
   }
 
   test("normalization cascade: exact > recased > lower, by freq") {
@@ -83,13 +85,13 @@ class MentionDetectSpec extends AnyFunSuite {
   test("detection is a pure per-row function: same result at any split") {
     val text = "the new york times and acme corp reported acme numbers"
     val toks = MentionDetect.tokenize(text)
-    val once = MentionDetect.detect(toks, dict)
-    (1 to 5).foreach(_ => assert(MentionDetect.detect(toks, dict) == once))
+    val once = MentionDetect.detect(toks, dict, FirstTokenSketch.of(dict))
+    (1 to 5).foreach(_ => assert(MentionDetect.detect(toks, dict, FirstTokenSketch.of(dict)) == once))
   }
 
   test("cascade is LIVE in detection: cased and ALL-CAPS surfaces hit a lower dict") {
     val toks = MentionDetect.tokenizeCased("New York and ACME CORP met Acme")
-    val spans = MentionDetect.detect(toks, dict)
+    val spans = MentionDetect.detect(toks, dict, FirstTokenSketch.of(dict))
     assert(spans.map(s => (s.begin, s.surface, s.entry.mention)) ==
       List((0, "New York", "new york"), (3, "ACME CORP", "acme corp"),
            (6, "Acme", "acme")))
@@ -100,10 +102,10 @@ class MentionDetectSpec extends AnyFunSuite {
       "Apple" -> entry("Apple", "e_company" -> 1.0).copy(freq = 1000),
       "apple" -> entry("apple", "e_fruit" -> 1.0).copy(freq = 10))
     // raw cased form present and more frequent → exact wins
-    val s1 = MentionDetect.detect(Array("Apple"), d)
+    val s1 = MentionDetect.detect(Array("Apple"), d, FirstTokenSketch.of(d))
     assert(s1.head.entry.mention == "Apple")
     // lowercase input: only the lower key matches (fast path)
-    val s2 = MentionDetect.detect(Array("apple"), d)
+    val s2 = MentionDetect.detect(Array("apple"), d, FirstTokenSketch.of(d))
     assert(s2.head.entry.mention == "apple")
   }
 
@@ -111,7 +113,8 @@ class MentionDetectSpec extends AnyFunSuite {
     assert(MentionDetect.tokenizeCased("Zürich café").toSeq == Seq("Zurich", "cafe"))
     assert(MentionDetect.tokenize("Zürich CAFÉ").toSeq == Seq("zurich", "cafe"))
     val d: MentionDetect.Dict = Map("zurich" -> entry("zurich", "e_zrh" -> 1.0))
-    val spans = MentionDetect.detect(MentionDetect.tokenizeCased("In Zürich today"), d)
+    val spans = MentionDetect.detect(MentionDetect.tokenizeCased("In Zürich today"), d,
+                                     FirstTokenSketch.of(d))
     assert(spans.map(_.surface) == List("Zurich"))
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.model.{Candidate, Mention, Turn}
 import graft.sources.TranscriptGen
-import org.apache.spark.graft.ListenerBus
+import org.apache.spark.graft.{ListenerBus, RddSite}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -171,6 +171,13 @@ class RetractionSpec extends SparkSpec {
       "from-scratch over the survivors re-links them via a new hub")
     val fast = Pipeline.runRetraction(Seq("c01").toDF("conv_id"), state, starCfg)
     assert(assign(fast.clusters) == scratch)
+    // one dirty side (the hub's block): the fresh edges are that side's
+    // scoring leaf itself, not a second checkpoint of it
+    val parts = Pipeline.retractionParts(Seq("c01").toDF("conv_id"), state, starCfg)
+    val leaf = CacheTracker.leafRdd(parts.freshEdges)
+    def caller(site: String) = site.linesIterator.find(_.startsWith("graft.")).getOrElse("")
+    assert(leaf.exists(r => caller(RddSite.of(r)).contains("scoreRegionPairs")),
+      leaf.map(RddSite.of).getOrElse("fresh edges read no leaf"))
   }
 
   test("spoke retraction of a star block re-derives ZERO fresh edges (clean-block carve)") {

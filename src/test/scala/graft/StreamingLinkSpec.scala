@@ -2,6 +2,7 @@ package graft
 
 import graft.model._
 import graft.operators.{Coref, MentionDetect}
+import graft.operators.MentionDetect.FirstTokenSketch
 import graft.sources.TranscriptGen
 import graft.streaming.StreamingLink
 import java.sql.Timestamp
@@ -34,7 +35,7 @@ class StreamingLinkSpec extends SparkSpec {
 
   /** Batch reference: detected ∪ inherited over the complete transcript. */
   private def batchReference(turns: Seq[Turn]): Set[(String, Int, Int, Int, String, String)] = {
-    val detected = turns.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec))
+    val detected = turns.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec, FirstTokenSketch.of(dict)))
     val inherited = turns.groupBy(_.conv_id).toSeq.flatMap { case (c, ts) =>
       Coref.inheritedOfConv(c, ts.toArray,
         detected.filter(_.conv_id == c).toArray, dict, noVec)
@@ -144,7 +145,7 @@ class StreamingLinkSpec extends SparkSpec {
     val (streamOut, seen) = StreamingLink.processBatch(
       "cbig", many.toArray, Seq.empty, dict, noVec)
     assert(seen.size == StreamingLink.MaxSeen) // the cap is engaged
-    val detected = many.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec))
+    val detected = many.flatMap(t => MentionDetect.mentionsOfTurn(t, dict, noVec, FirstTokenSketch.of(dict)))
     val batchCapped = detected ++ Coref.inheritedOfConv(
       "cbig", many.toArray, detected.toArray, dict, noVec,
       maxSeen = StreamingLink.MaxSeen)
@@ -169,9 +170,9 @@ class StreamingLinkSpec extends SparkSpec {
     val all = convs :+ long
     val batch = all.map { ts =>
       ts.head.conv_id -> Coref.detectAndInheritOfConv(ts.head.conv_id, ts.toArray,
-        gdict, ev, maxSeen = StreamingLink.MaxSeen).map(full).sortBy(_._1)
+        gdict, ev, FirstTokenSketch.of(gdict), StreamingLink.MaxSeen).map(full).sortBy(_._1)
     }.toMap
-    def detected(ts: Seq[Turn]) = ts.flatMap(t => MentionDetect.mentionsOfTurn(t, gdict, ev)).size
+    def detected(ts: Seq[Turn]) = ts.flatMap(t => MentionDetect.mentionsOfTurn(t, gdict, ev, FirstTokenSketch.of(gdict))).size
     assert(detected(long) > StreamingLink.MaxSeen, detected(long))
     assert(all.exists(ts => batch(ts.head.conv_id).size > detected(ts)), "nothing inherited")
     assert(batch.values.flatten.exists(_._8 != ""), "nothing resolved")
